@@ -63,8 +63,10 @@ class Sample:
 
 
 def closed_loop(n_clients: int, op: Callable[[int, int], object],
-                seconds: float, clock: Callable[[], float] = time.perf_counter):
-    """Run `n_clients` closed-loop clients until `seconds` have passed.
+                seconds: float, clock: Callable[[], float] = time.perf_counter,
+                max_ops: int | None = None):
+    """Run `n_clients` closed-loop clients until `seconds` have passed (or
+    `max_ops` calls have been issued).
 
     Each client calls op(client, seq) and issues its next call only after
     the previous one returned; `seq` numbers calls across clients. The
@@ -83,6 +85,8 @@ def closed_loop(n_clients: int, op: Callable[[int, int], object],
             with lock:
                 i = seq[0]
                 seq[0] += 1
+            if max_ops is not None and i >= max_ops:
+                return
             s = Sample(c, i, clock(), 0.0)
             try:
                 s.result = op(c, i)
@@ -120,43 +124,65 @@ def _children_map() -> dict[int, list[int]]:
     return kids
 
 
-def descendants(pid: int) -> list[int]:
+def _rss_bytes(pid: int) -> int:
+    try:
+        with open(f"/proc/{pid}/statm") as f:
+            return int(f.read().split()[1]) * os.sysconf("SC_PAGE_SIZE")
+    except OSError:
+        return 0
+
+
+def _forks_python_workers(pid: int) -> bool:
+    """Is pid Spark's Python daemon, whose children are the workers?"""
+    try:
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            return b"pyspark.daemon" in f.read()
+    except OSError:
+        return False
+
+
+def tree_rss_bytes(pid: int, worker_cap: int | None = None) -> tuple[int, int]:
+    """(summed resident set, Python worker count) of a process and all its
+    descendants: the benchmark process, the JVM, Spark's Python daemon and
+    its workers. Pages shared between forked processes count once per
+    process. With worker_cap, only the worker_cap largest workers count:
+    Spark forks a worker beyond one per task slot when a task starts before
+    the previous one has handed its worker back, which depends on timing."""
     kids = _children_map()
-    out, todo = [], [pid]
+    total, workers = 0, []
+    todo = [(pid, False)]
     while todo:
-        p = todo.pop()
-        out.append(p)
-        todo.extend(kids.get(p, []))
-    return out
-
-
-def tree_rss_bytes(pid: int) -> int:
-    """Summed resident set of a process and all its descendants (the
-    benchmark process, the JVM and its Python workers; pages shared
-    between forked workers count once per process)."""
-    page = os.sysconf("SC_PAGE_SIZE")
-    total = 0
-    for p in descendants(pid):
-        try:
-            with open(f"/proc/{p}/statm") as f:
-                total += int(f.read().split()[1]) * page
-        except OSError:
-            continue
-    return total
+        p, is_worker = todo.pop()
+        rss = _rss_bytes(p)
+        if is_worker:
+            workers.append(rss)
+        else:
+            total += rss
+        daemon = not is_worker and _forks_python_workers(p)
+        todo.extend((c, daemon) for c in kids.get(p, []))
+    workers.sort(reverse=True)
+    return total + sum(workers[:worker_cap]), len(workers)
 
 
 class RssSampler:
-    """Background sampler of tree_rss_bytes(own pid); keeps the peak."""
+    """Background sampler of tree_rss_bytes(own pid, worker_cap); keeps the
+    peak and the largest Python worker count seen."""
 
-    def __init__(self, interval_s: float = 0.25):
+    def __init__(self, worker_cap: int | None = None, interval_s: float = 0.25):
+        self.worker_cap = worker_cap
         self.interval_s = interval_s
-        self.peak = 0
+        self.peak = self.peak_workers = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
+    def _sample(self) -> None:
+        rss, workers = tree_rss_bytes(os.getpid(), self.worker_cap)
+        self.peak = max(self.peak, rss)
+        self.peak_workers = max(self.peak_workers, workers)
+
     def _loop(self) -> None:
         while not self._stop.is_set():
-            self.peak = max(self.peak, tree_rss_bytes(os.getpid()))
+            self._sample()
             self._stop.wait(self.interval_s)
 
     def start(self) -> "RssSampler":
@@ -164,9 +190,12 @@ class RssSampler:
         return self
 
     def stop(self) -> int:
-        self._stop.set()
-        self._thread.join(timeout=5)
-        self.peak = max(self.peak, tree_rss_bytes(os.getpid()))
+        """Stop sampling (once; later calls change nothing) and return the
+        peak."""
+        if not self._stop.is_set():
+            self._stop.set()
+            self._thread.join(timeout=5)
+            self._sample()
         return self.peak
 
 

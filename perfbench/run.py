@@ -1,6 +1,6 @@
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload search_concurrent --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload search_concurrent --seed 1 --seconds 15 --trace 0
 
 Run from the root of a checkout. The last line of standard output is one
 JSON object {"correct", "attempted", "failed", "metrics"}: with --trace 0
@@ -15,11 +15,13 @@ from __future__ import annotations
 
 import argparse
 import json
+import multiprocessing
 import os
 import shutil
 import sys
 import tempfile
 import time
+from concurrent.futures import ProcessPoolExecutor
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT_DIR = os.path.join(ROOT, "perfbench", "out")
@@ -27,8 +29,7 @@ OUT_DIR = os.path.join(ROOT, "perfbench", "out")
 
 def parse_args(argv=None) -> argparse.Namespace:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    p.add_argument("--workload", required=True,
-                   choices=["build", "search_concurrent", "corpus_ops"])
+    p.add_argument("--workload", required=True, choices=["batch", "search_concurrent"])
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=[0, 1], default=0)
@@ -44,6 +45,18 @@ def e2e_metrics(outcome, setup_s: float, peak_rss: int, lat: dict) -> dict[str, 
     }
 
 
+def prepare(workload: str, seed: int, out_dir: str):
+    """Write the run's inputs and compute the outputs they must give.
+    Returns (inputs, generation seconds, expected outputs)."""
+    import workloads
+    from inputs import write_inputs
+
+    t0 = time.perf_counter()
+    inputs = write_inputs(workload, seed, out_dir)
+    gen_s = time.perf_counter() - t0
+    return inputs, gen_s, workloads.expected(workload, inputs)
+
+
 def main(argv=None) -> int:
     args = parse_args(argv)
     spec_path = os.path.join(ROOT, "BENCHMARK.json")
@@ -56,8 +69,8 @@ def main(argv=None) -> int:
     sys.path.insert(0, ROOT)
 
     from accounting import HostTelemetry, RssSampler, failure_share, latency_summary
-    from inputs import write_inputs
     from tracing import NullTracer, Tracer, self_time_table
+    import workloads
 
     work = os.path.join(ROOT, ".bench_work", f"{args.workload}-{os.getpid()}")
     tmp = os.path.join(work, "tmp")
@@ -67,31 +80,35 @@ def main(argv=None) -> int:
     os.environ["TMPDIR"] = tmp
     tempfile.tempdir = None
     host = HostTelemetry()
-    rss = RssSampler().start()
     tracer = Tracer() if args.trace else NullTracer()
-    spark = None
+    spark = rss = None
     try:
-        t0 = time.perf_counter()
-        import workloads
-
+        # inputs and their expected outputs come from a child process, so
+        # the frames they need never count in this process's memory. Forking
+        # is safe here and in the child's own pools: no thread has started
+        # yet (no Spark session, no sampler).
         workloads.log("inputs")
-        inputs = write_inputs(args.workload, args.seed, os.path.join(work, "inputs"))
+        with ProcessPoolExecutor(1, mp_context=multiprocessing.get_context("fork")) as ex:
+            inputs, gen_s, want = ex.submit(
+                prepare, args.workload, args.seed, os.path.join(work, "inputs")).result()
+        rss = RssSampler(worker_cap=workloads.CORES).start()
         workloads.log("session")
+        t0 = time.perf_counter()
         spark = workloads.start_session(work)
         workloads.log("workload")
-        ctx = workloads.Context(spark, inputs, work, args.seconds, tracer,
-                                setup_s=time.perf_counter() - t0)
+        ctx = workloads.Context(spark, inputs, want, work, args.seconds, tracer, rss,
+                                setup_s=gen_s + time.perf_counter() - t0)
         outcome = workloads.WORKLOADS[args.workload](ctx)
-        layers = dict.fromkeys(workloads.LAYERS, 0.0)
-        layers.update(outcome.layers)
     finally:
         if spark is not None:
             workloads.log("stop")
             workloads.stop_session(spark)
             workloads.log("stopped")
-        peak = rss.stop()
+        peak = rss.stop() if rss is not None else 0
         shutil.rmtree(work, ignore_errors=True)
 
+    layers = dict.fromkeys(workloads.LAYERS, 0.0)
+    layers.update(outcome.layers, **{"spark.python_workers_peak": float(rss.peak_workers)})
     attempted = len(outcome.samples)
     lat = latency_summary([s.seconds for s in outcome.samples])
     e2e = e2e_metrics(outcome, ctx.setup_s, peak, lat)

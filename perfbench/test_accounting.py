@@ -6,14 +6,18 @@ failure share, closed-loop client timing and span self time. No Spark.
 
 from __future__ import annotations
 
+import math
 import os
+import signal
+import subprocess
+import sys
 import threading
 import time
 
 import pytest
 
 from accounting import (
-    HostTelemetry, closed_loop, failure_share, latency_summary, percentile,
+    HostTelemetry, RssSampler, closed_loop, failure_share, latency_summary, percentile,
     supported_percentile, tree_rss_bytes)
 from tracing import Tracer, self_time_table, self_times
 
@@ -86,6 +90,11 @@ def test_closed_loop_finishes_the_call_in_flight_at_the_deadline():
     assert len(samples) == 1 and window >= 0.15
 
 
+def test_closed_loop_stops_issuing_at_max_ops():
+    samples, _ = closed_loop(3, lambda c, i: time.sleep(0.01), math.inf, max_ops=7)
+    assert sorted(s.seq for s in samples) == list(range(7))
+
+
 def test_self_time_subtracts_the_union_of_children():
     tr = Tracer()
     root = tr.record("op", 0.0, 10.0, request=1)
@@ -112,4 +121,32 @@ def test_host_telemetry_and_rss():
     tel = HostTelemetry().finish()
     assert tel["nproc"] == len(os.sched_getaffinity(0))
     assert 0.0 <= tel["steal_pct"] <= 100.0 and len(tel["loadavg"]) == 3
-    assert tree_rss_bytes(os.getpid()) > 0
+    rss, workers = tree_rss_bytes(os.getpid())
+    assert rss > 0 and workers == 0
+    sampler = RssSampler(interval_s=0.01).start()
+    peak = sampler.stop()
+    ballast = bytearray(64 * 2**20)  # touched after the stop: not counted
+    assert peak > 0 and sampler.stop() == peak and ballast
+
+
+def test_rss_counts_at_most_worker_cap_python_workers():
+    # a stand-in for Spark's Python daemon: a process whose command line
+    # names pyspark.daemon and that forks three idle workers
+    script = ("import os, time\n"
+              "for _ in range(3):\n"
+              "    if os.fork() == 0:\n"
+              "        time.sleep(30)\n"
+              "        os._exit(0)\n"
+              "time.sleep(30)\n")
+    proc = subprocess.Popen([sys.executable, "-c", script, "pyspark.daemon"],
+                            start_new_session=True)
+    try:
+        deadline = time.monotonic() + 10
+        while tree_rss_bytes(os.getpid())[1] < 3 and time.monotonic() < deadline:
+            time.sleep(0.05)
+        full, workers = tree_rss_bytes(os.getpid())
+        capped, _ = tree_rss_bytes(os.getpid(), worker_cap=1)
+        assert workers == 3 and 0 < capped < full
+    finally:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.wait(timeout=10)

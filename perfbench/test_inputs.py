@@ -11,16 +11,18 @@ import os
 import pandas as pd
 import pytest
 
-from inputs import corpus_frame, planted_corpus, query_pool, write_inputs
+from inputs import (
+    QUERY_POOL, corpus_frame, planted_corpus, query_pool, write_inputs)
 
-WORKLOADS = ["build", "search_concurrent", "corpus_ops"]
+WORKLOADS = ["batch", "search_concurrent"]
 
 
 def _files(d: str) -> dict[str, bytes]:
     out = {}
-    for name in sorted(os.listdir(d)):
-        with open(os.path.join(d, name), "rb") as f:
-            out[name] = f.read()
+    for dp, _, names in os.walk(d):
+        for name in names:
+            with open(os.path.join(dp, name), "rb") as f:
+                out[os.path.relpath(os.path.join(dp, name), d)] = f.read()
     return out
 
 
@@ -62,3 +64,27 @@ def test_disjoint_delta_and_query_mix():
     assert any(w.startswith("zzabsent") for w in words)
     assert words & {"the", "a", "of", "and", "to", "in", "is", "it", "that", "for"}
     assert isinstance(base, pd.DataFrame)
+
+
+def test_forked_generation_matches_serial():
+    # 2,000 documents and more are generated in forked slices
+    whole = corpus_frame(4, 2_500)
+    parts = pd.concat([corpus_frame(4, 1_000), corpus_frame(4, 1_500, first_id=1_000)])
+    assert whole.equals(parts.drop_duplicates("text").reset_index(drop=True))
+
+
+def test_query_pool_has_the_same_mix_for_every_seed():
+    def mix(seed):
+        pool = query_pool(seed)
+        return sorted(len(q.split()) for q in pool[QUERY_POOL // 2:])
+    assert mix(1) == mix(2) == mix(3)
+    assert query_pool(1) != query_pool(2)
+
+
+def test_batch_inputs_are_disjoint(tmp_path):
+    inp = write_inputs("batch", 2, str(tmp_path))
+    ids = set(pd.read_parquet(inp.corpus)["doc_id"])
+    delta = set(pd.read_parquet(inp.delta)["doc_id"])
+    assert ids.isdisjoint(delta)
+    assert (ids | delta).isdisjoint(pd.read_parquet(inp.planted)["doc_id"])
+    assert len(inp.probes) == 2 and set(inp.probes) <= set(inp.queries)

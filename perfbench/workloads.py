@@ -1,10 +1,11 @@
 """The benchmark workloads, driven only through the engine's public calls.
 
-Each workload has a set-up (timed into setup_s), then a closed loop of
-operations for the run's seconds, then an untimed check of every
-operation's output against an exact reference. With tracing on, spans
-around each public call and Spark's own scheduler counters give the
-per-layer metrics in LAYERS.
+Each workload has a set-up (timed into setup_s), then its timed
+operations (batch: exactly one; search: a closed loop for the run's
+seconds), then an untimed check of every operation's output against an
+exact reference computed before the run.
+With tracing on, spans around each public call and Spark's own scheduler
+counters give the per-layer metrics in LAYERS.
 """
 
 from __future__ import annotations
@@ -12,6 +13,8 @@ from __future__ import annotations
 import contextlib
 import http.client
 import json
+import math
+import multiprocessing
 import os
 import sys
 import time
@@ -36,7 +39,7 @@ SCORE_TOL = 1e-9
 LAYERS = (
     "spark.jobs_per_op", "spark.stages_per_op", "spark.tasks_per_op",
     "spark.executor_cpu_ms_per_op", "spark.shuffle_write_bytes_per_op",
-    "spark.gc_ms_per_op",
+    "spark.gc_ms_per_op", "spark.python_workers_peak",
     "analyzer.tokens_per_s",
     "build.tokens_ms", "build.doc_map_ms", "build.segments_ms",
     "build.terms_ms", "build.postings", "build.segment_bytes",
@@ -58,9 +61,11 @@ LAYERS = (
 class Context:
     spark: object
     inputs: Inputs
+    want: dict            # expected outputs, from `expected`
     work_dir: str
     seconds: float
     tracer: object
+    rss: object           # RssSampler; stopped when the timed window ends
     setup_s: float = 0.0
 
     def __post_init__(self):
@@ -202,12 +207,60 @@ def _mean_span_ms(spans: list[dict], name: str, per: int | None = None) -> float
     return 1000.0 * sum(d) / (per or len(d) or 1)
 
 
-# -- correctness helpers ----------------------------------------------------
+# -- correctness ------------------------------------------------------------
 
 def _expected_topk(oracle, queries) -> dict[str, list[tuple[int, float]]]:
     return {q: [(int(d), float(s)) for d, s in
                 oracle.topk(q, K, mode="any").itertuples(index=False)]
             for q in queries}
+
+
+def _topk_reference(corpora: list[str], queries: list[str]) -> dict:
+    from wise_spark.oracle.bm25_pandas import PandasBM25Oracle
+
+    frame = pd.concat([pd.read_parquet(p) for p in corpora], ignore_index=True)
+    return _expected_topk(PandasBM25Oracle(frame), queries)
+
+
+def _planted_reference(path: str, kind: str, queries: list[str]):
+    from wise_spark.oracle.bm25_pandas import PandasBM25Oracle
+
+    planted = pd.read_parquet(path)
+    if kind == "scores":
+        oracle = PandasBM25Oracle(planted)
+        return {(qi, int(d)): float(s) for qi, q in enumerate(queries)
+                for d, s in oracle.score_all(q, mode="any").itertuples(index=False)}
+    pairs = getattr(reference, f"{kind}_pairs")
+    return pairs(planted["doc_id"].tolist(), planted["text"].tolist())
+
+
+def expected(workload: str, inp: Inputs) -> dict:
+    """Every output the workload's operations must produce, from
+    `PandasBM25Oracle` and the all-pairs references, computed in forked
+    processes. Runs before the Spark session starts (so no thread exists
+    and forking is safe), in a child process, so its frames stay out of
+    the measured memory."""
+    if workload == "search_concurrent":
+        return {"topk": _topk_reference([inp.corpus], inp.queries)}
+    jobs = {
+        "probes_built": (_topk_reference, [inp.corpus], inp.probes),
+        "probes_extended": (_topk_reference, [inp.corpus, inp.delta], inp.probes),
+        **{kind: (_planted_reference, inp.planted, kind, inp.queries)
+           for kind in ("minhash", "simhash", "ngram_jaccard", "scores")},
+    }
+    pool = multiprocessing.get_context("fork").Pool(CORES)
+    try:
+        results = pool.starmap(_call, jobs.values())
+    finally:
+        pool.close()
+        pool.join()
+    want = dict(zip(jobs, results))
+    want["exact"] = {(a, 2) for a, _ in inp.exact_groups}
+    return want
+
+
+def _call(fn, *args):
+    return fn(*args)
 
 
 def _hits_match(got: list[tuple[int, float]], want: list[tuple[int, float]]) -> bool:
@@ -303,67 +356,111 @@ def _lineage_ms(index_dir: str) -> dict[str, float]:
 
 # -- workloads --------------------------------------------------------------
 
-def build(ctx: Context) -> Outcome:
-    """Full build_index of the corpus, then extend_index with the delta."""
-    from wise_spark.index import FtsIndex, build_index, extend_index
-    from wise_spark.oracle.bm25_pandas import PandasBM25Oracle
+DEDUP_SPANS = (("exact", "dedup.exact"), ("minhash", "dedup.minhash_lsh"),
+               ("simhash", "dedup.simhash_pairs"), ("ngram", "dedup.ngram_jaccard"))
+
+
+def _batch_op(ctx: Context, tag) -> dict:
+    """build_index, extend_index, the dedup operators and the naive scorer,
+    each over the run's input files."""
+    from wise_spark.index import build_index, extend_index
+    from wise_spark.pipeline.dedup import (
+        exact_duplicates, minhash_lsh_pairs, ngram_jaccard_pairs, simhash_pairs)
+    from wise_spark.query.naive import TokenizedCorpus, score_queries
 
     spark, inp, tr = ctx.spark, ctx.inputs, ctx.tracer
-    base = pd.read_parquet(inp.corpus)
-    delta = pd.read_parquet(inp.delta)
-    want_base = _expected_topk(PandasBM25Oracle(base), inp.queries)
-    want_ext = _expected_topk(
-        PandasBM25Oracle(pd.concat([base, delta], ignore_index=True)), inp.queries)
+    out = {"built": os.path.join(ctx.work_dir, f"index-{tag}"),
+           "extended": os.path.join(ctx.work_dir, f"extended-{tag}")}
+    dedup = {"exact": exact_duplicates, "minhash": minhash_lsh_pairs,
+             "simhash": simhash_pairs,
+             "ngram": lambda d: ngram_jaccard_pairs(d, max_shingle_df=None)}
+    with ctx.counters.group(f"op-{tag}"), tr.span("op", request=tag):
+        t0 = time.perf_counter()
+        with tr.span("index.build"):
+            meta = build_index(spark.read.parquet(inp.corpus), out["built"],
+                               url_col="url")
+        t1 = time.perf_counter()
+        with tr.span("index.merge.extend"):
+            extend_index(spark, out["built"], spark.read.parquet(inp.delta),
+                         out["extended"], url_col="url")
+        t2 = time.perf_counter()
+        docs = spark.read.parquet(inp.planted)
+        for key, span in DEDUP_SPANS:
+            with tr.span(span):
+                out[key] = dedup[key](docs).collect()
+        with tr.span("naive.corpus_build"):
+            corpus = TokenizedCorpus.build(docs, cache=True)
+        with tr.span("naive.score"):
+            out["scores"] = score_queries(
+                corpus, list(enumerate(inp.queries)), mode="any").collect()
+        corpus.unpersist()
+        t3 = time.perf_counter()
+    out.update(avgdl=meta.avgdl, build_s=t1 - t0, extend_s=t2 - t1, corpus_ops_s=t3 - t2)
+    return out
 
-    def op(_client: int, i: int) -> dict:
-        built = os.path.join(ctx.work_dir, f"index-{i}")
-        extended = os.path.join(ctx.work_dir, f"extended-{i}")
-        with ctx.counters.group(f"op-{i}"), tr.span("op", request=i):
-            t0 = time.perf_counter()
-            with tr.span("index.build"):
-                meta = build_index(spark.read.parquet(inp.corpus), built,
-                                   url_col="url")
-            t1 = time.perf_counter()
-            with tr.span("index.merge.extend"):
-                extend_index(spark, built, spark.read.parquet(inp.delta),
-                             extended, url_col="url")
-            t2 = time.perf_counter()
-        return {"built": built, "extended": extended, "avgdl": meta.avgdl,
-                "build_s": t1 - t0, "extend_s": t2 - t1}
 
-    samples, window = closed_loop(1, op, ctx.seconds)
-    done = [s.result for s in samples if not s.error]
+def batch(ctx: Context) -> Outcome:
+    """The batch jobs as one operation in a fresh session, as a batch run
+    pays them: build_index, extend_index with a delta, the dedup operators
+    and the naive scorer. Exactly one operation is timed, however long it
+    takes: a second one would run on a warm JVM and measure something else."""
+    from wise_spark.index import FtsIndex
 
-    def probes_ok(index_dir: str, want: dict) -> bool:
+    spark, inp, tr, want = ctx.spark, ctx.inputs, ctx.tracer, ctx.want
+    log("batch: op")
+    samples, window = closed_loop(1, lambda _c, i: _batch_op(ctx, i), math.inf, max_ops=1)
+    ctx.rss.stop()
+    log("batch: check")
+
+    def probes_ok(index_dir: str, expect: dict) -> bool:
         index = FtsIndex.load(spark, index_dir)
         return all(
             _hits_match([(r["doc_id"], r["score"]) for r in
                          index.topk(q, k=K, mode="any").collect()], w)
-            for q, w in want.items())
+            for q, w in expect.items())
 
-    failed = sum(s.error for s in samples)
-    failed += sum(not (probes_ok(r["built"], want_base)
-                       and probes_ok(r["extended"], want_ext)) for r in done)
-    out = Outcome(samples, window, failed)
-    if done:
-        size_ratio = _dir_parquet_bytes(done[0]["built"]) / inp.corpus_bytes
-        out.named = {
-            "build_docs_per_s": (inp.n_docs / np.median([r["build_s"] for r in done]), "docs/s"),
-            "update_s": (float(np.median([r["extend_s"] for r in done])), "s"),
-            "index_bytes_per_text_byte": (size_ratio, "ratio"),
-        }
-    if tr.enabled and done:
+    def correct(got: dict) -> bool:
+        scores = {(r["query_id"], r["doc_id"]): r["score"] for r in got["scores"]}
+        ngram = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in got["ngram"]}
+        return (
+            probes_ok(got["built"], want["probes_built"])
+            and probes_ok(got["extended"], want["probes_extended"])
+            and {(r["keeper_doc_id"], r["n_docs"]) for r in got["exact"]} == want["exact"]
+            and {(r["doc_a"], r["doc_b"]) for r in got["minhash"]} == want["minhash"]
+            and {(r["doc_a"], r["doc_b"], r["hamming"]) for r in got["simhash"]}
+            == want["simhash"]
+            and ngram.keys() == want["ngram_jaccard"].keys()
+            and all(abs(ngram[p] - j) <= 1e-6 for p, j in want["ngram_jaccard"].items())
+            and scores.keys() == want["scores"].keys()
+            and all(abs(scores[p] - s) <= SCORE_TOL for p, s in want["scores"].items())
+        )
+
+    (op,) = samples
+    out = Outcome(samples, window, int(op.error or not correct(op.result)))
+    if op.error:
+        return out
+    r = op.result
+    size_ratio = _dir_parquet_bytes(r["built"]) / inp.corpus_bytes
+    out.named = {
+        "build_docs_per_s": (inp.n_docs / r["build_s"], "docs/s"),
+        "update_s": (r["extend_s"], "s"),
+        "index_bytes_per_text_byte": (size_ratio, "ratio"),
+        "corpus_ops_s": (r["corpus_ops_s"], "s"),
+    }
+    if tr.enabled:
         out.layers["build.index_bytes_per_text_byte"] = size_ratio
-        lineage = [_lineage_ms(r["built"]) for r in done]
-        for k in lineage[0]:
-            out.layers[k] = float(np.mean([x[k] for x in lineage]))
+        out.layers.update(_lineage_ms(r["built"]))
         out.layers["merge.extend_ms"] = _mean_span_ms(tr.spans, "index.merge.extend")
-        out.layers["analyzer.tokens_per_s"] = _analyzer_tokens_per_s(base["text"])
-        out.layers.update(_codec_rates(done[0]["built"], done[0]["avgdl"]))
-        jobs = [ctx.counters.jobs(f"op-{s.seq}") for s in samples]
-        out.layers.update(_counter_layers(jobs))
-        for s, j in zip(samples, jobs):
-            _attach_jobs(tr, s.seq, j)
+        out.layers["analyzer.tokens_per_s"] = _analyzer_tokens_per_s(
+            pd.read_parquet(inp.corpus, columns=["text"])["text"])
+        out.layers.update(_codec_rates(r["built"], r["avgdl"]))
+        for _, span in DEDUP_SPANS + (("", "naive.corpus_build"), ("", "naive.score")):
+            out.layers[f"{span}_ms"] = _mean_span_ms(tr.spans, span)
+        for key, span in DEDUP_SPANS[1:]:
+            out.layers[f"{span}_rows"] = float(len(r[key]))
+        jobs = ctx.counters.jobs(f"op-{op.seq}")
+        out.layers.update(_counter_layers([jobs]))
+        _attach_jobs(tr, op.seq, jobs)
     return out
 
 
@@ -371,21 +468,22 @@ def search_concurrent(ctx: Context) -> Outcome:
     """CLIENTS closed-loop HTTP /search clients over a cached index; their
     requests queue for the one Spark scheduler and JVM."""
     from wise_spark.index import FtsIndex, build_index
-    from wise_spark.oracle.bm25_pandas import PandasBM25Oracle
     from wise_spark.serve import SearchServer, spark_search_fn
 
     spark, inp, tr = ctx.spark, ctx.inputs, ctx.tracer
-    want = _expected_topk(PandasBM25Oracle(pd.read_parquet(inp.corpus)), inp.queries)
+    want = ctx.want["topk"]
 
+    # set-up: build the index and load it pinned (the serving cache
+    # materializes on the warm-up pass's first request)
+    log("search: build_index")
     t_setup = time.perf_counter()
     index_dir = os.path.join(ctx.work_dir, "index")
-    log("search: build_index")
     build_index(spark.read.parquet(inp.corpus), index_dir, url_col="url")
-    log("search: FtsIndex.load")
     t0 = time.perf_counter()
     index = FtsIndex.load(spark, index_dir, cache=True)
     load_ms = 1000.0 * (time.perf_counter() - t0)
     search_fn = spark_search_fn(index)
+
     served: list[dict] = []
     if tr.enabled:
         # spans around the index calls spark_search_fn makes; instance
@@ -420,15 +518,15 @@ def search_concurrent(ctx: Context) -> Outcome:
         return [(h["doc_id"], h["score"]) for h in hits]
 
     try:
-        # the first request materializes the serving cache; then one round
-        # of all clients at once, the load shape of the window
-        log("search: warm-up")
-        get(0, inp.queries[-1])
-        closed_loop(CLIENTS, lambda c, i: get(c, inp.queries[-1 - i]), 0.5)
-        log("search: window")
+        # warm-up: one full pass of the pool by all clients at once, the
+        # load shape of the window
+        log("search: warm-up pass")
+        closed_loop(CLIENTS, lambda c, i: get(c, inp.queries[i]), math.inf,
+                    max_ops=len(inp.queries))
         ctx.setup_s += time.perf_counter() - t_setup
         served.clear()
         tr.spans.clear()
+        log("search: window")
 
         def op(c: int, i: int):
             q = inp.queries[inp.stream[i % len(inp.stream)]]
@@ -436,6 +534,7 @@ def search_concurrent(ctx: Context) -> Outcome:
                 return q, get(c, q)
 
         samples, window = closed_loop(CLIENTS, op, ctx.seconds)
+        ctx.rss.stop()
     finally:
         for conn in conns:
             conn.close()
@@ -505,86 +604,7 @@ def _search_layers(ctx, index, served: list[dict], n: int, load_ms: float) -> di
     return layers
 
 
-def corpus_ops(ctx: Context) -> Outcome:
-    """Dedup operators and the naive scorer over a corpus with planted
-    exact and one-token-edited copies."""
-    from wise_spark.oracle.bm25_pandas import PandasBM25Oracle
-    from wise_spark.pipeline.dedup import (
-        exact_duplicates, minhash_lsh_pairs, ngram_jaccard_pairs, simhash_pairs)
-    from wise_spark.query.naive import TokenizedCorpus, score_queries
-
-    spark, inp, tr = ctx.spark, ctx.inputs, ctx.tracer
-    frame = pd.read_parquet(inp.corpus)
-    ids, texts = frame["doc_id"].tolist(), frame["text"].tolist()
-    oracle = PandasBM25Oracle(frame)
-    want = {
-        "exact": {(a, 2) for a, _ in inp.exact_groups},
-        "minhash": reference.minhash_pairs(ids, texts),
-        "simhash": reference.simhash_pairs(ids, texts),
-        "ngram": reference.ngram_jaccard_pairs(ids, texts),
-        "scores": {(qi, int(d)): float(s) for qi, q in enumerate(inp.queries)
-                   for d, s in oracle.score_all(q, mode="any").itertuples(index=False)},
-    }
-
-    def op(_client: int, i: int) -> dict:
-        got = {}
-        with ctx.counters.group(f"op-{i}"), tr.span("op", request=i):
-            docs = spark.read.parquet(inp.corpus)
-            with tr.span("dedup.exact"):
-                got["exact"] = exact_duplicates(docs).collect()
-            with tr.span("dedup.minhash_lsh"):
-                got["minhash"] = minhash_lsh_pairs(docs).collect()
-            with tr.span("dedup.simhash_pairs"):
-                got["simhash"] = simhash_pairs(docs).collect()
-            with tr.span("dedup.ngram_jaccard"):
-                got["ngram"] = ngram_jaccard_pairs(docs, max_shingle_df=None).collect()
-            with tr.span("naive.corpus_build"):
-                corpus = TokenizedCorpus.build(docs, cache=True)
-            with tr.span("naive.score"):
-                got["scores"] = score_queries(
-                    corpus, list(enumerate(inp.queries)), mode="any").collect()
-            corpus.unpersist()
-        return got
-
-    samples, window = closed_loop(1, op, ctx.seconds)
-
-    def correct(got: dict) -> bool:
-        scores = {(r["query_id"], r["doc_id"]): r["score"] for r in got["scores"]}
-        ngram = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in got["ngram"]}
-        return (
-            {(r["keeper_doc_id"], r["n_docs"]) for r in got["exact"]} == want["exact"]
-            and {(r["doc_a"], r["doc_b"]) for r in got["minhash"]} == want["minhash"]
-            and {(r["doc_a"], r["doc_b"], r["hamming"]) for r in got["simhash"]}
-            == want["simhash"]
-            and ngram.keys() == want["ngram"].keys()
-            and all(abs(ngram[p] - j) <= 1e-6 for p, j in want["ngram"].items())
-            and scores.keys() == want["scores"].keys()
-            and all(abs(scores[p] - s) <= SCORE_TOL for p, s in want["scores"].items())
-        )
-
-    failed = sum(s.error or not correct(s.result) for s in samples)
-    out = Outcome(samples, window, failed)
-    out.named = {"corpus_ops_s": (float(np.median([s.seconds for s in samples])), "s")}
-    if tr.enabled:
-        n = len(samples)
-        for name in ("dedup.exact", "dedup.minhash_lsh", "dedup.simhash_pairs",
-                     "dedup.ngram_jaccard", "naive.corpus_build", "naive.score"):
-            out.layers[f"{name}_ms"] = _mean_span_ms(tr.spans, name, n)
-        done = [s.result for s in samples if not s.error]
-        for key, name in (("minhash", "minhash_lsh"), ("simhash", "simhash_pairs"),
-                          ("ngram", "ngram_jaccard")):
-            out.layers[f"dedup.{name}_rows"] = float(
-                np.mean([len(g[key]) for g in done])) if done else 0.0
-        out.layers["analyzer.tokens_per_s"] = _analyzer_tokens_per_s(texts)
-        jobs = [ctx.counters.jobs(f"op-{s.seq}") for s in samples]
-        out.layers.update(_counter_layers(jobs))
-        for s, j in zip(samples, jobs):
-            _attach_jobs(tr, s.seq, j)
-    return out
-
-
 WORKLOADS = {
-    "build": build,
+    "batch": batch,
     "search_concurrent": search_concurrent,
-    "corpus_ops": corpus_ops,
 }
