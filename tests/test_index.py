@@ -163,6 +163,43 @@ def test_resume_skips_completed_and_is_identical(spark, corpus_sdf, tmp_path, in
     pd.testing.assert_frame_equal(a, b)
 
 
+def test_resume_after_crash_between_publish_and_lineage(
+    spark, corpus_sdf, tmp_path, index, monkeypatch
+):
+    """Kill after wave 0's atomic publish but before its lineage row -> the
+    resumed build redoes wave 0 exactly once: identical segments, no staging
+    debris, one `done` row per wave."""
+    import wise_spark.index.build as build_mod
+
+    real_append = build_mod._append_lineage
+
+    def crash_on_first_segments_row(spark_, index_dir, rows):
+        if any(r[0] == "segments" for r in rows):
+            raise RuntimeError("killed between publish and lineage")
+        real_append(spark_, index_dir, rows)
+
+    d = str(tmp_path / "idx_publish_crash")
+    kw = dict(url_col="url", n_shards=8, n_buckets=8, n_salts=3, n_waves=3)
+    monkeypatch.setattr(build_mod, "_append_lineage", crash_on_first_segments_row)
+    with pytest.raises(RuntimeError, match="between publish and lineage"):
+        build_index(corpus_sdf, d, **kw)
+    assert os.path.isdir(os.path.join(d, "segments", "wave=0"))
+    monkeypatch.setattr(build_mod, "_append_lineage", real_append)
+
+    meta2 = build_index(corpus_sdf, d, **kw)
+    assert not [p for p in os.listdir(d) if p.startswith("_wave_stage_")]
+    idx2 = FtsIndex(spark, d, meta2)
+    lin = idx2.lineage().toPandas()
+    seg = lin[(lin["stage"] == "segments") & (lin["status"] == "done")]
+    assert sorted(seg["unit"]) == ["wave-0", "wave-1", "wave-2"]
+
+    cols = ["term", "shard", "n", "docids", "tfs", "doclens"]
+    key = ["term", "shard"]
+    a = index._segments.select(*cols).toPandas().sort_values(key).reset_index(drop=True)
+    b = idx2._segments.select(*cols).toPandas().sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b)
+
+
 def test_resume_rebuilds_on_param_change(spark, corpus_sdf, tmp_path):
     """Resuming over a checkpoint built with DIFFERENT params must rebuild,
     not skip: a complete positions-free index resumed with

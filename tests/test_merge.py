@@ -28,8 +28,13 @@ def test_extend_equals_full_rebuild(spark, corpus_sdf, tmp_path):
     full = FtsIndex.load(spark, d_full)
     merged = FtsIndex.load(spark, d_merged, cache=True)
     assert meta.n_docs == full.meta.n_docs
-    assert abs(meta.avgdl - full.meta.avgdl) < 1e-12
+    assert meta.avgdl == full.meta.avgdl
     assert meta.n_terms == full.meta.n_terms
+    # the merged terms table equals the scratch build's, row for row
+    cols = ["term", "df", "max_tfc"]
+    ta = full._terms.select(*cols).toPandas().sort_values("term", ignore_index=True)
+    tb = merged._terms.select(*cols).toPandas().sort_values("term", ignore_index=True)
+    pd.testing.assert_frame_equal(ta, tb, check_exact=True)
     for q in QUERIES:
         for mode in ("all", "any"):
             a = full.topk(q, k=12, mode=mode).toPandas()

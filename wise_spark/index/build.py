@@ -39,7 +39,7 @@ from __future__ import annotations
 
 import json
 import os
-import sys
+import shutil
 import time
 from dataclasses import asdict, dataclass, field
 
@@ -47,7 +47,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .codec import encode_postings
+from .codec import encode_postings_many
 
 # ONE packed row per document (shard = doc_id % n_shards, so every term of a
 # doc shares one shard and one wave = shard % n_waves — Stage C prunes whole
@@ -81,7 +81,7 @@ PARTIAL_SCHEMA = (
 # arrays at 400k rows — inside the zone where this box's memory system
 # still scales with concurrent workers (measured: 8 pinned argsort+gather
 # procs inflate 1.1x at <=64 MB working sets but 3.4x at 256 MB).
-PACK_CHUNK_TERMS = int(os.environ.get("WISE_PACK_CHUNK", "400000"))
+PACK_CHUNK_TERMS = 400_000
 SEGMENT_SCHEMA = (
     "term string, shard int, n long, docids binary, tfs binary, doclens binary, "
     "positions binary, blk_last array<long>, blk_max array<double>, "
@@ -166,6 +166,26 @@ class IndexMeta:
 
 def _done(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def _parquet_footer_stats(path: str) -> tuple[int, int]:
+    """(total rows, total compressed bytes) of a parquet tree, from footers
+    only — no Spark job, no data read."""
+    import pyarrow.parquet as pq
+
+    rows = 0
+    nbytes = 0
+    for dp, _, fns in os.walk(path):
+        for fn in fns:
+            if not fn.endswith(".parquet") or fn.startswith("."):
+                continue
+            md = pq.ParquetFile(os.path.join(dp, fn)).metadata
+            rows += md.num_rows
+            for rg in range(md.num_row_groups):
+                g = md.row_group(rg)
+                for ci in range(g.num_columns):
+                    nbytes += g.column(ci).total_compressed_size
+    return rows, nbytes
 
 
 _LINEAGE_COLS = ["stage", "unit", "status", "rows", "bytes", "wall_ms"]
@@ -335,8 +355,7 @@ def _doc_tokens_fn(
     return gen
 
 
-def _pack_partition_fn(n_buckets: int, with_positions: bool = False,
-                       chunk_terms: int = PACK_CHUNK_TERMS):
+def _pack_partition_fn(n_buckets: int, with_positions: bool = False):
     """Phase 1 (split-local partials): stream the wave scan in bounded
     CHUNKS of packed doc rows; per chunk, expand, factorize terms to int
     codes, lexsort by (shard, bucket, term, doc_id) (pack needs group
@@ -415,45 +434,22 @@ def _pack_partition_fn(n_buckets: int, with_positions: bool = False,
         )
 
     def pack(batches):
-        import os as _os
-        import time as _time
-
-        prof = _os.environ.get("SPARK_GRAFT_PROFILE_PACK")
-        t_in = t_kernel = 0.0
-        n_batches = 0
         held: list[pd.DataFrame] = []
         n_flat = 0
-        t0 = _time.time()
         for pdf in batches:
-            t_in += _time.time() - t0  # time spent WAITING for/deserializing input
-            n_batches += 1
-            if len(pdf):
-                held.append(pdf)
-                n_flat += int(sum(len(b) >> 2 for b in pdf["tfs"]))
-                if n_flat >= chunk_terms:
-                    t1 = _time.time()
-                    out = pack_chunk(held)
-                    t_kernel += _time.time() - t1
-                    if out is not None:
-                        yield out
-                    held, n_flat = [], 0
-            t0 = _time.time()
+            if not len(pdf):
+                continue
+            held.append(pdf)
+            n_flat += int(sum(len(b) >> 2 for b in pdf["tfs"]))
+            if n_flat >= PACK_CHUNK_TERMS:
+                out = pack_chunk(held)
+                if out is not None:
+                    yield out
+                held, n_flat = [], 0
         if held:
-            t1 = _time.time()
             out = pack_chunk(held)
-            t_kernel += _time.time() - t1
             if out is not None:
                 yield out
-        if prof:
-            import resource as _res
-
-            ru = _res.getrusage(_res.RUSAGE_SELF)
-            with open(f"/tmp/pack_prof_{_os.getpid()}_{_time.time():.0f}", "w") as f:
-                f.write(
-                    f"batches={n_batches} input_wait_s={t_in:.2f} "
-                    f"kernel_s={t_kernel:.2f} cpu_s={_time.process_time():.2f} "
-                    f"minflt={ru.ru_minflt} majflt={ru.ru_majflt}\n"
-                )
 
     return pack
 
@@ -471,15 +467,7 @@ def _merge_partition_fn(avgdl: float, with_positions: bool = False):
     from itertools import chain
 
     def merge(batches):
-        import os as _os
-        import time as _time
-
-        from .codec import encode_postings_many
-
-        prof = _os.environ.get("SPARK_GRAFT_PROFILE_PACK")
-        t_start = _time.time()
         pdf = _concat_batches(batches)
-        t_in = _time.time() - t_start
         if pdf is None:
             return
         nrow = len(pdf)
@@ -567,17 +555,6 @@ def _merge_partition_fn(avgdl: float, with_positions: bool = False):
             )
             for i, enc in enumerate(encs)
         ]
-        if prof:
-            import resource as _res
-
-            ru = _res.getrusage(_res.RUSAGE_SELF)
-            with open(f"/tmp/merge_prof_{_os.getpid()}_{_time.time():.0f}", "w") as f:
-                f.write(
-                    f"rows={nrow} groups={len(out)} input_s={t_in:.2f} "
-                    f"kernel_s={_time.time() - t_start - t_in:.2f} "
-                    f"cpu_s={_time.process_time():.2f} "
-                    f"minflt={ru.ru_minflt} majflt={ru.ru_majflt}\n"
-                )
         yield pd.DataFrame(
             out,
             columns=[
@@ -589,49 +566,71 @@ def _merge_partition_fn(avgdl: float, with_positions: bool = False):
     return merge
 
 
+def _corpus_stats(spark: SparkSession, doc_map_path: str) -> tuple[int, int]:
+    """Exact (n_docs, total_tokens) of a doc_map table: row count from
+    parquet footers (free), then either a driver-side pyarrow column read
+    (doclen only, 8 bytes/doc — no Spark job) below DRIVER_STATS_MAX_ROWS,
+    or one Spark agg above it. Both are exact; the guard keeps driver memory
+    bounded at 10^12 docs."""
+    n_docs, _ = _parquet_footer_stats(doc_map_path)
+    if n_docs <= DRIVER_STATS_MAX_ROWS:
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        _bound_driver_arrow_threads()
+        dl = ds.dataset(doc_map_path).to_table(columns=["doclen"]).column("doclen")
+        return n_docs, int(pc.sum(dl).as_py() or 0)
+    row = spark.read.parquet(doc_map_path).agg(F.sum("doclen").alias("s")).collect()[0]
+    return n_docs, int(row["s"] or 0)
+
+
+def _write_terms(spark: SparkSession, segments_path: str, terms_path: str,
+                 n_files: int) -> None:
+    """Stage D: exact df(term) table — (term, df, max_tfc) sorted by term in
+    `n_files` range files, so query-term lookups prune on parquet min/max
+    statistics. Segment tables under DRIVER_STATS_MAX_ROWS rows (one row per
+    (shard, term), counted from footers) aggregate on the driver: Stage D is
+    a pure FIXED cost that does not shrink with executors, so at small scale
+    the three Spark jobs (agg + range-sampler + write) cost more in
+    scheduling than the work. Above the guard, one Spark aggregation."""
+    seg_rows, _ = _parquet_footer_stats(segments_path)
+    if seg_rows <= DRIVER_STATS_MAX_ROWS:
+        _write_terms_driver_side(segments_path, terms_path, n_files)
+        return
+    terms = (
+        spark.read.parquet(segments_path)
+        .groupBy("term")
+        .agg(F.sum("n").alias("df"), F.max("max_tfc").alias("max_tfc"))
+        # checkpoint BEFORE repartitionByRange: its range sampler is a
+        # separate job, so without this the (term) aggregation over the
+        # segments scan runs TWICE (sample + write). Blocks are freed by the
+        # ContextCleaner when the relation goes out of scope.
+        .localCheckpoint(eager=True)
+    )
+    (
+        terms.repartitionByRange(n_files, "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .parquet(terms_path)
+    )
+
+
 def _write_terms_driver_side(segments_path: str, terms_path: str,
                              n_files: int) -> None:
     """Stage D fast path: exact df(term) aggregation on the driver with
-    pyarrow, for segment tables under DRIVER_STATS_MAX_ROWS rows. Content is
-    identical to the Spark path — (term, df, max_tfc) globally sorted by term
-    and sliced into `n_files` contiguous range files so query-term lookups
-    prune on parquet min/max statistics. Publishes atomically (tmp dir +
-    os.replace) with a _SUCCESS marker, like every other stage commit."""
-    import shutil as _shutil
-
+    pyarrow. Content is identical to the Spark path of _write_terms.
+    Publishes atomically (tmp dir + os.replace) with a _SUCCESS marker, like
+    every other stage commit."""
     import pyarrow as pa
-    import pyarrow.dataset as _ds
-    import pyarrow.parquet as _pqw
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
 
     _bound_driver_arrow_threads()
     schema = pa.schema([("term", pa.string()), ("df", pa.int64()),
                         ("max_tfc", pa.float64())])
-
-    def _cpu_busy_0_3() -> float:
-        # busy jiffies summed over cpu0-3 (the pinned driver CPU set):
-        # profiling discriminator between "this python work is memory-
-        # stalled" (own cpu ~ wall) and "another process on the driver
-        # CPUs preempts it" (own cpu << wall, cpu0-3 busy >> own cpu)
-        tot = 0.0
-        try:
-            with open("/proc/stat") as f:
-                for line in f:
-                    if line.startswith(("cpu0 ", "cpu1 ", "cpu2 ", "cpu3 ")):
-                        v = [int(x) for x in line.split()[1:]]
-                        tot += sum(v) - v[3] - v[4]  # minus idle+iowait
-        except OSError:
-            pass
-        return tot / os.sysconf("SC_CLK_TCK")
-
-    _prof = bool(os.environ.get("SPARK_GRAFT_PROFILE_STAGES"))
-    if _prof:
-        _cpu0, _busy0 = time.process_time(), _cpu_busy_0_3()
-    _tp0 = time.time()
-    raw = _ds.dataset(segments_path, format="parquet").to_table(
-        columns=["term", "n", "max_tfc"])
-    _tp1 = time.time()
     t = (
-        raw
+        ds.dataset(segments_path, format="parquet")
+        .to_table(columns=["term", "n", "max_tfc"])
         .group_by("term")
         .aggregate([("n", "sum"), ("max_tfc", "max")])
         .select(["term", "n_sum", "max_tfc_max"])
@@ -639,29 +638,18 @@ def _write_terms_driver_side(segments_path: str, terms_path: str,
         .sort_by("term")
         .cast(schema)
     )
-    _tp2 = time.time()
     tmp = terms_path + "_tmp"
-    _shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     n = t.num_rows
     step = max(1, -(-n // n_files))
     for i, lo in enumerate(range(0, max(1, n), step)):
-        _pqw.write_table(t.slice(lo, step), os.path.join(tmp, f"part-{i:05d}.parquet"),
-                         row_group_size=65536)
+        pq.write_table(t.slice(lo, step), os.path.join(tmp, f"part-{i:05d}.parquet"),
+                       row_group_size=65536)
     with open(os.path.join(tmp, "_SUCCESS"), "w"):
         pass
-    _shutil.rmtree(terms_path, ignore_errors=True)
+    shutil.rmtree(terms_path, ignore_errors=True)
     os.replace(tmp, terms_path)
-    if _prof:
-        wall = time.time() - _tp0
-        print(
-            f"[stage-prof] terms-driver: read={_tp1 - _tp0:.3f}s "
-            f"agg_sort={_tp2 - _tp1:.3f}s write={time.time() - _tp2:.3f}s "
-            f"rows_in={raw.num_rows} rows_out={t.num_rows} "
-            f"wall={wall:.3f}s own_cpu={time.process_time() - _cpu0:.3f}s "
-            f"cpu0-3_busy={_cpu_busy_0_3() - _busy0:.3f}s",
-            file=sys.stderr, flush=True,
-        )
 
 
 def _permute_positions(tfs, pos, order):
@@ -729,7 +717,6 @@ def build_index(
     # an empty positions array in every Stage C task; a complete index
     # resumed with new params would skip every stage yet rewrite meta.json
     # claiming capabilities/shape the baked data lacks)
-    import shutil as _shutil
 
     # column bindings are part of the checkpoint identity: a tokens
     # checkpoint baked from text_col="body" resumed with text_col="title"
@@ -774,7 +761,7 @@ def build_index(
             )
         for p in stale:
             if os.path.isdir(p):
-                _shutil.rmtree(p, ignore_errors=True)
+                shutil.rmtree(p, ignore_errors=True)
             else:  # rmtree raises (and ignores) on plain files like meta.json
                 try:
                     os.remove(p)
@@ -881,71 +868,27 @@ def build_index(
                 spark.conf.unset("spark.sql.files.maxPartitionBytes")
             else:
                 spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
-        t_dm_write = time.time() - t0
-        t_lin0 = time.time()
         _append_lineage(
             spark, index_dir,
             [("doc_map", "-", "done", 0, 0, int((time.time() - t0) * 1000))],
         )
-        if os.environ.get("SPARK_GRAFT_PROFILE_STAGES"):
-            print(
-                f"[stage-prof] doc_map: write_job={t_dm_write:.3f}s "
-                f"lineage={time.time() - t_lin0:.3f}s",
-                file=sys.stderr, flush=True,
-            )
-    # exact corpus stats: row count from parquet footers (free), then either a
-    # driver-side pyarrow column read (doclen only, 8 bytes/doc — no Spark
-    # job) below the guard, or one Spark agg above it. Both are exact; the
-    # guard keeps driver memory bounded at 10^12 docs.
-    import pyarrow.parquet as _pq
-
-    n_docs = sum(
-        _pq.ParquetFile(os.path.join(dp, fn)).metadata.num_rows
-        for dp, _, fns in os.walk(doc_map_path)
-        for fn in fns
-        if fn.endswith(".parquet")
-    )
-    if n_docs <= DRIVER_STATS_MAX_ROWS:
-        import pyarrow.compute as _pc
-        import pyarrow.dataset as _ds
-
-        _bound_driver_arrow_threads()
-        _dl = _ds.dataset(doc_map_path).to_table(columns=["doclen"]).column("doclen")
-        total_tokens = int(_pc.sum(_dl).as_py() or 0)
-    else:
-        row = (
-            spark.read.parquet(doc_map_path)
-            .agg(F.sum("doclen").alias("s"))
-            .collect()[0]
-        )
-        total_tokens = int(row["s"] or 0)
+    n_docs, total_tokens = _corpus_stats(spark, doc_map_path)
     avgdl = (total_tokens / n_docs) if n_docs else 0.0
 
     # ---- Stage C: two-phase posting build, per wave --------------------------
     done_units = _completed_units(spark, index_dir, "segments") if resume else set()
     tf_all = spark.read.parquet(tokens_path)
     os.makedirs(segments_path, exist_ok=True)
-    import shutil as _shutil
-
-    # opt-in 2-way wave concurrency (boolean knob: "1"/"true"/"on" = two
-    # waves in flight, anything else = sequential, the measured-faster
-    # default on this box)
-    _conc = os.environ.get(
-        "WISE_WAVE_CONCURRENCY", "0").lower() in ("1", "true", "on")
-
-    def _run_wave(w: int) -> None:
+    for w in range(n_waves):
         unit = f"wave-{w}"
+        if unit in done_units:
+            continue
+        if fail_after_waves is not None and w >= fail_after_waves:
+            raise RuntimeError(f"injected failure before wave-{w}")
         t0 = time.time()
-        # concurrent waves get a CLONED session (shared SparkContext, own
-        # SQLConf): the per-wave maxPartitionBytes set/restore below would
-        # otherwise race on the shared session conf — thread B reading
-        # thread A's wave-specific value as the "old" conf to restore, and
-        # planning its scan with A's split target
-        sess = spark.newSession() if _conc else spark
         # wave-dir partition pruning; bucket is computed inside the pack
         # kernel (one hash per distinct term per chunk)
-        src = sess.read.parquet(tokens_path) if _conc else tf_all
-        tf = src.filter(F.col("wave") == w).drop("url")
+        tf = tf_all.filter(F.col("wave") == w).drop("url")
         # two-phase build with ONE exchange: phase 1 packs chunk-local fat
         # partial rows map-side directly on the pruned scan (no repartition —
         # no reducer ever receives raw per-posting rows); phase 2 k-way
@@ -970,9 +913,7 @@ def build_index(
             for dp, _, fns in os.walk(os.path.join(tokens_path, f"wave={w}"))
             for fn in fns if fn.endswith(".parquet")
         )
-        p2 = int(os.environ.get("WISE_SEG_PARTITIONS", "0")) or min(
-            65536, max(2 * par, 8, -(-wave_bytes // SEG_TASK_TOKEN_BYTES))
-        )
+        p2 = min(65536, max(2 * par, 8, -(-wave_bytes // SEG_TASK_TOKEN_BYTES)))
         # round the reducer count UP to a slot multiple: 81 merge tasks on
         # 4 slots leaves 3 slots idle for the whole 21st round (~1s of the
         # stage at bench scale, same shape at any scale)
@@ -986,8 +927,7 @@ def build_index(
             schema=SEGMENT_SCHEMA,
         )
         stage_dir = os.path.join(index_dir, f"_wave_stage_{w}")
-        _shutil.rmtree(stage_dir, ignore_errors=True)
-        t_write0 = time.time()
+        shutil.rmtree(stage_dir, ignore_errors=True)
         # pack tasks get the same bounded-payload treatment as merge tasks:
         # default 128MB scan splits hand one pack task ~10x the working set
         # the recycled worker arena holds (split planning happens at action
@@ -998,123 +938,35 @@ def build_index(
         n_pack = -(-max(max(1, par), -(-wave_bytes // pack_cap))
                    // max(1, par)) * max(1, par)
         pack_target = max(4 << 20, -(-wave_bytes // n_pack) + (1 << 20))
-        old_mpb = sess.conf.get("spark.sql.files.maxPartitionBytes", None)
-        sess.conf.set("spark.sql.files.maxPartitionBytes", str(pack_target))
+        old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(pack_target))
         try:
             segs.write.mode("overwrite").parquet(stage_dir)
         finally:
             if old_mpb is None:
-                sess.conf.unset("spark.sql.files.maxPartitionBytes")
+                spark.conf.unset("spark.sql.files.maxPartitionBytes")
             else:
-                sess.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
-        t_write = time.time() - t_write0
-        t_pub0 = time.time()
+                spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
         dst = os.path.join(segments_path, f"wave={w}")
-        _shutil.rmtree(dst, ignore_errors=True)
+        shutil.rmtree(dst, ignore_errors=True)
         os.replace(stage_dir, dst)
-        t_pub = time.time() - t_pub0
-        t_met0 = time.time()
         postings, nbytes = _wave_metrics(dst)
-        t_met = time.time() - t_met0
-        if os.environ.get("SPARK_GRAFT_PROFILE_PACK"):
-            with open(f"/tmp/wave_prof_{w}_{int(time.time())}", "w") as f:
-                f.write(f"wave={w} write_s={t_write:.2f} publish_s={t_pub:.2f} "
-                        f"metrics_s={t_met:.2f} total_s={time.time() - t0:.2f}\n")
         _append_lineage(
             spark, index_dir,
             [("segments", unit, "done", postings, nbytes,
               int((time.time() - t0) * 1000))],
         )
 
-    pending = [w for w in range(n_waves) if f"wave-{w}" not in done_units]
-    if fail_after_waves is not None:
-        # deterministic order for the crash-injection test hook
-        for w in pending:
-            if w >= fail_after_waves:
-                raise RuntimeError(f"injected failure before wave-{w}")
-            _run_wave(w)
-    elif len(pending) > 1 and _conc:
-        # opt-in only: concurrent waves measured SLOWER than sequential on
-        # every tested level (e.g. 128s vs 73s at 8 cores) — two jobs'
-        # python workers double the resident working set and the py-worker
-        # count per core, and on this box page-fault cost grows with the
-        # number of concurrently-faulting processes. A real cluster with
-        # idle slots MAY profit; it must be measured there, so the knob
-        # survives, off by default.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            futs = [ex.submit(_run_wave, w) for w in pending]
-            for f in futs:
-                f.result()
-    else:
-        for w in pending:
-            _run_wave(w)
-
     # ---- Stage D: exact term df table (range-partitioned, sorted) -----------
     if not (resume and _done(terms_path)):
         t0 = time.time()
-        # segments row count (one row per (shard, term)) from footers — free
-        seg_rows = sum(
-            _pq.ParquetFile(os.path.join(dp, fn)).metadata.num_rows
-            for dp, _, fns in os.walk(segments_path)
-            for fn in fns
-            if fn.endswith(".parquet")
-        )
-        t_footer = time.time() - t0
-        if seg_rows <= DRIVER_STATS_MAX_ROWS:
-            # Driver-side pyarrow fast path (same bounded-memory guard as the
-            # corpus stats above): Stage D is a pure FIXED cost — it reads 3
-            # thin columns of a small table and does not shrink with
-            # executors, so at bench scale the three Spark jobs (agg +
-            # range-sampler + write) cost more in scheduling than the work.
-            # The output is byte-equivalent in content: (term, df, max_tfc)
-            # sorted by term, sliced into the same number of range files for
-            # parquet min/max pruning on query terms.
-            _write_terms_driver_side(segments_path, terms_path,
-                                     max(2, n_buckets // 4))
-        else:
-            terms = (
-                spark.read.parquet(segments_path)
-                .groupBy("term")
-                .agg(F.sum("n").alias("df"), F.max("max_tfc").alias("max_tfc"))
-                # checkpoint BEFORE repartitionByRange: its range sampler is
-                # a separate job, so without this the (term) aggregation over
-                # the segments scan runs TWICE (sample + write) — a pure
-                # fixed cost that does not shrink with executors. Blocks are
-                # freed by the ContextCleaner when the relation goes out of
-                # scope below.
-                .localCheckpoint(eager=True)
-            )
-            (
-                terms.repartitionByRange(max(2, n_buckets // 4), "term")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .parquet(terms_path)
-            )
-        t_terms_work = time.time() - t0
-        t_lin0 = time.time()
+        _write_terms(spark, segments_path, terms_path, max(2, n_buckets // 4))
         _append_lineage(
             spark, index_dir,
             [("terms", "-", "done", 0, 0, int((time.time() - t0) * 1000))],
         )
-        if os.environ.get("SPARK_GRAFT_PROFILE_STAGES"):
-            print(
-                f"[stage-prof] terms: footer_walk={t_footer:.3f}s "
-                f"work={t_terms_work - t_footer:.3f}s "
-                f"lineage={time.time() - t_lin0:.3f}s seg_rows={seg_rows}",
-                file=sys.stderr, flush=True,
-            )
 
-    # row count from parquet footers only — no Spark job, no data read
-    import pyarrow.parquet as _pq
-
-    n_terms = sum(
-        _pq.ParquetFile(os.path.join(dp, fn)).metadata.num_rows
-        for dp, _, fns in os.walk(terms_path)
-        for fn in fns
-        if fn.endswith(".parquet")
-    )
+    n_terms, _ = _parquet_footer_stats(terms_path)
     meta = IndexMeta(
         n_docs=n_docs,
         avgdl=avgdl,

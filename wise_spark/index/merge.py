@@ -17,19 +17,23 @@ from scratch over the union corpus (verified in tests).
 from __future__ import annotations
 
 import os
+import shutil
 import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from .build import (
     IndexMeta,
     SEGMENT_SCHEMA,
     _append_lineage,
     _concat_batches,
+    _corpus_stats,
     _group_bounds,
+    _parquet_footer_stats,
     _permute,
+    _write_terms,
 )
 from .codec import decode_positions, decode_postings, encode_postings_many
 
@@ -124,17 +128,14 @@ def merge_indexes(
 
     dm_a = spark.read.parquet(os.path.join(dir_a, "doc_map"))
     dm_b = spark.read.parquet(os.path.join(dir_b, "doc_map"))
-    overlap = dm_a.select("doc_id").join(dm_b.select("doc_id"), "doc_id").limit(1).count()
-    if overlap:
+    if not dm_a.select("doc_id").join(dm_b.select("doc_id"), "doc_id").isEmpty():
         raise ValueError("docID sets overlap; merge requires disjoint ids")
     dm = dm_a.unionByName(dm_b, allowMissingColumns=True)
     dm.write.mode("overwrite").parquet(os.path.join(out_dir, "doc_map"))
-    srow = spark.read.parquet(os.path.join(out_dir, "doc_map")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("doclen").alias("avgdl"),
-        F.sum("doclen").alias("total"),
-    ).collect()[0]
-    n_docs, avgdl = int(srow["n"]), float(srow["avgdl"] or 0.0)
+    # same stats helper as build_index, so a merged index's avgdl is
+    # bit-identical to a from-scratch build over the union corpus
+    n_docs, total_tokens = _corpus_stats(spark, os.path.join(out_dir, "doc_map"))
+    avgdl = (total_tokens / n_docs) if n_docs else 0.0
 
     with_pos = bool(ma.extras.get("with_positions")) and bool(
         mb.extras.get("with_positions")
@@ -155,23 +156,12 @@ def merge_indexes(
     # wave=0, so stale wave>0 dirs from a previous multi-wave index in a
     # reused out_dir would survive and silently leak ghost postings into
     # the terms aggregation and every query.
-    import shutil as _shutil
-
-    _shutil.rmtree(os.path.join(out_dir, "segments"), ignore_errors=True)
-    merged.write.mode("overwrite").parquet(
-        os.path.join(out_dir, "segments", "wave=0")
-    )
-
-    terms = (
-        spark.read.parquet(os.path.join(out_dir, "segments"))
-        .groupBy("term")
-        .agg(F.sum("n").alias("df"), F.max("max_tfc").alias("max_tfc"))
-    )
-    terms.repartitionByRange(max(2, ma.n_buckets // 4), "term").sortWithinPartitions(
-        "term"
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "terms"))
-
-    n_terms = spark.read.parquet(os.path.join(out_dir, "terms")).count()
+    segments_path = os.path.join(out_dir, "segments")
+    terms_path = os.path.join(out_dir, "terms")
+    shutil.rmtree(segments_path, ignore_errors=True)
+    merged.write.mode("overwrite").parquet(os.path.join(segments_path, "wave=0"))
+    _write_terms(spark, segments_path, terms_path, max(2, ma.n_buckets // 4))
+    n_terms, _ = _parquet_footer_stats(terms_path)
     _append_lineage(
         spark, out_dir,
         [("merge", f"{os.path.basename(dir_a)}+{os.path.basename(dir_b)}", "done",
@@ -179,7 +169,7 @@ def merge_indexes(
     )
     meta = IndexMeta(
         n_docs=n_docs, avgdl=avgdl,
-        total_tokens=int(srow["total"] or 0), n_terms=n_terms,
+        total_tokens=total_tokens, n_terms=n_terms,
         n_shards=ma.n_shards, n_buckets=ma.n_buckets, n_salts=ma.n_salts,
         extras={"with_positions": with_pos},
     )
@@ -198,7 +188,6 @@ def extend_index(
 ) -> IndexMeta:
     """Incremental build: index only the NEW documents (the delta snapshot),
     then merge with the existing index into out_dir."""
-    import shutil
     import tempfile
 
     from .build import build_index

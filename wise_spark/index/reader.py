@@ -25,15 +25,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..analyzer import tokenize_text
 from ..query.bm25 import idf_scalar
 from ..session import local_rows_df
-from .build import IndexMeta
+from .build import IndexMeta, _concat_batches, _parquet_footer_stats
 from .wand import score_shard_taat, score_shard_wand
-
-
-def _concat(batches) -> pd.DataFrame | None:
-    parts = [p for p in batches if len(p)]
-    if not parts:
-        return None
-    return pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
 
 
 def _shard_phrase_occurrences(rows: dict, seq: list[str], prune: bool = True,
@@ -121,25 +114,6 @@ def _shard_phrase_occurrences(rows: dict, seq: list[str], prune: bool = True,
 # either way, the cache is purely a latency optimization).
 DF_CACHE_MAX_TERMS = 5_000_000          # ~100s of MB of driver heap
 SEGMENT_CACHE_MAX_BYTES = 8 << 30       # executor storage-memory budget
-
-
-def _parquet_footer_stats(path: str) -> tuple[int, int]:
-    """(total rows, total compressed bytes) from parquet footers only."""
-    import pyarrow.parquet as pq
-
-    rows = 0
-    nbytes = 0
-    for dp, _, fns in os.walk(path):
-        for fn in fns:
-            if not fn.endswith(".parquet") or fn.startswith("."):
-                continue
-            md = pq.ParquetFile(os.path.join(dp, fn)).metadata
-            rows += md.num_rows
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    nbytes += g.column(ci).total_compressed_size
-    return rows, nbytes
 
 
 class FtsIndex:
@@ -279,7 +253,7 @@ class FtsIndex:
         avgdl, n_terms = self.meta.avgdl, len(terms)
 
         def run(batches):
-            pdf = _concat(batches)
+            pdf = _concat_batches(batches)
             if pdf is None:
                 return
             for _, g in pdf.groupby("shard", sort=False):
@@ -316,7 +290,7 @@ class FtsIndex:
                 return out.head(k)
 
         def run(batches):
-            pdf = _concat(batches)
+            pdf = _concat_batches(batches)
             if pdf is None:
                 return
             for _, g in pdf.groupby("shard", sort=False):
@@ -363,7 +337,7 @@ class FtsIndex:
             return empty
 
         def run(batches):
-            pdf = _concat(batches)
+            pdf = _concat_batches(batches)
             if pdf is None:
                 return
             for _, g in pdf.groupby("shard", sort=False):
@@ -440,7 +414,7 @@ class FtsIndex:
 
             from .codec import decode_postings
 
-            pdf = _concat(batches)
+            pdf = _concat_batches(batches)
             if pdf is None:
                 return
             for _, g in pdf.groupby("shard", sort=False):
@@ -492,7 +466,7 @@ class FtsIndex:
         def run(batches):
             import numpy as np
 
-            pdf = _concat(batches)
+            pdf = _concat_batches(batches)
             if pdf is None:
                 return
             for _, g in pdf.groupby("shard", sort=False):
@@ -570,7 +544,7 @@ class FtsIndex:
                     st_self + L_self - 1) - 1
                 return (pred_ok & (gap_pred <= n)) | (succ_ok & (gap_succ <= n))
 
-            pdf = _concat(batches)
+            pdf = _concat_batches(batches)
             if pdf is None:
                 return
             for _, g in pdf.groupby("shard", sort=False):

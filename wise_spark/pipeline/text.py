@@ -10,8 +10,6 @@ text) — equal to the engine analyzer on ASCII corpora and expressible as
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
@@ -70,7 +68,7 @@ def _effective_scan_parallelism(df: DataFrame, planned: int) -> int:
 # corpus does not fan out into dozens of near-empty map tasks whose shuffle
 # files dominate the stage (guide §2.2: fewer, larger map tasks; measured at
 # sf0.1: a 32-task map feeding a 64-partition exchange costs ~0.5 s of pure
-# overhead vs ~0.1 s from 3 tasks). Env-overridable for experiments.
+# overhead vs ~0.1 s from 3 tasks).
 REBALANCE_CHUNK_BYTES = 256 << 10
 
 
@@ -90,8 +88,7 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
 REBALANCE_CHUNK_BYTES_HASHING = 32 << 10
 
 
-def rebalance_narrow_scan(df: DataFrame, min_parts: int | None = None,
-                          chunk_bytes: int | None = None) -> DataFrame:
+def rebalance_narrow_scan(df: DataFrame, chunk_bytes: int | None = None) -> DataFrame:
     """Re-balance a NARROW source before CPU-heavy per-row text work.
 
     Spark cannot split a parquet scan below row-group granularity, so a
@@ -116,9 +113,8 @@ def rebalance_narrow_scan(df: DataFrame, min_parts: int | None = None,
     inputs — at scale the estimate exceeds width x chunk and the behavior
     is exactly the old one)."""
     sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
-    chunk = chunk_bytes or int(os.environ.get("WISE_REBALANCE_CHUNK_BYTES",
-                                              REBALANCE_CHUNK_BYTES))
+    target = sc.defaultParallelism
+    chunk = chunk_bytes or REBALANCE_CHUNK_BYTES
     est = _plan_size_bytes(df)
     if est is not None and 0 <= est < target * chunk:
         target = max(1, -(-est // chunk))
