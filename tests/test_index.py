@@ -58,11 +58,21 @@ def test_meta_exact_stats(index, oracle):
 @pytest.mark.parametrize("mode", ["all", "any"])
 @pytest.mark.parametrize("method", ["wand", "taat"])
 def test_topk_rank_identity(index, oracle, mode, method):
+    """topk matches the pandas oracle, and topk_many, scoring the whole
+    batch in one job, gives every query exactly its topk list (doc_ids and
+    scores, in order) — including a query of absent terms, a duplicated
+    query and the empty query."""
     k = 15
-    for q in QUERIES:
+    batch = QUERIES + ["zzzabsent qqqmissing", QUERIES[0], ""]
+    many = index.topk_many(batch, k, mode=mode, method=method)
+    assert list(many) == list(dict.fromkeys(batch))
+    for q in batch:
         got = index.topk(q, k=k, mode=mode, method=method).toPandas()
         want = oracle.score_all(q, mode)
-        _check(got, want, k, f"{method}/{mode}: {q}")
+        _check(got, want, k, f"{method}/{mode}: {q!r}")
+        assert many[q] == list(zip(got["doc_id"].tolist(), got["score"].tolist())), \
+            f"topk_many {method}/{mode}: {q!r}"
+    assert many["zzzabsent qqqmissing"] == [] and many[""] == []
 
 
 @pytest.mark.parametrize("mode", ["all", "any"])

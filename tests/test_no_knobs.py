@@ -1,11 +1,12 @@
 """Spark-free guard: the library reads no tuning or profiling switches from
-the environment, and the index build does no I/O outside the index dir.
+the environment, the index build does no I/O outside the index dir, and
+the serving path has no timer to tune.
 
 The only environment setting the package may read is the deployment choice
 of Arrow memory pool in `cluster.py` (WISE_ARROW_POOL). Any other
 `WISE_*` / `SPARK_GRAFT_*` read is a hidden build knob; any "/proc/" or
 "/tmp/" literal under `wise_spark/index/` is a side channel out of the
-build."""
+build; a sleep or timed wait in `serve.py` is a batching window."""
 
 from __future__ import annotations
 
@@ -89,3 +90,42 @@ def test_no_proc_or_tmp_io_in_index():
 ])
 def test_env_scanner_sees_each_read_form(src, expect):
     assert [n for _, n in _env_names(ast.parse(src))] == expect
+
+
+def _timed_waits(tree: ast.AST):
+    """Calls that pause for a time: any `sleep(...)` / `time.sleep(...)`,
+    and `.wait(...)` / `.wait_for(pred, ...)` given a timeout."""
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+        timeout = any(kw.arg == "timeout" for kw in node.keywords)
+        if (name == "sleep"
+                or (name == "wait" and (node.args or timeout))
+                or (name == "wait_for" and (len(node.args) > 1 or timeout))):
+            yield node.lineno, name
+
+
+def test_no_batching_window_in_serve():
+    """The serving path batches by group commit alone: a request waits only
+    for the batch in flight, never for a timer, so a batching window cannot
+    creep in as a hidden knob."""
+    found = [f"serve.py:{line} {name}(...)"
+             for rel, tree in _sources() if rel == "serve.py"
+             for line, name in _timed_waits(tree)]
+    assert not found, "timed waits in wise_spark/serve.py:\n" + "\n".join(found)
+
+
+@pytest.mark.parametrize("src,expect", [
+    ("import time\ntime.sleep(0.01)", ["sleep"]),
+    ("from time import sleep\nsleep(1)", ["sleep"]),
+    ("cond.wait(0.005)", ["wait"]),
+    ("event.wait(timeout=1)", ["wait"]),
+    ("cond.wait_for(ready, 0.5)", ["wait_for"]),
+    ("cond.wait()", []),
+    ("cond.wait_for(ready)", []),
+    ("thread.join(timeout=5)", []),
+])
+def test_timed_wait_scanner_sees_each_form(src, expect):
+    assert [n for _, n in _timed_waits(ast.parse(src))] == expect

@@ -8,6 +8,9 @@ chunked stream), 142-241 (media serving), 1210-1254 (search validation)."""
 from __future__ import annotations
 
 import json
+import sys
+import threading
+import time
 
 import pandas as pd
 import urllib.error
@@ -21,6 +24,7 @@ from wise_spark.serve import (
     SearchServer,
     iter_byte_range,
     parse_range_header,
+    spark_search_fn,
 )
 
 PAYLOAD = bytes(range(256)) * 40  # 10,240 bytes -> exercises 2 chunks
@@ -247,11 +251,138 @@ def test_head_sends_no_body_on_any_route_keepalive(server):
             conn.close()
 
 
+# -- group commit (spark_search_fn over a fake index, Spark-free) ------------
+
+class FakeIndex:
+    """topk_many stand-in: query q's ordered hits are doc_ids
+    1000*len(q) + j with score 1/(j+1). Records every call; the first call
+    can be held back so that concurrent requests queue behind it."""
+
+    def __init__(self, hold_first: float = 0.0, fail: bool = False):
+        self.calls: list[tuple[list[str], int]] = []
+        self.hold_first = hold_first
+        self.fail = fail
+
+    def topk_many(self, queries, k, mode="any", method="wand"):
+        self.calls.append((list(queries), k))
+        if len(self.calls) == 1:
+            time.sleep(self.hold_first)
+        if self.fail:
+            raise RuntimeError("spark job failed")
+        return {q: [(1000 * len(q) + j, 1.0 / (j + 1)) for j in range(k)]
+                for q in queries}
+
+
+def _page_of(q: str, start: int, end: int) -> list[dict]:
+    return [{"doc_id": 1000 * len(q) + r, "score": 1.0 / (r + 1), "rank": r}
+            for r in range(start, end)]
+
+
+def _run_clients(client, n: int, timeout: float = 30.0) -> None:
+    """Run client(0..n-1) on n threads; fail (not hang) if any is stuck."""
+    threads = [threading.Thread(target=client, args=(i,), daemon=True)
+               for i in range(n)]
+    for t in threads:
+        t.start()
+    deadline = time.monotonic() + timeout
+    for t in threads:
+        t.join(max(0.0, deadline - time.monotonic()))
+    assert not any(t.is_alive() for t in threads), "requests never answered"
+
+
+def test_group_commit_concurrent_requests_share_calls():
+    fake = FakeIndex(hold_first=0.3)
+    search = spark_search_fn(fake, hydrate=False)
+    n = 8
+    barrier = threading.Barrier(n)
+    got: dict[int, list[dict]] = {}
+
+    def client(i: int) -> None:
+        barrier.wait()
+        got[i] = search("q" * (i + 1), i % 3, i % 3 + 2 + i)
+
+    _run_clients(client, n)
+    for i in range(n):
+        assert got[i] == _page_of("q" * (i + 1), i % 3, i % 3 + 2 + i), i
+    assert len(fake.calls) < n, fake.calls
+    # each call scores distinct queries with k = the batch's largest end
+    assert sorted(q for qs, _ in fake.calls for q in qs) == \
+        sorted("q" * (i + 1) for i in range(n))
+
+
+def test_group_commit_stress_no_lost_request():
+    """16 threads x 25 requests with a tiny switch interval: every request
+    gets its own page, and each (distinct) query is scored exactly once."""
+    fake = FakeIndex()
+    search = spark_search_fn(fake, hydrate=False)
+    bad: list[str] = []
+
+    def client(i: int) -> None:
+        for j in range(25):
+            q = f"{i}-" + "q" * j
+            if search(q, 0, 2) != _page_of(q, 0, 2):
+                bad.append(q)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        _run_clients(client, 16, timeout=60.0)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not bad
+    scored = [q for qs, _ in fake.calls for q in qs]
+    assert len(scored) == len(set(scored)) == 16 * 25
+
+
+def test_group_commit_lone_request_one_call():
+    fake = FakeIndex()
+    assert spark_search_fn(fake, hydrate=False)("solo", 0, 5) == \
+        _page_of("solo", 0, 5)
+    assert fake.calls == [(["solo"], 5)]
+
+
+def test_group_commit_page_slice_ranks():
+    res = spark_search_fn(FakeIndex(), hydrate=False)("abc", 3, 5)
+    assert [r["rank"] for r in res] == [3, 4]
+    assert res == _page_of("abc", 3, 5)
+
+
+def test_group_commit_failure_fails_batch_then_releases_slot():
+    """A failing shared call answers HTTP 500 to every request of its batch,
+    and the slot is free again afterwards: the next request succeeds."""
+    import logging
+
+    fake = FakeIndex(hold_first=0.3, fail=True)
+    srv = SearchServer(spark_search_fn(fake, hydrate=False))
+    port = srv.start()
+    n = 4
+    barrier = threading.Barrier(n)
+    codes: dict[int, int] = {}
+
+    def client(i: int) -> None:
+        barrier.wait()
+        codes[i], _, _ = get(f"http://127.0.0.1:{port}/search?q=x{i}&end=3")
+
+    logging.disable(logging.CRITICAL)
+    try:
+        _run_clients(client, n)
+        assert codes == {i: 500 for i in range(n)}
+        fake.fail = False
+        status, _, body = get(f"http://127.0.0.1:{port}/search?q=ok&end=3")
+        assert status == 200
+        assert json.loads(body)["results"]["ok"] == _page_of("ok", 0, 3)
+    finally:
+        logging.disable(logging.NOTSET)
+        srv.stop()
+
+
 # -- Spark-backed integration (spark_search_fn + parquet_media_resolver) -----
 
 def test_spark_search_fn_end_to_end(spark, corpus_sdf, tmp_path_factory):
     """HTTP /search over a real index returns the same paged top-k the
-    DataFrame API produces, hydrated with doc_map metadata."""
+    DataFrame API produces, hydrated with doc_map metadata: whole rows
+    (every doc_map column, score and rank), for a first page, a later
+    page, and a two-query request."""
     from wise_spark.index import FtsIndex, build_index
     from wise_spark.query.search import page
     from wise_spark.serve import SearchServer, spark_search_fn
@@ -260,27 +391,35 @@ def test_spark_search_fn_end_to_end(spark, corpus_sdf, tmp_path_factory):
     meta = build_index(corpus_sdf, d, url_col="url", n_shards=4, n_buckets=4,
                        n_salts=2, n_waves=1)
     idx = FtsIndex(spark, d, meta, cache=True)
-    q = "nababa pebaba"
-    want = sorted(
-        idx.hydrate(
-            page(idx.topk(q, k=5, mode="any", method="wand"), start=0, end=5)
-        ).collect(),
-        key=lambda r: r["rank"],
-    )
+    qa, qb = "nababa pebaba", "pebaba"
+
+    def want(q: str, start: int, end: int) -> list[dict]:
+        rows = idx.hydrate(
+            page(idx.topk(q, k=end, mode="any", method="wand"),
+                 start=start, end=end)).collect()
+        return sorted((r.asDict(recursive=True) for r in rows),
+                      key=lambda r: r["rank"])
 
     srv = SearchServer(spark_search_fn(idx), corpus_size=meta.n_docs)
     port = srv.start()
     try:
-        status, _, body = get(
-            f"http://127.0.0.1:{port}/search?q={q.replace(' ', '+')}"
-            "&start=0&end=5")
+        got = {}
+        for qs in (f"q={qa.replace(' ', '+')}&start=0&end=5",
+                   f"q={qa.replace(' ', '+')}&start=2&end=5",
+                   f"q={qa.replace(' ', '+')}&q={qb}&start=0&end=5"):
+            status, _, body = get(f"http://127.0.0.1:{port}/search?{qs}")
+            assert status == 200, qs
+            got[qs] = json.loads(body)["results"]
     finally:
         srv.stop()
-    assert status == 200
-    got = json.loads(body)["results"][q]
-    assert [g["doc_id"] for g in got] == [w["doc_id"] for w in want]
-    assert [g["rank"] for g in got] == [w["rank"] for w in want]
-    assert all("url" in g for g in got)  # hydrated
+    first, later, both = got.values()
+    assert first[qa] == want(qa, 0, 5)
+    assert [r["rank"] for r in first[qa]] == [0, 1, 2, 3, 4]
+    assert set(idx.doc_map().columns) | {"score", "rank"} == set(first[qa][0])
+    assert later[qa] == want(qa, 2, 5)
+    assert [r["rank"] for r in later[qa]] == [2, 3, 4]
+    assert both == {qa: want(qa, 0, 5), qb: want(qb, 0, 5)}
+    assert both[qa] != both[qb]
 
 
 def test_parquet_media_resolver_point_lookup(spark, tmp_path_factory):

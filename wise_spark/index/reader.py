@@ -4,8 +4,9 @@ Query lifecycle (SURVEY.md section 3.4): driver tokenizes the query with the
 SAME analyzer as the build side, looks up exact df for the query terms from
 the range-partitioned terms table (parquet min/max pruning on `term`), then
 reads only the query terms' segment rows (predicate pushdown into the scan)
-and runs the per-shard scoring kernel via applyInPandas; the global result is
-a tiny TakeOrderedAndProject over per-shard top-k heaps.
+and runs the per-shard scoring kernel via mapInPandas; the global result is
+a tiny TakeOrderedAndProject over per-shard top-k heaps. `topk_many` scores
+a batch of queries in one such job and merges the heaps on the driver.
 
 Scale notes: the segments scan touches only the query terms' posting rows —
 for a 3-term query over 10^12 docs that is 3 * n_shards rows regardless of
@@ -115,6 +116,11 @@ def _shard_phrase_occurrences(rows: dict, seq: list[str], prune: bool = True,
 DF_CACHE_MAX_TERMS = 5_000_000          # ~100s of MB of driver heap
 SEGMENT_CACHE_MAX_BYTES = 8 << 30       # executor storage-memory budget
 
+# result relations: scored hits, and the (doc_id, tf, doclen) virtual-term
+# matches the phrase/prefix/initial scans emit
+SCORE_SCHEMA = "doc_id long, score double"
+MATCH_SCHEMA = "doc_id long, tf long, doclen long"
+
 
 class FtsIndex:
     def __init__(
@@ -210,9 +216,19 @@ class FtsIndex:
         rows = self._terms.filter(F.col("term").isin(terms)).collect()
         return {r["term"]: int(r["df"]) for r in rows}
 
-    def _idfs(self, terms: list[str]) -> dict[str, float]:
-        dfs = self.term_stats(terms)
-        return {t: idf_scalar(dfs[t], self.meta.n_docs) for t in terms if t in dfs}
+    def _empty(self, schema: str) -> DataFrame:
+        return local_rows_df(self.spark, [], schema)
+
+    def _query_plan(self, terms: list[str], dfs: dict[str, int],
+                    mode: str) -> tuple[dict[str, float], int] | None:
+        """(idf per matched term, number of query terms) for one query, or
+        None when it can match nothing: no term is in the index, or
+        mode='all' and some term is absent. n_terms counts the QUERY's
+        terms, not the matched ones — 'all' scoring needs every one."""
+        idfs = {t: idf_scalar(dfs[t], self.meta.n_docs) for t in terms if t in dfs}
+        if not idfs or (mode == "all" and len(idfs) < len(terms)):
+            return None
+        return idfs, len(terms)
 
     # -- scoring -------------------------------------------------------------
 
@@ -246,11 +262,11 @@ class FtsIndex:
         relations, reference /root/reference/search.py:67-119).
         """
         terms = self.query_terms(query)
-        idfs = self._idfs(terms)
-        empty = local_rows_df(self.spark, [], "doc_id long, score double")
-        if not idfs or (mode == "all" and len(idfs) < len(terms)):
-            return empty
-        avgdl, n_terms = self.meta.avgdl, len(terms)
+        plan = self._query_plan(terms, self.term_stats(terms), mode)
+        if plan is None:
+            return self._empty(SCORE_SCHEMA)
+        idfs, n_terms = plan
+        avgdl = self.meta.avgdl
 
         def run(batches):
             pdf = _concat_batches(batches)
@@ -260,46 +276,95 @@ class FtsIndex:
                 yield score_shard_taat(g, idfs, avgdl, n_terms, mode)
 
         return self._shard_partitioned(list(idfs)).mapInPandas(
-            run, schema="doc_id long, score double"
+            run, schema=SCORE_SCHEMA
         )
 
-    def topk(
-        self, query: str, k: int = 10, mode: str = "all", method: str = "wand"
-    ) -> DataFrame:
-        """Top-k (doc_id, score) ordered (score desc, doc_id asc).
+    def _local_topk(self, plans: list[tuple[dict[str, float], int]], k: int,
+                    mode: str, method: str) -> DataFrame:
+        """Per-shard local top-k heaps of several queries from ONE scan:
+        (qid, doc_id, score), qid = position in `plans`.
+
+        The scan reads the union of the queries' terms; per shard each query
+        scores only its own term rows, so its heap is exactly the one a
+        single-query scan would produce. Top-k of the union of the shard
+        heaps, under (score desc, doc_id asc), is the query's global top-k.
 
         method='wand'  per-shard block-max WAND heaps (rank-identical)
-        method='taat'  per-shard exhaustive, then global top-k
+        method='taat'  per-shard exhaustive, then local top-k
         """
-        terms = self.query_terms(query)
-        idfs = self._idfs(terms)
-        empty = local_rows_df(self.spark, [], "doc_id long, score double")
-        if not idfs or (mode == "all" and len(idfs) < len(terms)):
-            return empty
-        avgdl, n_terms = self.meta.avgdl, len(terms)
+        avgdl = self.meta.avgdl
 
-        if method == "wand":
-            def kern(g: pd.DataFrame) -> pd.DataFrame:
+        def kern(g: pd.DataFrame, idfs: dict[str, float], n_terms: int) -> pd.DataFrame:
+            if method == "wand":
                 return score_shard_wand(g, idfs, avgdl, n_terms, mode, k)
-        else:
-            def kern(g: pd.DataFrame) -> pd.DataFrame:
-                out = score_shard_taat(g, idfs, avgdl, n_terms, mode)
-                out = out.sort_values(
-                    ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-                )
-                return out.head(k)
+            out = score_shard_taat(g, idfs, avgdl, n_terms, mode)
+            out = out.sort_values(
+                ["score", "doc_id"], ascending=[False, True], kind="mergesort"
+            )
+            return out.head(k)
 
         def run(batches):
             pdf = _concat_batches(batches)
             if pdf is None:
                 return
+            heaps = []
             for _, g in pdf.groupby("shard", sort=False):
-                yield kern(g)
+                for qid, (idfs, n_terms) in enumerate(plans):
+                    own = g[g["term"].isin(idfs)]
+                    heap = kern(own, idfs, n_terms) if len(own) else ()
+                    # empty heaps carry untyped columns; keep them out of
+                    # the concat so doc_id stays int64
+                    if len(heap):
+                        heaps.append(heap.assign(qid=qid))
+            if heaps:
+                yield pd.concat(heaps, ignore_index=True)[["qid", "doc_id", "score"]]
 
-        local = self._shard_partitioned(list(idfs)).mapInPandas(
-            run, schema="doc_id long, score double"
+        terms = sorted(set().union(*(idfs for idfs, _ in plans)))
+        return self._shard_partitioned(terms).mapInPandas(
+            run, schema="qid int, " + SCORE_SCHEMA
         )
+
+    def topk(
+        self, query: str, k: int = 10, mode: str = "all", method: str = "wand"
+    ) -> DataFrame:
+        """Top-k (doc_id, score) ordered (score desc, doc_id asc): the
+        one-query case of `topk_many`, kept lazy — a TakeOrderedAndProject
+        over the per-shard heaps (method: see `_local_topk`)."""
+        terms = self.query_terms(query)
+        plan = self._query_plan(terms, self.term_stats(terms), mode)
+        if plan is None:
+            return self._empty(SCORE_SCHEMA)
+        local = self._local_topk([plan], k, mode, method).select("doc_id", "score")
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    def topk_many(
+        self, queries: list[str], k: int, mode: str = "any", method: str = "wand"
+    ) -> dict[str, list[tuple[int, float]]]:
+        """Top-k [(doc_id, score)] per query, ordered (score desc, doc_id
+        asc), every query scored by ONE Spark job: the per-shard heaps of
+        `_local_topk` are collected (at most queries x shards x k rows) and
+        merged per query on the driver. Each list equals
+        `topk(q, k, mode, method).collect()`. Queries with the same term
+        set share one heap; a query that can match nothing costs no scan."""
+        terms_of = {q: tuple(self.query_terms(q)) for q in queries}
+        dfs = self.term_stats(sorted(set().union(*terms_of.values())))
+        plans = {}
+        for terms in dict.fromkeys(terms_of.values()):
+            plan = self._query_plan(list(terms), dfs, mode)
+            if plan is not None:
+                plans[terms] = plan
+        hits = {terms: [] for terms in plans}
+        if plans:
+            keys = list(plans)
+            local = self._local_topk(list(plans.values()), k, mode, method).toPandas()
+            local = local.sort_values(
+                ["qid", "score", "doc_id"], ascending=[True, False, True],
+                kind="mergesort",
+            ).groupby("qid", sort=False).head(k)
+            for qid, d, sc in zip(local["qid"].tolist(), local["doc_id"].tolist(),
+                                  local["score"].tolist()):
+                hits[keys[qid]].append((d, sc))
+        return {q: list(hits.get(terms, [])) for q, terms in terms_of.items()}
 
     # -- phrase queries --------------------------------------------------------
 
@@ -328,7 +393,7 @@ class FtsIndex:
         if not self.meta.extras.get("with_positions"):
             raise ValueError("index was built without positions (with_positions=True)")
         seq = self.query_terms_ordered(phrase)
-        empty = local_rows_df(self.spark, [], "doc_id long, tf long, doclen long")
+        empty = self._empty(MATCH_SCHEMA)
         if not seq:
             return empty
         uniq = sorted(set(seq))
@@ -350,7 +415,7 @@ class FtsIndex:
                     {"doc_id": d_ids, "tf": d_tf, "doclen": d_dl})
 
         return self._shard_partitioned(uniq, with_positions=True).mapInPandas(
-            run, schema="doc_id long, tf long, doclen long"
+            run, schema=MATCH_SCHEMA
         )
 
     def _virtual_term_topk(self, matches: DataFrame, k: int) -> DataFrame:
@@ -369,7 +434,7 @@ class FtsIndex:
         matches = matches.localCheckpoint(eager=True)
         df_v = matches.count()
         if df_v == 0:
-            return local_rows_df(self.spark, [], "doc_id long, score double")
+            return self._empty(SCORE_SCHEMA)
         idf = idf_scalar(df_v, self.meta.n_docs)
         scored = matches.select(
             "doc_id",
@@ -436,7 +501,7 @@ class FtsIndex:
                     "doclen": dls[starts],
                 })
 
-        return seg.mapInPandas(run, schema="doc_id long, tf long, doclen long")
+        return seg.mapInPandas(run, schema=MATCH_SCHEMA)
 
     def prefix_topk(self, prefix: str, k: int = 10) -> DataFrame:
         """FTS5 prefix-query ('tok*') top-k BM25 — the prefix is ONE
@@ -455,7 +520,7 @@ class FtsIndex:
         if not self.meta.extras.get("with_positions"):
             raise ValueError("index was built without positions (with_positions=True)")
         seq = self.query_terms_ordered(phrase.lstrip("^"))
-        empty = local_rows_df(self.spark, [], "doc_id long, tf long, doclen long")
+        empty = self._empty(MATCH_SCHEMA)
         if not seq:
             return empty
         uniq = sorted(set(seq))
@@ -486,7 +551,7 @@ class FtsIndex:
                 })
 
         return self._shard_partitioned(uniq, with_positions=True).mapInPandas(
-            run, schema="doc_id long, tf long, doclen long"
+            run, schema=MATCH_SCHEMA
         )
 
     def initial_topk(self, phrase: str, k: int = 10) -> DataFrame:
@@ -606,9 +671,8 @@ class FtsIndex:
             F.sum(F.when(F.col("tf_b") > 0, 1).otherwise(0)).alias("df_b"),
         ).collect()[0]
         df_a, df_b = int(counts["df_a"] or 0), int(counts["df_b"] or 0)
-        empty = local_rows_df(self.spark, [], "doc_id long, score double")
         if df_a == 0 or df_b == 0:
-            return empty
+            return self._empty(SCORE_SCHEMA)
         idf_a = idf_scalar(df_a, self.meta.n_docs)
         idf_b = idf_scalar(df_b, self.meta.n_docs)
         scored = rel.filter("near").select(

@@ -13,13 +13,16 @@ Stdlib-only (http.server) wrapper mirroring the reference API's contracts:
     range — parse parity with routes.py:78-94), streamed in 10 kB chunks
     (routes.py:64-75); 404 text/plain when the id or file is missing.
 
-Scale shape: a serving request never touches more than the paged top-k
-(<= 1000 driver-sized rows — `page()` is a TakeOrderedAndProject, hydrate a
-pruned point-join), and a media request is a single point lookup + file
-stream, so one driver process serves while executors keep the index hot.
-The Spark wiring lives in `spark_search_fn` / `parquet_media_resolver`;
-the HTTP mechanics take plain callables so they are testable without a
-SparkSession.
+Scale shape: concurrent /search requests share their scoring. Requests
+that arrive while a scoring job runs queue up, and the next free request
+thread scores all of them with ONE `FtsIndex.topk_many` job (group commit:
+no batching window, no extra thread; a lone request runs at once). Each
+request then ranks and slices its own <= 1000-hit list on the driver and
+hydrates it with one pruned `doc_id IN (...)` doc_map collect. A media
+request is a single point lookup + file stream, so one driver process
+serves while executors keep the index hot. The Spark wiring lives in
+`spark_search_fn` / `parquet_media_resolver`; the HTTP mechanics take plain
+callables so they are testable without a SparkSession.
 """
 
 from __future__ import annotations
@@ -111,20 +114,87 @@ SearchFn = Callable[[str, int, int], list[dict]]
 MediaResolver = Callable[[int], "MediaMeta | None"]
 
 
+@dataclass
+class _Request:
+    query: str
+    end: int
+    hits: list[tuple[int, float]] | None = None
+    error: BaseException | None = None
+    done: bool = False
+
+
+class _GroupCommit:
+    """Top-`end` (doc_id, score) lists for concurrent requests, scored in
+    shared `topk_many` calls.
+
+    A request joins the pending list. If no batch is in flight, its own
+    thread takes every pending request, scores their distinct queries in
+    one call with k = the largest `end`, then frees the slot and wakes the
+    waiters. Requests arriving meanwhile wait and form the next batch. A
+    failure of the shared call is raised in every request of its batch."""
+
+    def __init__(self, index):
+        self._index = index
+        self._cond = threading.Condition()
+        self._pending: list[_Request] = []
+        self._in_flight = False
+
+    def __call__(self, query: str, end: int) -> list[tuple[int, float]]:
+        req = _Request(query, end)
+        with self._cond:
+            self._pending.append(req)
+            while self._in_flight and not req.done:
+                self._cond.wait()
+            lead = not req.done
+            if lead:
+                batch, self._pending = self._pending, []
+                self._in_flight = True
+        if lead:
+            self._commit(batch)
+        if req.error is not None:
+            raise req.error
+        return req.hits
+
+    def _commit(self, batch: list[_Request]) -> None:
+        try:
+            hits = self._index.topk_many(
+                list(dict.fromkeys(r.query for r in batch)),
+                k=max(r.end for r in batch), mode="any", method="wand")
+            for r in batch:
+                r.hits = hits[r.query]
+        except BaseException as e:
+            for r in batch:
+                r.error = e
+        finally:
+            with self._cond:
+                for r in batch:
+                    r.done = True
+                self._in_flight = False
+                self._cond.notify_all()
+
+
 def spark_search_fn(index, hydrate: bool = True) -> SearchFn:
-    """Serving adapter over FtsIndex: WAND top-`end`, rank slice, optional
-    doc_map hydration. Every relation here is <= `end` (<= 1000) rows."""
-    from .query.search import page
+    """Serving adapter over FtsIndex: WAND top-`end` by group commit (see
+    _GroupCommit), then, per request and outside the shared slot, rank =
+    position in the ordered list, the [start, end) slice (the contract of
+    `ranked()`/`page()`), and optional doc_map hydration merged on the
+    driver. Every relation here is <= `end` (<= 1000) rows."""
+    from pyspark.sql import functions as F
+
+    top = _GroupCommit(index)
+    doc_map = index.doc_map() if hydrate else None
 
     def run(query: str, start: int, end: int) -> list[dict]:
-        hits = page(index.topk(query, k=end, mode="any", method="wand"),
-                    start=start, end=end)
-        if hydrate:
-            hits = index.hydrate(hits)
-        # hydrate() is a join; its output row order is a plan accident, so
-        # re-establish rank order before serializing the response
-        return [r.asDict(recursive=True)
-                for r in hits.orderBy("rank").collect()]
+        hits = [{"doc_id": d, "score": s, "rank": start + i}
+                for i, (d, s) in enumerate(top(query, end)[start:end])]
+        if doc_map is None or not hits:
+            return hits
+        meta = {r["doc_id"]: r.asDict(recursive=True) for r in
+                doc_map.filter(F.col("doc_id").isin([h["doc_id"] for h in hits]))
+                .collect()}
+        # inner-join semantics, as hydrate(): a hit without metadata drops
+        return [{**meta[h["doc_id"]], "score": h["score"], "rank": h["rank"]}
+                for h in hits if h["doc_id"] in meta]
 
     return run
 
