@@ -10,6 +10,10 @@ SparkEnv.createPythonWorker)."""
 
 from __future__ import annotations
 
+import sys
+
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from wise_spark.session import local_rows_df
@@ -73,3 +77,41 @@ def test_broadcast_join_parity(spark):
     old = big.join(F.broadcast(qt_old), "query_id").orderBy("id", "term")
     assert new.schema == old.schema
     assert new.collect() == old.collect()
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason="CPython 3.13 no longer re-reads zips on invalidation")
+def test_python_tasks_skip_rereading_unchanged_zips(spark):
+    """PySpark starts every Python task with importlib.invalidate_caches();
+    stock CPython 3.11/3.12 re-reads every zip on the worker's path there
+    (~17 archives, ~230 ms of CPU per task). Once a worker has imported
+    wise_spark, an unchanged zip is not read again. The kernel primes each
+    importer with one call, as the worker's first task does, then counts
+    the directory reads of the next call."""
+
+    def count_rereads(batches):
+        import importlib
+        import zipimport
+
+        import wise_spark  # noqa: F401  installs the worker hook
+
+        importlib.invalidate_caches()
+        stock, calls = zipimport._read_directory, []
+
+        def counting(path):
+            calls.append(path)
+            return stock(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = stock
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"reads": [len(calls)]})
+
+    out = (spark.range(0, 4, 1, 4)
+           .mapInPandas(count_rereads, "reads long").collect())
+    assert len(out) == 4
+    assert [r["reads"] for r in out] == [0, 0, 0, 0]

@@ -33,3 +33,9 @@ B = 0.75
 IDF_FLOOR = 1e-6  # SQLite FTS5 floors non-positive idf at 1e-6 (verified
 # empirically against stdlib sqlite3 FTS5; reference relies on FTS5's
 # default bm25() — /root/reference/src/index/sqlite_search_index.py:110-113)
+
+# every Python worker imports this package when it unpickles an engine
+# kernel; from then on its tasks skip re-reading unchanged zips
+from .deploy import install_worker_import_cache  # noqa: E402
+
+install_worker_import_cache()

@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analyzer import tokenize_text
-from ..query.bm25 import idf_scalar
+from ..query.bm25 import SCORE_SCHEMA, idf_scalar
 from ..session import local_rows_df
 from .build import IndexMeta, _concat_batches, _parquet_footer_stats
 from .wand import score_shard_taat, score_shard_wand
@@ -116,9 +116,8 @@ def _shard_phrase_occurrences(rows: dict, seq: list[str], prune: bool = True,
 DF_CACHE_MAX_TERMS = 5_000_000          # ~100s of MB of driver heap
 SEGMENT_CACHE_MAX_BYTES = 8 << 30       # executor storage-memory budget
 
-# result relations: scored hits, and the (doc_id, tf, doclen) virtual-term
-# matches the phrase/prefix/initial scans emit
-SCORE_SCHEMA = "doc_id long, score double"
+# the (doc_id, tf, doclen) virtual-term matches the phrase/prefix/initial
+# scans emit
 MATCH_SCHEMA = "doc_id long, tf long, doclen long"
 
 

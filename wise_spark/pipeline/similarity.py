@@ -24,6 +24,24 @@ from pyspark.sql import DataFrame, functions as F
 from ..session import local_rows_df
 
 
+def _topk_schema(qid_type: str, id_type: str) -> str:
+    return f"query_id {qid_type}, vec_id {id_type}, cosine double, rank int"
+
+
+def _pairs_schema(id_type: str) -> str:
+    return f"vec_id_a {id_type}, vec_id_b {id_type}, cosine double"
+
+
+def _no_neighbors(items: DataFrame, queries: DataFrame, id_col: str) -> DataFrame:
+    """Empty top-k result of an empty corpus. query_id types come from the
+    QUERIES schema — the two sides may use different id types, and the
+    empty-edge schema must match the non-empty result or per-shard unions
+    break only on empty shards."""
+    return local_rows_df(items.sparkSession, [], _topk_schema(
+        queries.schema[id_col].dataType.simpleString(),
+        items.schema[id_col].dataType.simpleString()))
+
+
 def _two_phase_topk(scored: DataFrame, k: int) -> DataFrame:
     """Per-query exact top-k of (query_id, vec_id, cosine) WITHOUT funneling
     the whole scored relation through one partition.
@@ -61,7 +79,7 @@ def _two_phase_topk(scored: DataFrame, k: int) -> DataFrame:
     )
     return reduced.groupBy("query_id").applyInPandas(
         final_topk,
-        schema=f"query_id {qid_type}, vec_id {id_type}, cosine double, rank int",
+        schema=_topk_schema(qid_type, id_type),
     )
 
 
@@ -180,13 +198,7 @@ def lsh_cosine_topk(
     join is a broadcast equi-join on the bucket key, then exact rerank."""
     mat = _plane_matrix(items, vec_col, n_planes, n_tables, seed)
     if mat is None:   # empty corpus: no neighbors for any query
-        # query_id types from the QUERIES schema — the two sides may use
-        # different id types, and the empty-edge schema must match the
-        # non-empty result or per-shard unions break only on empty shards
-        q_type = queries.schema[id_col].dataType.simpleString()
-        id_type = items.schema[id_col].dataType.simpleString()
-        return local_rows_df(
-            items.sparkSession, [], f"query_id {q_type}, vec_id {id_type}, cosine double, rank int")
+        return _no_neighbors(items, queries, id_col)
     qb = _sign_buckets(queries, id_col, vec_col, "query_id", mat, n_planes, n_tables)
     ib = _sign_buckets(items, id_col, vec_col, "vec_id", mat, n_planes, n_tables)
     cand = (
@@ -228,8 +240,7 @@ def _exact_neardup_blocked(
     n = items.count()
     id_type = items.schema[id_col].dataType.simpleString()
     if n == 0:
-        return local_rows_df(
-            items.sparkSession, [], f"vec_id_a {id_type}, vec_id_b {id_type}, cosine double")
+        return local_rows_df(items.sparkSession, [], _pairs_schema(id_type))
     n_blocks = max(1, -(-n // block_size))
 
     src = items.select(
@@ -299,7 +310,7 @@ def _exact_neardup_blocked(
 
     raw = exploded.groupBy("pi", "pj").applyInPandas(
         pair_kernel,
-        schema=f"vec_id_a {id_type}, vec_id_b {id_type}, cosine double",
+        schema=_pairs_schema(id_type),
     )
     return (
         raw.select(
@@ -363,8 +374,7 @@ def cosine_neardup_pairs(
         mat = _plane_matrix(items, vec_col, n_planes, n_tables, seed)
         id_type = items.schema[id_col].dataType.simpleString()
         if mat is None:   # empty corpus: no pairs
-            return local_rows_df(
-                items.sparkSession, [], f"vec_id_a {id_type}, vec_id_b {id_type}, cosine double")
+            return local_rows_df(items.sparkSession, [], _pairs_schema(id_type))
         # materialize the signatures ONCE and alias for both join sides:
         # two independent _sign_buckets calls re-ran the full upstream plan
         # (embedding production + the matmul) per side — the same
@@ -479,12 +489,7 @@ def ivf_cosine_topk(
     """
     if centroids is None:
         if items.select(vec_col).first() is None:   # empty corpus: no lists
-            q_type = queries.schema[id_col].dataType.simpleString()
-            id_type = items.schema[id_col].dataType.simpleString()
-            return local_rows_df(
-                items.sparkSession, [],
-                f"query_id {q_type}, vec_id {id_type}, cosine double, rank int",
-            )
+            return _no_neighbors(items, queries, id_col)
         centroids = train_ivf_centroids(items, n_lists, vec_col, seed=seed)
     C = np.asarray(centroids, dtype=np.float64)
     C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)

@@ -22,6 +22,9 @@ import numpy as np
 
 from .. import B, IDF_FLOOR, K1
 
+# every scorer's result relation: scored hits, unsorted
+SCORE_SCHEMA = "doc_id long, score double"
+
 
 def idf(df: np.ndarray | float, n_docs: int) -> np.ndarray | float:
     """FTS5 idf with the 1e-6 floor. Accepts scalars or numpy arrays."""

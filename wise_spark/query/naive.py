@@ -29,7 +29,7 @@ from ..analyzer import tokenize_text
 from ..analyzer.tokenizer import term_counts_udf
 from ..pipeline.text import rebalance_narrow_scan
 from ..session import local_rows_df
-from .bm25 import idf_col, tf_component_col
+from .bm25 import SCORE_SCHEMA, idf_col, tf_component_col
 
 
 def _tf_relation(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -160,7 +160,7 @@ def score_query(corpus: TokenizedCorpus, query: str, mode: str = "all") -> DataF
     terms = sorted(set(tokenize_text(query)))
     spark = corpus.tf.sparkSession
     if not terms:
-        return local_rows_df(spark, [], "doc_id long, score double")
+        return local_rows_df(spark, [], SCORE_SCHEMA)
     hits = corpus.tf.filter(F.col("term").isin(terms))
     # exact df per query term; tiny (<= |terms| rows) -> broadcast
     dfs = hits.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -219,9 +219,7 @@ def score_queries(
             rows.append((qid, t))
     spark = corpus.tf.sparkSession
     if not rows:
-        return local_rows_df(
-            spark, [], "query_id long, doc_id long, score double"
-        )
+        return local_rows_df(spark, [], "query_id long, " + SCORE_SCHEMA)
     from collections import Counter
 
     n_terms = Counter(qid for qid, _ in rows)

@@ -339,8 +339,8 @@ class _Handler(BaseHTTPRequestHandler):
                 self._json(403, {"message": message})
                 return
         if end == 0:
-            # empty corpus: page() requires end > 0, and there is nothing
-            # to rank anyway — answer every query with an empty result
+            # an empty corpus clamped end to 0, so every page is empty:
+            # answer each query with [] and start no Spark job for it
             self._json(200, {"results": {q: [] for q in queries}})
             return
         results = {q: self.search_fn(q, start, max(start, end))
