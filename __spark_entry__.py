@@ -171,7 +171,7 @@ def _get_index(spark: SparkSession, sf_dir: str):
     if not os.path.exists(os.path.join(d, "meta.json")):
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
         build_index(docs, d, url_col="source", n_shards=8, n_buckets=8,
-                    n_salts=2, n_waves=2, with_positions=True)
+                    n_waves=2, with_positions=True)
     # ONE serving-mode FtsIndex per (session, DATA): cache=True pins the
     # (size-guarded) segment relation shard-partitioned in executor memory
     # and the term->df stats in a driver dict, so each query is a single

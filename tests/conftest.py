@@ -26,3 +26,20 @@ def corpus_pdf() -> pd.DataFrame:
 @pytest.fixture(scope="session")
 def corpus_sdf(spark, corpus_pdf):
     return spark.createDataFrame(corpus_pdf[["doc_id", "url", "text", "lang"]])
+
+
+@pytest.fixture(scope="session")
+def segment_rows():
+    """index_dir -> every segment row (wave, term, shard, varbyte payloads,
+    block maxima, ...) as plain python values, in (term, shard) order: two
+    indexes with equal lists hold byte-identical postings."""
+    import os
+
+    import pyarrow.dataset as ds
+
+    def rows(index_dir: str) -> list[dict]:
+        t = ds.dataset(os.path.join(index_dir, "segments"), format="parquet",
+                       partitioning="hive").to_table()
+        return sorted(t.to_pylist(), key=lambda r: (r["term"], r["shard"]))
+
+    return rows

@@ -8,6 +8,7 @@ recall@k."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -17,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wise_spark.data.queries import reference_queries
-from wise_spark.index import FtsIndex, build_index
+from wise_spark.index import FtsIndex, IndexMeta, build_index
 from wise_spark.oracle import PandasBM25Oracle
 
 QUERIES = [q for _, q in reference_queries(vocab_size=2000, n=20)]
@@ -27,7 +28,7 @@ QUERIES = [q for _, q in reference_queries(vocab_size=2000, n=20)]
 def index(spark, corpus_sdf, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("fts_index"))
     meta = build_index(
-        corpus_sdf, d, url_col="url", n_shards=8, n_buckets=8, n_salts=3, n_waves=3
+        corpus_sdf, d, url_col="url", n_shards=8, n_buckets=8, n_waves=3
     )
     return FtsIndex(spark, d, meta)
 
@@ -42,6 +43,40 @@ def _check(got_pdf, want_pdf, k, msg):
     want = want_pdf.head(k).reset_index(drop=True)
     assert got["doc_id"].tolist() == want["doc_id"].tolist(), msg
     np.testing.assert_allclose(got["score"], want["score"], atol=1e-9, err_msg=msg)
+
+
+def test_meta_load_ignores_legacy_n_salts(tmp_path):
+    """A meta.json written while builds still stored the unused n_salts
+    (e.g. a persisted entry index) loads into the same IndexMeta."""
+    meta = IndexMeta(n_docs=3, avgdl=2.0, total_tokens=6, n_terms=4,
+                     n_shards=2, n_buckets=2, extras={"with_positions": True})
+    meta.save(str(tmp_path))
+    path = tmp_path / "meta.json"
+    legacy = json.loads(path.read_text())
+    legacy["n_salts"] = 2
+    path.write_text(json.dumps(legacy))
+    assert IndexMeta.load(str(tmp_path)) == meta
+
+
+@pytest.mark.parametrize("mode", ["all", "any"])
+def test_kernel_empty_results_are_typed(mode):
+    """Every shard kernel returns int64 doc_id / float64 score, also when it
+    finds nothing: no shard rows, or ('all') terms that share no doc."""
+    from wise_spark.index.codec import encode_postings
+    from wise_spark.index.wand import score_shard_taat, score_shard_wand
+
+    def row(term, ids):
+        ids = np.asarray(ids, np.int64)
+        return {"term": term, **encode_postings(
+            ids, np.ones(ids.size, np.int32), np.full(ids.size, 3, np.int32), 3.0)}
+
+    disjoint = pd.DataFrame([row("a", [1, 2]), row("b", [5, 6])])
+    idfs = {"a": 1.0, "b": 1.0}
+    typed = {"doc_id": np.dtype(np.int64), "score": np.dtype(np.float64)}
+    for pdf in (disjoint.iloc[:0], disjoint):
+        for out in (score_shard_taat(pdf, idfs, 3.0, 2, mode),
+                    score_shard_wand(pdf, idfs, 3.0, 2, mode, 10)):
+            assert out.dtypes.to_dict() == typed
 
 
 def test_meta_exact_stats(index, oracle):
@@ -136,7 +171,7 @@ def test_resume_skips_completed_and_is_identical(spark, corpus_sdf, tmp_path, in
     d = str(tmp_path / "idx_resume")
     with pytest.raises(RuntimeError, match="injected failure"):
         build_index(
-            corpus_sdf, d, url_col="url", n_shards=8, n_buckets=8, n_salts=3,
+            corpus_sdf, d, url_col="url", n_shards=8, n_buckets=8,
             n_waves=3, fail_after_waves=1,
         )
     # resume: completes the remaining waves without redoing wave-0
@@ -152,7 +187,7 @@ def test_resume_skips_completed_and_is_identical(spark, corpus_sdf, tmp_path, in
     }
     time.sleep(1.1)
     meta2 = build_index(
-        corpus_sdf, d, url_col="url", n_shards=8, n_buckets=8, n_salts=3, n_waves=3
+        corpus_sdf, d, url_col="url", n_shards=8, n_buckets=8, n_waves=3
     )
     after = {
         p: os.path.getmtime(os.path.join(dp, p))
@@ -189,7 +224,7 @@ def test_resume_after_crash_between_publish_and_lineage(
         real_append(spark_, index_dir, rows)
 
     d = str(tmp_path / "idx_publish_crash")
-    kw = dict(url_col="url", n_shards=8, n_buckets=8, n_salts=3, n_waves=3)
+    kw = dict(url_col="url", n_shards=8, n_buckets=8, n_waves=3)
     monkeypatch.setattr(build_mod, "_append_lineage", crash_on_first_segments_row)
     with pytest.raises(RuntimeError, match="between publish and lineage"):
         build_index(corpus_sdf, d, **kw)

@@ -1,27 +1,31 @@
-"""Incremental indexing: extend_index(old, delta) must be rank-identical —
-indeed score-identical — to a from-scratch build over the union corpus
-(block maxima are re-encoded under the merged avgdl)."""
+"""Incremental indexing: extend_index(old, delta) runs Stage A on the delta
+and the build's Stages B-D over the base's tokens plus the delta's, so the
+extended index is the one a from-scratch build over the union corpus writes
+— segment for segment, byte for byte."""
 
 from __future__ import annotations
+
+import json
+import os
+import shutil
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from wise_spark.data.queries import reference_queries
-from wise_spark.index import FtsIndex, build_index
-from wise_spark.index.merge import extend_index, merge_indexes
+from wise_spark.index import FtsIndex, build_index, extend_index
 
 QUERIES = [q for _, q in reference_queries(vocab_size=2000, n=10)]
 
 
-def test_extend_equals_full_rebuild(spark, corpus_sdf, tmp_path):
+def test_extend_equals_full_rebuild(spark, corpus_sdf, tmp_path, segment_rows):
     base = corpus_sdf.filter("doc_id < 200")
     delta = corpus_sdf.filter("doc_id >= 200")
     d_base = str(tmp_path / "base")
     d_full = str(tmp_path / "full")
     d_merged = str(tmp_path / "merged")
-    kw = dict(url_col="url", n_shards=8, n_buckets=8, n_salts=2, n_waves=2)
+    kw = dict(url_col="url", n_shards=8, n_buckets=8, n_waves=2)
     build_index(base, d_base, **kw)
     build_index(corpus_sdf, d_full, **kw)
     meta = extend_index(spark, d_base, delta, d_merged, url_col="url")
@@ -30,6 +34,12 @@ def test_extend_equals_full_rebuild(spark, corpus_sdf, tmp_path):
     assert meta.n_docs == full.meta.n_docs
     assert meta.avgdl == full.meta.avgdl
     assert meta.n_terms == full.meta.n_terms
+    # the extended segments equal the scratch build's row for row on every
+    # column: varbyte payloads, block maxima, wave, max_tfc, sum_tf
+    rows_full, rows_merged = segment_rows(d_full), segment_rows(d_merged)
+    assert {r["wave"] for r in rows_full} == {0, 1}
+    assert len(rows_merged) == len(rows_full)
+    assert rows_merged == rows_full
     # the merged terms table equals the scratch build's, row for row
     cols = ["term", "df", "max_tfc"]
     ta = full._terms.select(*cols).toPandas().sort_values("term", ignore_index=True)
@@ -43,26 +53,53 @@ def test_extend_equals_full_rebuild(spark, corpus_sdf, tmp_path):
             np.testing.assert_allclose(a["score"], b["score"], atol=0, err_msg=q)
     # doc_map covers the union
     assert merged.doc_map().count() == 300
+    # the extended index keeps the base's layout and its own finished tokens
+    # checkpoint, so it can be extended in turn
+    with open(os.path.join(d_base, "layout.json")) as f:
+        base_layout = json.load(f)
+    with open(os.path.join(d_merged, "layout.json")) as f:
+        assert json.load(f) == base_layout
+    assert os.path.exists(os.path.join(d_merged, "tokens", "_SUCCESS"))
 
 
-def test_merge_rejects_overlap_and_shard_mismatch(spark, corpus_sdf, tmp_path):
-    a = str(tmp_path / "a")
-    b = str(tmp_path / "b")
-    c = str(tmp_path / "c")
-    build_index(corpus_sdf.filter("doc_id < 100"), a, n_shards=8, n_buckets=8, n_waves=1)
-    build_index(corpus_sdf.filter("doc_id < 50"), b, n_shards=8, n_buckets=8, n_waves=1)
-    with pytest.raises(ValueError, match="overlap"):
-        merge_indexes(spark, a, b, str(tmp_path / "out1"))
-    build_index(corpus_sdf.filter("doc_id >= 100"), c, n_shards=4, n_buckets=8, n_waves=1)
-    with pytest.raises(ValueError, match="shard count"):
-        merge_indexes(spark, a, c, str(tmp_path / "out2"))
+@pytest.fixture(scope="module")
+def small_base(spark, corpus_sdf, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("extend_base") / "base")
+    build_index(corpus_sdf.filter("doc_id < 100"), d, n_shards=8, n_buckets=8,
+                n_waves=1)
+    return d
+
+
+@pytest.mark.parametrize("case,match", [
+    pytest.param("overlapping_ids", "overlap", id="overlapping_ids"),
+    pytest.param("out_dir_is_base", "out_dir must differ", id="out_dir_is_base"),
+    pytest.param("base_without_tokens", "no finished", id="base_without_tokens"),
+])
+def test_extend_rejects(spark, corpus_sdf, tmp_path, small_base, case, match):
+    base, out = small_base, str(tmp_path / "out")
+    delta = corpus_sdf.filter("doc_id >= 100")
+    if case == "overlapping_ids":
+        delta = corpus_sdf.filter("doc_id >= 50")
+    elif case == "out_dir_is_base":
+        out = base
+    else:  # e.g. an index written by the old merge, which kept no tokens
+        base = str(tmp_path / "tokenless")
+        shutil.copytree(small_base, base)
+        shutil.rmtree(os.path.join(base, "tokens"))
+    with pytest.raises(ValueError, match=match):
+        extend_index(spark, base, delta, out)
+    # rejected before anything was written; the base is intact
+    if out != base:
+        assert not os.path.exists(out)
+    assert FtsIndex.load(spark, small_base).meta.n_docs == 100
+    assert os.path.exists(os.path.join(small_base, "tokens", "_SUCCESS"))
 
 
 def test_extend_preserves_positions(spark, corpus_sdf, tmp_path):
-    """An extend of a positional index must keep with_positions — the delta
-    build inherits the base's flag, so phrase queries work over BOTH old and
-    new documents after the extend (round-2 regression: the delta dropped
-    positions and merge computed A AND B = False)."""
+    """An extend of a positional index must keep with_positions — the
+    delta's Stage A runs under the base's flag, so phrase queries work over
+    BOTH old and new documents after the extend (round-2 regression: the
+    delta dropped positions and the extended index lost them)."""
     base = corpus_sdf.filter("doc_id < 200")
     delta = corpus_sdf.filter("doc_id >= 200")
     d_base = str(tmp_path / "pbase")

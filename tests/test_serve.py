@@ -389,7 +389,7 @@ def test_spark_search_fn_end_to_end(spark, corpus_sdf, tmp_path_factory):
 
     d = str(tmp_path_factory.mktemp("serve_idx"))
     meta = build_index(corpus_sdf, d, url_col="url", n_shards=4, n_buckets=4,
-                       n_salts=2, n_waves=1)
+                       n_waves=1)
     idx = FtsIndex(spark, d, meta, cache=True)
     qa, qb = "nababa pebaba", "pebaba"
 

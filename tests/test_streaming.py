@@ -27,7 +27,9 @@ def staged_input(spark, tmp_path_factory):
     return d
 
 
-def test_stream_builds_versions_rank_identical(spark, staged_input, tmp_path, corpus_sdf):
+def test_stream_builds_versions_rank_identical(
+    spark, staged_input, tmp_path, corpus_sdf, segment_rows,
+):
     root = str(tmp_path / "stream_idx")
     stream_build_index(
         spark, staged_input, root, SCHEMA, url_col="url",
@@ -46,6 +48,9 @@ def test_stream_builds_versions_rank_identical(spark, staged_input, tmp_path, co
         b = full.topk(q, k=10, mode="any").toPandas()
         assert a["doc_id"].tolist() == b["doc_id"].tolist(), q
         np.testing.assert_allclose(a["score"], b["score"], atol=0)
+    # v1 and v2 are extends of the version before: each is the scratch
+    # build over every batch so far, down to the segment bytes
+    assert segment_rows(cur) == segment_rows(full_dir)
 
     # resume: re-running the stream over the same input is a no-op (offsets
     # are checkpointed) — no new version appears

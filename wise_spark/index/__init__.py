@@ -6,9 +6,8 @@ from .codec import (
     decode_postings,
     BLOCK,
 )
-from .build import build_index, IndexMeta
+from .build import build_index, extend_index, IndexMeta
 from .reader import FtsIndex
-from .merge import merge_indexes, extend_index
 
 __all__ = [
     "vb_encode",
@@ -18,8 +17,7 @@ __all__ = [
     "decode_postings",
     "BLOCK",
     "build_index",
+    "extend_index",
     "IndexMeta",
     "FtsIndex",
-    "merge_indexes",
-    "extend_index",
 ]

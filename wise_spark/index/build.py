@@ -22,6 +22,12 @@ for the same reason, /root/reference/extract-features.py:320,400-405):
                      parquet min/max pruning on query terms
   meta.json          written LAST = build-complete marker
 
+Stages B-D are a pure function of the tokens checkpoint, so extend_index
+(a new snapshot over base + delta documents) is Stage A on the delta only,
+appended to a copy of the base's tokens, then Stages B-D over the union:
+the same stages, the same posting encoder, the same bytes as a
+from-scratch build over the union.
+
 Skew handling (north_rule): the posting shuffle key is (shard, bucket) where
 shard = doc_id % n_shards — a head term's postings split across ALL shards —
 and phase 1 packs PARTIAL runs per (shard, term) inside each input split
@@ -41,6 +47,7 @@ import json
 import os
 import shutil
 import time
+from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
 
 import numpy as np
@@ -142,7 +149,6 @@ class IndexMeta:
     n_terms: int
     n_shards: int
     n_buckets: int
-    n_salts: int
     k1: float = 1.2
     b: float = 0.75
     version: int = 1
@@ -161,7 +167,9 @@ class IndexMeta:
     @classmethod
     def load(cls, index_dir: str) -> "IndexMeta":
         with open(os.path.join(index_dir, "meta.json")) as f:
-            return cls(**json.load(f))
+            d = json.load(f)
+        d.pop("n_salts", None)  # stored by older builds, read by nothing
+        return cls(**d)
 
 
 def _done(path: str) -> bool:
@@ -534,8 +542,7 @@ def _merge_partition_fn(avgdl: float, with_positions: bool = False):
         tfs = rec_s["tf"]
         dls = rec_s["dl"]
         # positions-only gather: ids/tfs/dls are already reordered above (key
-        # arithmetic + the packed rec gather) — a full _permute here would
-        # redo three O(n) random gathers just to discard them
+        # arithmetic + the packed rec gather)
         pos = (
             _permute_positions(tfs_flat, pos_flat, order)
             if with_positions else None
@@ -666,220 +673,191 @@ def _permute_positions(tfs, pos, order):
     return pos[gather]
 
 
-def _permute(ids, tfs, dls, pos, order):
-    """Reorder postings by `order`; position blocks move with their posting
-    (see _permute_positions)."""
-    new_pos = _permute_positions(tfs, pos, order) if pos is not None else None
-    return ids[order], tfs[order], dls[order], new_pos
+def _round_up(n: int, par: int) -> int:
+    """`n` rounded UP to a multiple of the cluster's slot count, so the last
+    scheduling round of a stage is full (81 tasks on 4 slots would leave 3
+    slots idle for a whole 21st round)."""
+    p = max(1, par)
+    return -(-n // p) * p
 
 
-def build_index(
-    docs: DataFrame,
-    index_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    url_col: str | None = None,
-    n_shards: int | None = None,
-    n_buckets: int = 32,
-    n_salts: int = 4,
-    n_waves: int | None = None,
-    resume: bool = True,
-    with_positions: bool = False,
-    fail_after_waves: int | None = None,  # test hook: simulate a mid-build kill
-) -> IndexMeta:
-    spark = docs.sparkSession
-    os.makedirs(index_dir, exist_ok=True)
+def _split_target(total_bytes: int, cap: int, par: int) -> int:
+    """spark.sql.files.maxPartitionBytes that cuts a `total_bytes` scan into
+    splits of at most ~`cap` bytes, with the split COUNT rounded up to a slot
+    multiple (see _round_up)."""
+    n_splits = _round_up(max(1, par, -(-total_bytes // cap)), par)
+    return max(4 << 20, -(-total_bytes // n_splits) + (1 << 20))
 
-    tokens_path = os.path.join(index_dir, "tokens")
-    doc_map_path = os.path.join(index_dir, "doc_map")
-    segments_path = os.path.join(index_dir, "segments")
-    terms_path = os.path.join(index_dir, "terms")
 
-    # resolve auto-sized params BEFORE the checkpoint guard so the guard can
-    # compare the actual data shape a resume would inherit
-    par = spark.sparkContext.defaultParallelism
-    if n_shards is None or n_waves is None:
-        n_docs_hint = docs.count()
-        if n_shards is None:
-            n_shards = max(4, min(4096, int(n_docs_hint // 250_000) + 4))
-        if n_waves is None:
-            # waves bound Stage C's per-job working set and give per-wave
-            # resume granularity; below ~20M docs one wave is the right job
-            # shape (extra waves just multiply stage fixed costs), at 10^12
-            # docs this yields the capped 64 passes of ~1.5% of the corpus
-            n_waves = max(1, min(64, int(n_docs_hint // 20_000_000) + 1))
-    n_waves = min(n_waves, n_shards)
-
-    # checkpoint guard: a partial build from an older code version OR from
-    # different build parameters must rebuild, not resume — resuming across
-    # an incompatible on-disk shape mis-reads the checkpoint (e.g. a tokens
-    # checkpoint without positions resumed with with_positions=True indexes
-    # an empty positions array in every Stage C task; a complete index
-    # resumed with new params would skip every stage yet rewrite meta.json
-    # claiming capabilities/shape the baked data lacks)
-
-    # column bindings are part of the checkpoint identity: a tokens
-    # checkpoint baked from text_col="body" resumed with text_col="title"
-    # would silently build the whole index from the wrong column
-    build_params = {"n_shards": n_shards, "n_buckets": n_buckets,
-                    "n_waves": n_waves,
-                    "with_positions": bool(with_positions),
-                    "id_col": id_col, "text_col": text_col,
-                    "url_col": url_col}
-    layout_path = os.path.join(index_dir, "layout.json")
-    found_ver, found_params = None, None
-    if os.path.exists(layout_path):
-        try:
-            with open(layout_path) as f:
-                _marker = json.load(f)
-            found_ver = _marker.get("layout")
-            found_params = _marker.get("params")
-        except (ValueError, OSError):
-            pass  # torn/unreadable marker == no marker: rebuild, don't brick
-    if found_ver != LAYOUT_VERSION or found_params != build_params:
-        stale = [
-            p for p in (tokens_path, doc_map_path, segments_path, terms_path,
-                        os.path.join(index_dir, "lineage"),
-                        # meta.json is the build-complete marker: leaving a
-                        # stale one would let FtsIndex.load (and the
-                        # streaming publisher) treat a half-rebuilt dir as
-                        # a complete index with the OLD stats
-                        os.path.join(index_dir, "meta.json"))
-            if os.path.exists(p)
-        ]
-        if stale:
-            # destructive: never wipe silently — the user may be pointing at
-            # a complete, working index from an older code version
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "build_index: on-disk layout %r / params %r at %s do not "
-                "match current layout %r / params %r — removing stale index "
-                "pieces %s and rebuilding from scratch",
-                found_ver, found_params, index_dir, LAYOUT_VERSION,
-                build_params, [os.path.basename(p) for p in stale],
-            )
-        for p in stale:
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-            else:  # rmtree raises (and ignores) on plain files like meta.json
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
-        # write the marker only AFTER the cleanup succeeded, so a crash
-        # mid-wipe re-enters this branch instead of resuming over debris;
-        # tmp+rename so a crash MID-WRITE can never leave a torn JSON that
-        # bricks every later load of this dir
-        _tmp = layout_path + ".tmp"
-        with open(_tmp, "w") as f:
-            json.dump({"layout": LAYOUT_VERSION, "params": build_params}, f)
-        os.replace(_tmp, layout_path)
-
-    # ---- Stage A: tokenize ONCE -> flat tf rows, partitioned by wave --------
-    # No shuffle: the flat mapInPandas kernel emits final rows and each map
-    # task writes its own per-wave files (n_waves files per task). Wave
-    # pruning in Stage C replaces the old per-shard partition pruning.
-    if not (resume and _done(tokens_path)):
-        t0 = time.time()
-        sel = [F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")]
-        if url_col:
-            sel.append(F.col(url_col).alias("url"))
-        # A single-row-group source file cannot be split by the planner (row
-        # groups are the atomic scan unit), which would run the whole Stage A
-        # tokenize kernel on one core; the guard no-ops on wide sources, so
-        # the split-count tuning below stays in charge at scale.
-        from ..pipeline.text import rebalance_narrow_scan
-
-        docs = rebalance_narrow_scan(docs)
-        tf = docs.select(*sel).mapInPandas(
-            _doc_tokens_fn("doc_id", "text", "url" if url_col else None,
-                            n_shards, n_waves, with_positions=with_positions),
-            schema=TOKENS_WAVE_SCHEMA,
-        )
-        # Size the tokenize scan's splits so the task count is an exact
-        # multiple of the cluster parallelism. Spark's own planner targets
-        # totalBytes/defaultParallelism capped at 128MB — the cap can land
-        # one task PAST a full round (measured: a 620MB-effective corpus on
-        # 4 slots planned 5 tasks, so round two ran 1 task with 3 idle
-        # cores, +30% stage wall), and finer-than-needed splits pay a
-        # per-task python/writer handshake (~0.2-0.6s each, measured).
-        # Keeping Spark's 128MB ceiling but rounding the split COUNT up to
-        # a multiple of `par` removes the straggler round at every scale.
-        # Conf changes bind at action time, scoped to exactly this write.
-        tune: dict[str, str] = {}
-        try:
-            src_files = [
-                f[len("file:"):] if f.startswith("file:") else f
-                for f in docs.inputFiles()
-            ]
-            open_cost = 1 << 20
-            src_bytes = (
-                sum(os.path.getsize(f) for f in src_files)
-                + open_cost * len(src_files)
-            )
-        except Exception:
-            src_bytes = 0  # non-file source (e.g. in-memory test frames)
-        if src_bytes:
-            p = max(1, par)
-            n_splits = -(-max(p, -(-src_bytes // (128 << 20))) // p) * p
-            target = max(4 << 20, -(-src_bytes // n_splits) + (1 << 20))
-            tune = {"spark.sql.files.maxPartitionBytes": str(target),
-                    "spark.sql.files.openCostInBytes": str(open_cost)}
-        old = {k: spark.conf.get(k, None) for k in tune}
-        for k, v in tune.items():
-            spark.conf.set(k, v)
-        try:
-            # parquet row groups are the atomic scan-split unit: coarse
-            # tokenize tasks must not produce coarse ROW GROUPS, or Stage
-            # C's bounded ~16MB pack splits degenerate (a split can't stop
-            # mid-row-group, so one 84MB-row-group file = one fat task that
-            # decompresses it whole: measured +47s run_sum, 11.7s GC).
-            (tf.write.mode("overwrite")
-             .option("parquet.block.size", str(SEG_TASK_TOKEN_BYTES * 4))
-             .partitionBy("wave").parquet(tokens_path))
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-        _append_lineage(
-            spark, index_dir,
-            [("tokens", "-", "done", 0, 0, int((time.time() - t0) * 1000))],
-        )
-
-    # ---- Stage B: doc_map = a column projection of the tokens checkpoint ----
-    # Map-only: parquet column pruning skips the heavy terms/tfs columns; no
-    # shuffle, no second pass over the text (every doc has exactly one row).
-    if not (resume and _done(doc_map_path)):
-        t0 = time.time()
-        cols = ["doc_id", "doclen"] + (["url"] if url_col else [])
-        # small splits: the projection reads 3 thin columns of a fat
-        # checkpoint — default 128MB splits leave most executor slots idle
-        old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-        spark.conf.set("spark.sql.files.maxPartitionBytes",
-                       str(SEG_TASK_TOKEN_BYTES * 4))
-        try:
-            dm = spark.read.parquet(tokens_path).select(*cols)
-            dm.write.mode("overwrite").parquet(doc_map_path)
-        finally:
-            if old_mpb is None:
-                spark.conf.unset("spark.sql.files.maxPartitionBytes")
+@contextmanager
+def _sql_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set session confs for the jobs run inside the block, then restore
+    them. Split planning happens at action time, so a scan-sizing conf set
+    here applies to exactly the write inside."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
             else:
-                spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
-        _append_lineage(
-            spark, index_dir,
-            [("doc_map", "-", "done", 0, 0, int((time.time() - t0) * 1000))],
-        )
-    n_docs, total_tokens = _corpus_stats(spark, doc_map_path)
-    avgdl = (total_tokens / n_docs) if n_docs else 0.0
+                spark.conf.set(k, v)
 
-    # ---- Stage C: two-phase posting build, per wave --------------------------
+
+# every piece a build writes; a layout change (or an extend into the dir)
+# removes exactly these. meta.json is the build-complete marker: leaving a
+# stale one would let FtsIndex.load (and the streaming publisher) treat a
+# half-rebuilt dir as a complete index with the OLD stats
+_INDEX_PIECES = ("tokens", "doc_map", "segments", "terms", "lineage", "meta.json")
+
+
+def _read_layout(index_dir: str) -> tuple:
+    """(layout version, build params) from index_dir's layout.json."""
+    try:
+        with open(os.path.join(index_dir, "layout.json")) as f:
+            marker = json.load(f)
+        return marker.get("layout"), marker.get("params")
+    except (ValueError, OSError):
+        return None, None  # missing/torn/unreadable marker == no marker
+
+
+def _reset_index_dir(index_dir: str, params: dict) -> None:
+    """Remove every index piece in index_dir, then write the layout marker
+    for `params` — only AFTER the cleanup succeeded, so a crash mid-wipe
+    re-enters the cleanup instead of resuming over debris; tmp+rename so a
+    crash MID-WRITE can never leave a torn JSON that bricks later loads."""
+    stale = [p for p in (os.path.join(index_dir, n) for n in _INDEX_PIECES)
+             if os.path.exists(p)]
+    if stale:
+        # destructive: never wipe silently — the user may be pointing at
+        # a complete, working index from an older code version
+        import logging
+
+        found_ver, found_params = _read_layout(index_dir)
+        logging.getLogger(__name__).warning(
+            "index dir %s: removing index pieces %s (on-disk layout %r / "
+            "params %r) to write layout %r / params %r from scratch",
+            index_dir, [os.path.basename(p) for p in stale], found_ver,
+            found_params, LAYOUT_VERSION, params,
+        )
+    for p in stale:
+        if os.path.isdir(p):
+            shutil.rmtree(p, ignore_errors=True)
+        else:  # rmtree raises (and ignores) on plain files like meta.json
+            try:
+                os.remove(p)
+            except OSError:
+                pass
+    layout_path = os.path.join(index_dir, "layout.json")
+    tmp = layout_path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump({"layout": LAYOUT_VERSION, "params": params}, f)
+    os.replace(tmp, layout_path)
+
+
+def _write_tokens(docs: DataFrame, index_dir: str, params: dict, mode: str) -> None:
+    """Stage A: tokenize `docs` ONCE -> packed doc rows, partitioned by wave.
+    No shuffle: the mapInPandas kernel emits final rows and each map task
+    writes its own per-wave files (n_waves files per task); Stage C prunes
+    whole wave dirs. mode="append" adds a delta's documents to a copied
+    checkpoint (extend_index)."""
+    spark = docs.sparkSession
+    t0 = time.time()
+    id_col, text_col, url_col = params["id_col"], params["text_col"], params["url_col"]
+    sel = [F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")]
+    if url_col:
+        sel.append(F.col(url_col).alias("url"))
+    # A single-row-group source file cannot be split by the planner (row
+    # groups are the atomic scan unit), which would run the whole Stage A
+    # tokenize kernel on one core; the guard no-ops on wide sources, so
+    # the split-count tuning below stays in charge at scale.
+    from ..pipeline.text import rebalance_narrow_scan
+
+    docs = rebalance_narrow_scan(docs)
+    tf = docs.select(*sel).mapInPandas(
+        _doc_tokens_fn("doc_id", "text", "url" if url_col else None,
+                       params["n_shards"], params["n_waves"],
+                       with_positions=params["with_positions"]),
+        schema=TOKENS_WAVE_SCHEMA,
+    )
+    # Size the tokenize scan's splits so the task count is an exact
+    # multiple of the cluster parallelism. Spark's own planner targets
+    # totalBytes/defaultParallelism capped at 128MB — the cap can land
+    # one task PAST a full round (measured: a 620MB-effective corpus on
+    # 4 slots planned 5 tasks, so round two ran 1 task with 3 idle
+    # cores, +30% stage wall), and finer-than-needed splits pay a
+    # per-task python/writer handshake (~0.2-0.6s each, measured).
+    # Keeping Spark's 128MB ceiling but rounding the split COUNT up to
+    # a multiple of the parallelism removes the straggler round at every
+    # scale.
+    conf: dict[str, str] = {}
+    try:
+        src_files = [
+            f[len("file:"):] if f.startswith("file:") else f
+            for f in docs.inputFiles()
+        ]
+        open_cost = 1 << 20
+        src_bytes = (
+            sum(os.path.getsize(f) for f in src_files)
+            + open_cost * len(src_files)
+        )
+    except Exception:
+        src_bytes = 0  # non-file source (e.g. in-memory test frames)
+    if src_bytes:
+        par = spark.sparkContext.defaultParallelism
+        conf = {"spark.sql.files.maxPartitionBytes":
+                str(_split_target(src_bytes, 128 << 20, par)),
+                "spark.sql.files.openCostInBytes": str(open_cost)}
+    with _sql_conf(spark, conf):
+        # parquet row groups are the atomic scan-split unit: coarse
+        # tokenize tasks must not produce coarse ROW GROUPS, or Stage
+        # C's bounded ~16MB pack splits degenerate (a split can't stop
+        # mid-row-group, so one 84MB-row-group file = one fat task that
+        # decompresses it whole: measured +47s run_sum, 11.7s GC).
+        (tf.write.mode(mode)
+         .option("parquet.block.size", str(SEG_TASK_TOKEN_BYTES * 4))
+         .partitionBy("wave").parquet(os.path.join(index_dir, "tokens")))
+    _append_lineage(
+        spark, index_dir,
+        [("tokens", "-", "done", 0, 0, int((time.time() - t0) * 1000))],
+    )
+
+
+def _write_doc_map(spark: SparkSession, index_dir: str, url_col: str | None) -> None:
+    """Stage B: doc_map = a column projection of the tokens checkpoint.
+    Map-only: parquet column pruning skips the heavy terms/tfs columns; no
+    shuffle, no second pass over the text (every doc has exactly one row)."""
+    t0 = time.time()
+    cols = ["doc_id", "doclen"] + (["url"] if url_col else [])
+    # small splits: the projection reads 3 thin columns of a fat
+    # checkpoint — default 128MB splits leave most executor slots idle
+    with _sql_conf(spark, {"spark.sql.files.maxPartitionBytes":
+                           str(SEG_TASK_TOKEN_BYTES * 4)}):
+        dm = spark.read.parquet(os.path.join(index_dir, "tokens")).select(*cols)
+        dm.write.mode("overwrite").parquet(os.path.join(index_dir, "doc_map"))
+    _append_lineage(
+        spark, index_dir,
+        [("doc_map", "-", "done", 0, 0, int((time.time() - t0) * 1000))],
+    )
+
+
+def _write_segments(
+    spark: SparkSession, index_dir: str, params: dict, avgdl: float,
+    resume: bool, fail_after_waves: int | None,
+) -> None:
+    """Stage C: two-phase posting build, one Spark job per wave, skipping
+    the waves lineage records as done when resuming."""
+    tokens_path = os.path.join(index_dir, "tokens")
+    segments_path = os.path.join(index_dir, "segments")
+    n_buckets, with_positions = params["n_buckets"], params["with_positions"]
+    par = spark.sparkContext.defaultParallelism
     done_units = _completed_units(spark, index_dir, "segments") if resume else set()
     tf_all = spark.read.parquet(tokens_path)
     os.makedirs(segments_path, exist_ok=True)
-    for w in range(n_waves):
+    for w in range(params["n_waves"]):
         unit = f"wave-{w}"
         if unit in done_units:
             continue
@@ -913,11 +891,8 @@ def build_index(
             for dp, _, fns in os.walk(os.path.join(tokens_path, f"wave={w}"))
             for fn in fns if fn.endswith(".parquet")
         )
-        p2 = min(65536, max(2 * par, 8, -(-wave_bytes // SEG_TASK_TOKEN_BYTES)))
-        # round the reducer count UP to a slot multiple: 81 merge tasks on
-        # 4 slots leaves 3 slots idle for the whole 21st round (~1s of the
-        # stage at bench scale, same shape at any scale)
-        p2 = -(-p2 // max(1, par)) * max(1, par)
+        p2 = _round_up(
+            min(65536, max(2 * par, 8, -(-wave_bytes // SEG_TASK_TOKEN_BYTES))), par)
         partial = tf.mapInPandas(
             _pack_partition_fn(n_buckets, with_positions=with_positions),
             schema=PARTIAL_SCHEMA,
@@ -930,23 +905,12 @@ def build_index(
         shutil.rmtree(stage_dir, ignore_errors=True)
         # pack tasks get the same bounded-payload treatment as merge tasks:
         # default 128MB scan splits hand one pack task ~10x the working set
-        # the recycled worker arena holds (split planning happens at action
-        # time, so the conf takes effect for exactly this job). As with the
-        # tokenize scan, the split COUNT is rounded up to a slot multiple so
-        # the last scheduling round is full.
-        pack_cap = SEG_TASK_TOKEN_BYTES * 4
-        n_pack = -(-max(max(1, par), -(-wave_bytes // pack_cap))
-                   // max(1, par)) * max(1, par)
-        pack_target = max(4 << 20, -(-wave_bytes // n_pack) + (1 << 20))
-        old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(pack_target))
-        try:
+        # the recycled worker arena holds. As with the tokenize scan, the
+        # split COUNT is rounded up to a slot multiple so the last
+        # scheduling round is full.
+        pack_target = _split_target(wave_bytes, SEG_TASK_TOKEN_BYTES * 4, par)
+        with _sql_conf(spark, {"spark.sql.files.maxPartitionBytes": str(pack_target)}):
             segs.write.mode("overwrite").parquet(stage_dir)
-        finally:
-            if old_mpb is None:
-                spark.conf.unset("spark.sql.files.maxPartitionBytes")
-            else:
-                spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
         dst = os.path.join(segments_path, f"wave={w}")
         shutil.rmtree(dst, ignore_errors=True)
         os.replace(stage_dir, dst)
@@ -957,10 +921,27 @@ def build_index(
               int((time.time() - t0) * 1000))],
         )
 
-    # ---- Stage D: exact term df table (range-partitioned, sorted) -----------
+
+def _index_from_tokens(
+    spark: SparkSession, index_dir: str, params: dict, resume: bool = True,
+    fail_after_waves: int | None = None,
+) -> IndexMeta:
+    """Stages B-D and meta.json over index_dir's finished tokens checkpoint:
+    a pure function of that checkpoint and `params`."""
+    doc_map_path = os.path.join(index_dir, "doc_map")
+    terms_path = os.path.join(index_dir, "terms")
+    if not (resume and _done(doc_map_path)):
+        _write_doc_map(spark, index_dir, params["url_col"])
+    n_docs, total_tokens = _corpus_stats(spark, doc_map_path)
+    avgdl = (total_tokens / n_docs) if n_docs else 0.0
+
+    _write_segments(spark, index_dir, params, avgdl, resume, fail_after_waves)
+
+    # Stage D: exact term df table (range-partitioned, sorted)
     if not (resume and _done(terms_path)):
         t0 = time.time()
-        _write_terms(spark, segments_path, terms_path, max(2, n_buckets // 4))
+        _write_terms(spark, os.path.join(index_dir, "segments"), terms_path,
+                     max(2, params["n_buckets"] // 4))
         _append_lineage(
             spark, index_dir,
             [("terms", "-", "done", 0, 0, int((time.time() - t0) * 1000))],
@@ -972,10 +953,106 @@ def build_index(
         avgdl=avgdl,
         total_tokens=total_tokens,
         n_terms=n_terms,
-        n_shards=n_shards,
-        n_buckets=n_buckets,
-        n_salts=n_salts,
-        extras={"with_positions": with_positions},
+        n_shards=params["n_shards"],
+        n_buckets=params["n_buckets"],
+        extras={"with_positions": params["with_positions"]},
     )
     meta.save(index_dir)  # build-complete marker, written last
     return meta
+
+
+def build_index(
+    docs: DataFrame,
+    index_dir: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    url_col: str | None = None,
+    n_shards: int | None = None,
+    n_buckets: int = 32,
+    n_waves: int | None = None,
+    resume: bool = True,
+    with_positions: bool = False,
+    fail_after_waves: int | None = None,  # test hook: simulate a mid-build kill
+) -> IndexMeta:
+    spark = docs.sparkSession
+    os.makedirs(index_dir, exist_ok=True)
+
+    # resolve auto-sized params BEFORE the checkpoint guard so the guard can
+    # compare the actual data shape a resume would inherit
+    if n_shards is None or n_waves is None:
+        n_docs_hint = docs.count()
+        if n_shards is None:
+            n_shards = max(4, min(4096, int(n_docs_hint // 250_000) + 4))
+        if n_waves is None:
+            # waves bound Stage C's per-job working set and give per-wave
+            # resume granularity; below ~20M docs one wave is the right job
+            # shape (extra waves just multiply stage fixed costs), at 10^12
+            # docs this yields the capped 64 passes of ~1.5% of the corpus
+            n_waves = max(1, min(64, int(n_docs_hint // 20_000_000) + 1))
+    n_waves = min(n_waves, n_shards)
+
+    # checkpoint guard: a partial build from an older code version OR from
+    # different build parameters must rebuild, not resume — resuming across
+    # an incompatible on-disk shape mis-reads the checkpoint (e.g. a tokens
+    # checkpoint without positions resumed with with_positions=True indexes
+    # an empty positions array in every Stage C task; a complete index
+    # resumed with new params would skip every stage yet rewrite meta.json
+    # claiming capabilities/shape the baked data lacks)
+
+    # column bindings are part of the checkpoint identity: a tokens
+    # checkpoint baked from text_col="body" resumed with text_col="title"
+    # would silently build the whole index from the wrong column
+    params = {"n_shards": n_shards, "n_buckets": n_buckets,
+              "n_waves": n_waves,
+              "with_positions": bool(with_positions),
+              "id_col": id_col, "text_col": text_col,
+              "url_col": url_col}
+    if _read_layout(index_dir) != (LAYOUT_VERSION, params):
+        _reset_index_dir(index_dir, params)
+
+    if not (resume and _done(os.path.join(index_dir, "tokens"))):
+        _write_tokens(docs, index_dir, params, mode="overwrite")
+    return _index_from_tokens(spark, index_dir, params, resume, fail_after_waves)
+
+
+def extend_index(
+    spark: SparkSession,
+    index_dir: str,
+    new_docs: DataFrame,
+    out_dir: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    url_col: str | None = None,
+) -> IndexMeta:
+    """Incremental build into a NEW snapshot dir (index_dir is only read):
+    copy the base's tokens checkpoint into out_dir, append Stage A over
+    `new_docs` only under the base's layout params, then run Stages B-D over
+    the union. out_dir is the index build_index writes over base + delta
+    with the base's params, segment for segment, and keeps its own tokens
+    and the base's column bindings, so it can be extended in turn.
+    id_col/text_col/url_col name the columns of `new_docs`."""
+    if os.path.abspath(out_dir) == os.path.abspath(index_dir):
+        raise ValueError(
+            "extend_index is snapshot-semantics only: out_dir must differ "
+            "from index_dir (in-place overwrite would delete the base "
+            "mid-read)")
+    base_tokens = os.path.join(index_dir, "tokens")
+    layout, params = _read_layout(index_dir)
+    if layout != LAYOUT_VERSION or not _done(base_tokens):
+        raise ValueError(
+            f"{index_dir} has no finished layout-{LAYOUT_VERSION} tokens "
+            "checkpoint to extend; rebuild it with build_index")
+    new_ids = new_docs.select(F.col(id_col).cast("long").alias("doc_id"))
+    base_ids = spark.read.parquet(base_tokens).select("doc_id")
+    if not new_ids.join(base_ids, "doc_id", "left_semi").isEmpty():
+        raise ValueError("docID sets overlap; extend requires new doc_ids")
+
+    os.makedirs(out_dir, exist_ok=True)
+    _reset_index_dir(out_dir, params)
+    # the copy loses its _SUCCESS until the delta's append commits a new one
+    shutil.copytree(base_tokens, os.path.join(out_dir, "tokens"),
+                    ignore=shutil.ignore_patterns("*_SUCCESS*"))
+    delta_params = {**params, "id_col": id_col, "text_col": text_col,
+                    "url_col": url_col}
+    _write_tokens(new_docs, out_dir, delta_params, mode="append")
+    return _index_from_tokens(spark, out_dir, params)

@@ -310,11 +310,8 @@ class FtsIndex:
             for _, g in pdf.groupby("shard", sort=False):
                 for qid, (idfs, n_terms) in enumerate(plans):
                     own = g[g["term"].isin(idfs)]
-                    heap = kern(own, idfs, n_terms) if len(own) else ()
-                    # empty heaps carry untyped columns; keep them out of
-                    # the concat so doc_id stays int64
-                    if len(heap):
-                        heaps.append(heap.assign(qid=qid))
+                    if len(own):
+                        heaps.append(kern(own, idfs, n_terms).assign(qid=qid))
             if heaps:
                 yield pd.concat(heaps, ignore_index=True)[["qid", "doc_id", "score"]]
 

@@ -23,7 +23,6 @@ Exactness contract (everything rank-identical to the naive scorer/oracles):
 
 from __future__ import annotations
 
-
 import numpy as np
 import pandas as pd
 
@@ -35,6 +34,12 @@ from .codec import BLOCK, decode_postings
 # performance switch (the analog of the reference choosing Flat vs IVF,
 # /root/reference/create-index.py:30-35 — except ours never changes results)
 TAAT_CUTOFF = 50_000
+
+
+def _no_hits() -> pd.DataFrame:
+    """The one empty result of every kernel: typed like a non-empty one."""
+    return pd.DataFrame({"doc_id": np.empty(0, np.int64),
+                         "score": np.empty(0, np.float64)})
 
 
 def _decode_terms(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float):
@@ -68,7 +73,7 @@ def _taat_over_lists(lists: list[dict], n_terms: int, mode: str) -> pd.DataFrame
     path and the WAND small-shard cutoff, which would otherwise varbyte-
     decode every posting list a second time)."""
     if not lists:
-        return pd.DataFrame({"doc_id": [], "score": []})
+        return _no_hits()
     all_ids = np.concatenate([x["ids"] for x in lists])
     all_contrib = np.concatenate([x["contrib"] for x in lists])
     # deterministic accumulation: stable sort by (doc, term order preserved)
@@ -94,10 +99,10 @@ def score_shard_wand(
     """
     lists = _decode_terms(pdf, idfs, avgdl)
     if not lists:
-        return pd.DataFrame({"doc_id": [], "score": []})
+        return _no_hits()
     if mode == "all":
         if len(lists) < n_terms:
-            return pd.DataFrame({"doc_id": [], "score": []})
+            return _no_hits()
         lists.sort(key=lambda x: x["ids"].size)
         ids = lists[0]["ids"]
         for x in lists[1:]:
@@ -105,7 +110,7 @@ def score_shard_wand(
             pos = np.minimum(pos, x["ids"].size - 1)
             ids = ids[x["ids"][pos] == ids]
             if ids.size == 0:
-                return pd.DataFrame({"doc_id": [], "score": []})
+                return _no_hits()
         score = np.zeros(ids.size, dtype=np.float64)
         for x in sorted(lists, key=lambda x: x["term"]):  # sorted-term fold
             pos = np.searchsorted(x["ids"], ids)
@@ -171,7 +176,7 @@ def _bmw_any(lists: list[dict], k: int) -> pd.DataFrame:
     keep = live[iv]
     ids = all_ids[keep]
     if ids.size == 0:
-        return pd.DataFrame({"doc_id": [], "score": []})
+        return _no_hits()
     uniq, inv = np.unique(ids, return_inverse=True)
     scores = np.zeros(uniq.size, dtype=np.float64)
     np.add.at(scores, inv, all_contrib[keep])

@@ -6,9 +6,9 @@ arrival of new corpus files drives index growth:
 
     readStream (file source) -> foreachBatch:
         batch 0: build_index(batch)          -> <root>/v000000
-        batch n: extend_index(current, batch) -> <root>/v00000n  (re-encoded
-                 under the merged avgdl — still rank-identical to a full
-                 rebuild, tests prove it)
+        batch n: extend_index(current, batch) -> <root>/v00000n  (Stage A on
+                 the batch + Stages B-D over current's tokens: the same
+                 segments as a full rebuild over every batch so far)
     CURRENT file (atomic rename) points at the live version; readers pick a
     consistent snapshot at any time (non-destructive versions = time travel).
 
@@ -89,8 +89,7 @@ def stream_build_index(
     import logging
     import shutil
 
-    from ..index import build_index
-    from ..index.merge import extend_index
+    from ..index import build_index, extend_index
 
     os.makedirs(index_root, exist_ok=True)
     checkpoint_dir = os.path.join(index_root, "_stream_checkpoint")
