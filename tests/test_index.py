@@ -359,6 +359,148 @@ def test_hydrate_pushes_isin_into_doc_map_scan(index):
     assert got["url"].notna().all()
 
 
+def _row_group_keys(table_dir: str, key: str) -> list[list]:
+    """`key` values of every row group of a parquet table dir, files in name
+    order (the order a range-partitioned write lays its ranges out in)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in sorted(glob.glob(os.path.join(table_dir, "*.parquet"))):
+        pf = pq.ParquetFile(f)
+        out += [pf.read_row_group(g, columns=[key]).column(key).to_pylist()
+                for g in range(pf.num_row_groups)]
+    return out
+
+
+def _table_rows(table_dir: str) -> list[dict]:
+    import glob
+
+    import pyarrow.parquet as pq
+
+    return [r for f in sorted(glob.glob(os.path.join(table_dir, "*.parquet")))
+            for r in pq.read_table(f).to_pylist()]
+
+
+@pytest.mark.parametrize("url_col", ["url", None])
+def test_spark_side_of_driver_guards_matches_driver_build(
+    spark, corpus_sdf, tmp_path, monkeypatch, segment_rows, url_col
+):
+    """Every DRIVER_STATS_MAX_ROWS guard (corpus stats, Stage B's doc_map,
+    Stage D's terms) has a Spark side that only corpora above the guard
+    take. With the guard at 0 the build takes every Spark side, and its
+    doc_map, terms, segments and meta.json equal the driver-side build's
+    row for row. Small row-group and file sizes spread both layouts over
+    several files and row groups: doc_id (and term) ranges are disjoint and
+    ascending across them, and Spark reads doc_map with exactly
+    doc_id, doclen[, url] — not the tokens schema its source files carry."""
+    from wise_spark.index import build
+
+    monkeypatch.setattr(build, "SORTED_ROW_GROUP_ROWS", 64)
+    monkeypatch.setattr(build, "DOC_MAP_FILE_ROWS", 128)
+    kw = dict(url_col=url_col, n_shards=4, n_buckets=8, n_waves=2)
+    d_driver, d_spark = str(tmp_path / "driver"), str(tmp_path / "spark")
+    build_index(corpus_sdf, d_driver, **kw)
+    monkeypatch.setattr(build, "DRIVER_STATS_MAX_ROWS", 0)
+    build_index(corpus_sdf, d_spark, **kw)
+
+    cols = ["doc_id", "doclen"] + (["url"] if url_col else [])
+    for d in (d_driver, d_spark):
+        groups = _row_group_keys(os.path.join(d, "doc_map"), "doc_id")
+        assert len(groups) >= 5 and max(map(len, groups)) <= 64, d
+        ids = [i for g in groups for i in g]
+        assert ids == sorted(set(ids)) and len(ids) == 300, d
+        assert spark.read.parquet(os.path.join(d, "doc_map")).columns == cols
+        terms = [t for g in _row_group_keys(os.path.join(d, "terms"), "term")
+                 for t in g]
+        assert terms == sorted(set(terms)), d
+    for piece in ("doc_map", "terms"):
+        assert _table_rows(os.path.join(d_spark, piece)) == \
+            _table_rows(os.path.join(d_driver, piece)), piece
+    assert segment_rows(d_spark) == segment_rows(d_driver)
+    assert IndexMeta.load(d_spark) == IndexMeta.load(d_driver)
+
+
+def test_doc_rows_edge_cases_and_unsorted_doc_map(spark, index, tmp_path,
+                                                  monkeypatch):
+    """doc_rows returns the doc_map rows Spark reads, for an empty id list,
+    absent ids and duplicates. A hand-written doc_map in
+    the layout of an index built before doc_map was sorted (every row group
+    spans the whole doc_id range; one file without statistics), holding ids
+    at both ends of int64, still hydrates exactly: the row-group interval
+    test skips only row groups that cannot hold a wanted id. Concurrent
+    first calls, as a server's request threads make, build the row-group
+    directory once."""
+    import sys
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    from wise_spark.serve import spark_search_fn
+
+    want = {r["doc_id"]: r.asDict() for r in index.doc_map().collect()}
+    assert len(want) == 300
+    assert index.doc_rows([]) == {}
+    assert index.doc_rows([10**9, -1]) == {}
+    assert index.doc_rows([3, 150, 299, 3, 10**9]) == \
+        {i: want[i] for i in (3, 150, 299)}
+    assert index.doc_rows(range(300)) == want
+    for i in (0, 299):   # a lone id on a row group's min or max
+        assert index.doc_rows([i]) == {i: want[i]}
+
+    d = str(tmp_path / "unsorted_doc_map")
+    shutil.copytree(index.index_dir, d)
+    dm = os.path.join(d, "doc_map")
+    shutil.rmtree(dm)
+    os.makedirs(dm)
+    extremes = [2**63 - 1, 2**63 - 2, -(2**63)]
+    rows = {**want, **{i: {"doc_id": i, "doclen": 7, "url": f"x{i}"}
+                       for i in extremes}}
+    order = np.random.default_rng(0).permutation(list(rows))
+    t = pa.Table.from_pylist(
+        [rows[int(i)] for i in order],
+        schema=pa.schema([("doc_id", pa.int64()), ("doclen", pa.int64()),
+                          ("url", pa.string())]))
+    pq.write_table(t.slice(0, 200), os.path.join(dm, "part-0.parquet"),
+                   row_group_size=50)
+    pq.write_table(t.slice(200), os.path.join(dm, "part-1.parquet"),
+                   row_group_size=50, write_statistics=False)
+    old = FtsIndex.load(spark, d)
+    ids = extremes + [2**63 - 3, 0, 77, 299, 77]
+    expect = {i: rows[i] for i in ids if i in rows}
+    opened, real = [], pads.dataset
+    monkeypatch.setattr(pads, "dataset",
+                        lambda *a, **kw: opened.append(a) or real(*a, **kw))
+    barrier, got = threading.Barrier(16), [None] * 16
+
+    def first_call(n: int) -> None:
+        barrier.wait(timeout=30)
+        got[n] = old.doc_rows(ids)
+
+    threads = [threading.Thread(target=first_call, args=(n,), daemon=True)
+               for n in range(16)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert got == [expect] * 16
+    assert len(opened) == 1
+    for i in extremes:
+        assert old.doc_rows([i]) == {i: rows[i]}
+    assert old.doc_rows(rows) == rows
+    q = QUERIES[0]
+    assert spark_search_fn(old)(q, 0, 10) == spark_search_fn(index)(q, 0, 10)
+
+
 def test_terms_driver_side_writer(tmp_path):
     """Stage D fast path (no Spark): aggregates (term, n, max_tfc) from the
     segments parquet into sorted range files with df summed across shards,
@@ -367,7 +509,7 @@ def test_terms_driver_side_writer(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from wise_spark.index.build import _write_terms_driver_side
+    from wise_spark.index.build import _write_terms
 
     seg_dir = tmp_path / "segments" / "wave=0"
     seg_dir.mkdir(parents=True)
@@ -379,7 +521,8 @@ def test_terms_driver_side_writer(tmp_path):
     })
     pq.write_table(t, seg_dir / "part-0.parquet")
     out = tmp_path / "terms"
-    _write_terms_driver_side(str(tmp_path / "segments"), str(out), n_files=2)
+    # the driver-side path needs no session
+    _write_terms(None, str(tmp_path / "segments"), str(out), n_files=2)
     assert (out / "_SUCCESS").exists()
     files = sorted(out.glob("*.parquet"))
     assert len(files) == 2  # 3 terms sliced into 2 range files
@@ -398,7 +541,7 @@ def test_terms_driver_side_writer(tmp_path):
     empty_dir.mkdir()
     pq.write_table(t.slice(0, 0), empty_dir / "part-0.parquet")
     out2 = tmp_path / "terms_empty"
-    _write_terms_driver_side(str(empty_dir), str(out2), n_files=4)
+    _write_terms(None, str(empty_dir), str(out2), n_files=4)
     got2 = pq.read_table(sorted(out2.glob("*.parquet"))[0])
     assert got2.num_rows == 0
     assert got2.column_names == ["term", "df", "max_tfc"]
@@ -415,11 +558,11 @@ def test_arrow_pool_bounded_to_affinity():
 
     code = (
         "import os, pyarrow as pa, pyarrow.parquet as pq, tempfile\n"
-        "from wise_spark.index.build import _write_terms_driver_side\n"
+        "from wise_spark.index.build import _write_terms\n"
         "d = tempfile.mkdtemp(); o = tempfile.mkdtemp()\n"
         "t = pa.table({'term': ['a'], 'n': [1], 'max_tfc': [1.0]})\n"
         "pq.write_table(t, os.path.join(d, 'p.parquet'))\n"
-        "_write_terms_driver_side(d, os.path.join(o, 'terms'), n_files=1)\n"
+        "_write_terms(None, d, os.path.join(o, 'terms'), n_files=1)\n"
         "assert pa.cpu_count() == 2, pa.cpu_count()\n"
         "assert pa.io_thread_count() == 2, pa.io_thread_count()\n"
         "print('BOUND-OK')\n"

@@ -422,6 +422,35 @@ def test_spark_search_fn_end_to_end(spark, corpus_sdf, tmp_path_factory):
     assert both[qa] != both[qb]
 
 
+def test_warm_hydrated_search_request_runs_one_spark_job(
+    spark, corpus_sdf, tmp_path_factory
+):
+    """Once the serving cache is warm, a hydrated /search request over a
+    cache=True index runs exactly one Spark job — its batch's topk_many
+    scan. Hydration reads doc_map on the driver (FtsIndex.doc_rows). The
+    request runs in this thread under its own job group, so the count is
+    exactly the request's jobs."""
+    from wise_spark.index import FtsIndex, build_index
+    from wise_spark.serve import spark_search_fn
+
+    d = str(tmp_path_factory.mktemp("serve_jobs_idx"))
+    meta = build_index(corpus_sdf, d, url_col="url", n_shards=4, n_buckets=4,
+                       n_waves=1)
+    search = spark_search_fn(FtsIndex(spark, d, meta, cache=True))
+    q = "nababa pebaba"
+    assert len(search(q, 0, 5)) == 5   # warm-up: materializes the cache
+    sc = spark.sparkContext
+    sc.setJobGroup("one-search-request", "one hydrated /search request")
+    try:
+        hits = search(q, 0, 5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()   # job events are async
+    jobs = sc.statusTracker().getJobIdsForGroup("one-search-request")
+    assert len(hits) == 5 and all(h["url"] for h in hits)
+    assert len(jobs) == 1, sorted(jobs)
+
+
 def test_parquet_media_resolver_point_lookup(spark, tmp_path_factory):
     from wise_spark.serve import parquet_media_resolver
 

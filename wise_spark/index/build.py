@@ -10,8 +10,10 @@ for the same reason, /root/reference/extract-features.py:320,400-405):
                      — ZERO shuffles, ~40x fewer JVM rows than a flat
                      (doc_id, term) layout (measured: per-row JVM
                      materialization dominated the flat variant's wall).
-  Stage B  doc_map   column projection -> (doc_id, url?, doclen) parquet +
-                     exact N/avgdl
+  Stage B  doc_map   (doc_id, doclen, url?) projected from the tokens
+                     checkpoint, sorted by doc_id into range files (disjoint
+                     ascending doc_id ranges per row group: hydration reads
+                     only the row groups holding a hit) + exact N/avgdl
   Stage C  segments  per wave: pack-on-read partials (map-side, split-local)
                      -> ONE shuffle of packed binary runs keyed (shard,
                      bucket) -> k-way merge + varbyte/block-max encode ->
@@ -37,8 +39,12 @@ minus the salt shuffle): no reducer ever receives raw per-posting rows, only
 (SURVEY.md section 7 hard-part 2). Zipf df makes this mandatory at 10^12
 docs; AQE cannot fix groupBy skew, only join skew.
 
-Total exchanges for the whole build: one packed-run shuffle per wave, plus
-the small doc_map/terms aggregations. No raw token row is ever shuffled.
+Total exchanges for the whole build: one packed-run shuffle per wave. Stages
+B and D share one sorted-table writer (_write_sorted): up to
+DRIVER_STATS_MAX_ROWS rows the driver sorts and writes the table with
+pyarrow and no Spark job; above it, one range exchange each, of doc_map's
+thin (doc_id, doclen, url) rows and of the (term, df, max_tfc) aggregate.
+No raw token row is ever shuffled.
 """
 
 from __future__ import annotations
@@ -98,9 +104,15 @@ LINEAGE_SCHEMA = (
     "stage string, unit string, status string, rows long, bytes long, wall_ms long"
 )
 
-# above this many doc_map rows, corpus stats switch from a driver-side
-# pyarrow column read to a distributed Spark aggregation (same exact result)
+# above this many rows, corpus stats and the sorted doc_map/terms tables
+# switch from driver-side pyarrow work to distributed Spark jobs (same exact
+# result, same rows in the same order); the guard keeps driver memory bounded
 DRIVER_STATS_MAX_ROWS = 50_000_000
+
+# rows per parquet row group (both writer paths) and doc_map rows per file of
+# the sorted tables: a lookup by key reads one ~1 MB row group, not a file
+SORTED_ROW_GROUP_ROWS = 65_536
+DOC_MAP_FILE_ROWS = 1 << 20
 
 # bumped on any incompatible change to a checkpoint's on-disk layout.
 # v3: segments/wave=N/ flat files (shard as data column); v2 was
@@ -591,72 +603,86 @@ def _corpus_stats(spark: SparkSession, doc_map_path: str) -> tuple[int, int]:
     return n_docs, int(row["s"] or 0)
 
 
+def _write_sorted(path: str, key: str, n_rows: int, n_files: int,
+                  driver_table, spark_frame) -> None:
+    """Publish a table sorted by `key` as `n_files` range files whose row
+    groups hold at most SORTED_ROW_GROUP_ROWS rows, so key ranges are
+    disjoint and ascending across files and row groups and a lookup by key
+    prunes on parquet min/max statistics. Stages B and D are a FIXED cost
+    that does not shrink with executors, so up to DRIVER_STATS_MAX_ROWS
+    rows `driver_table()` builds the rows with pyarrow and the driver sorts
+    and writes them with no Spark job (the sampler + shuffle + write jobs
+    cost more in scheduling than the work) and publishes atomically (tmp
+    dir + _SUCCESS + os.replace). Above the guard, Spark range-partitions
+    and sorts `spark_frame()`. Both paths write the same rows in the same
+    order."""
+    if n_rows <= DRIVER_STATS_MAX_ROWS:
+        import pyarrow.parquet as pq
+
+        _bound_driver_arrow_threads()
+        # pyarrow keeps the schema metadata of the files it read: Spark's
+        # row-metadata key, copied from the tokens checkpoint, would make
+        # Spark read this table with the whole tokens schema
+        t = driver_table().sort_by(key).replace_schema_metadata(None)
+        tmp = path + "_tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        step = max(1, -(-t.num_rows // n_files))
+        for i, lo in enumerate(range(0, max(1, t.num_rows), step)):
+            pq.write_table(t.slice(lo, step),
+                           os.path.join(tmp, f"part-{i:05d}.parquet"),
+                           row_group_size=SORTED_ROW_GROUP_ROWS)
+        with open(os.path.join(tmp, "_SUCCESS"), "w"):
+            pass
+        shutil.rmtree(path, ignore_errors=True)
+        os.replace(tmp, path)
+        return
+    (
+        spark_frame().repartitionByRange(n_files, key)
+        .sortWithinPartitions(key)
+        .write.mode("overwrite")
+        .option("parquet.block.row.count.limit", str(SORTED_ROW_GROUP_ROWS))
+        .parquet(path)
+    )
+
+
 def _write_terms(spark: SparkSession, segments_path: str, terms_path: str,
                  n_files: int) -> None:
     """Stage D: exact df(term) table — (term, df, max_tfc) sorted by term in
-    `n_files` range files, so query-term lookups prune on parquet min/max
-    statistics. Segment tables under DRIVER_STATS_MAX_ROWS rows (one row per
-    (shard, term), counted from footers) aggregate on the driver: Stage D is
-    a pure FIXED cost that does not shrink with executors, so at small scale
-    the three Spark jobs (agg + range-sampler + write) cost more in
-    scheduling than the work. Above the guard, one Spark aggregation."""
-    seg_rows, _ = _parquet_footer_stats(segments_path)
-    if seg_rows <= DRIVER_STATS_MAX_ROWS:
-        _write_terms_driver_side(segments_path, terms_path, n_files)
-        return
-    terms = (
-        spark.read.parquet(segments_path)
-        .groupBy("term")
-        .agg(F.sum("n").alias("df"), F.max("max_tfc").alias("max_tfc"))
-        # checkpoint BEFORE repartitionByRange: its range sampler is a
-        # separate job, so without this the (term) aggregation over the
-        # segments scan runs TWICE (sample + write). Blocks are freed by the
-        # ContextCleaner when the relation goes out of scope.
-        .localCheckpoint(eager=True)
-    )
-    (
-        terms.repartitionByRange(n_files, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(terms_path)
-    )
-
-
-def _write_terms_driver_side(segments_path: str, terms_path: str,
-                             n_files: int) -> None:
-    """Stage D fast path: exact df(term) aggregation on the driver with
-    pyarrow. Content is identical to the Spark path of _write_terms.
-    Publishes atomically (tmp dir + os.replace) with a _SUCCESS marker, like
-    every other stage commit."""
+    `n_files` range files (_write_sorted), so query-term lookups prune on
+    parquet min/max statistics. The guard counts segment rows (one per
+    (shard, term)) from footers."""
     import pyarrow as pa
-    import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
 
-    _bound_driver_arrow_threads()
-    schema = pa.schema([("term", pa.string()), ("df", pa.int64()),
-                        ("max_tfc", pa.float64())])
-    t = (
-        ds.dataset(segments_path, format="parquet")
-        .to_table(columns=["term", "n", "max_tfc"])
-        .group_by("term")
-        .aggregate([("n", "sum"), ("max_tfc", "max")])
-        .select(["term", "n_sum", "max_tfc_max"])
-        .rename_columns(["term", "df", "max_tfc"])
-        .sort_by("term")
-        .cast(schema)
-    )
-    tmp = terms_path + "_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    n = t.num_rows
-    step = max(1, -(-n // n_files))
-    for i, lo in enumerate(range(0, max(1, n), step)):
-        pq.write_table(t.slice(lo, step), os.path.join(tmp, f"part-{i:05d}.parquet"),
-                       row_group_size=65536)
-    with open(os.path.join(tmp, "_SUCCESS"), "w"):
-        pass
-    shutil.rmtree(terms_path, ignore_errors=True)
-    os.replace(tmp, terms_path)
+    def driver_table():
+        import pyarrow.dataset as ds
+
+        schema = pa.schema([("term", pa.string()), ("df", pa.int64()),
+                            ("max_tfc", pa.float64())])
+        return (
+            ds.dataset(segments_path, format="parquet")
+            .to_table(columns=["term", "n", "max_tfc"])
+            .group_by("term")
+            .aggregate([("n", "sum"), ("max_tfc", "max")])
+            .select(["term", "n_sum", "max_tfc_max"])
+            .rename_columns(["term", "df", "max_tfc"])
+            .cast(schema)
+        )
+
+    def spark_frame():
+        return (
+            spark.read.parquet(segments_path)
+            .groupBy("term")
+            .agg(F.sum("n").alias("df"), F.max("max_tfc").alias("max_tfc"))
+            # checkpoint BEFORE repartitionByRange: its range sampler is a
+            # separate job, so without this the (term) aggregation over the
+            # segments scan runs TWICE (sample + write). Blocks are freed by
+            # the ContextCleaner when the relation goes out of scope.
+            .localCheckpoint(eager=True)
+        )
+
+    seg_rows, _ = _parquet_footer_stats(segments_path)
+    _write_sorted(terms_path, "term", seg_rows, n_files, driver_table, spark_frame)
 
 
 def _permute_positions(tfs, pos, order):
@@ -827,17 +853,29 @@ def _write_tokens(docs: DataFrame, index_dir: str, params: dict, mode: str) -> N
 
 
 def _write_doc_map(spark: SparkSession, index_dir: str, url_col: str | None) -> None:
-    """Stage B: doc_map = a column projection of the tokens checkpoint.
-    Map-only: parquet column pruning skips the heavy terms/tfs columns; no
-    shuffle, no second pass over the text (every doc has exactly one row)."""
+    """Stage B: doc_map = (doc_id, doclen[, url]) of the tokens checkpoint
+    (one row per doc), sorted by doc_id (_write_sorted): its row groups hold
+    disjoint doc_id ranges, so hydrating a page of hits reads only the row
+    groups that hold them. Column pruning skips the heavy terms/tfs
+    columns; no second pass over the text."""
     t0 = time.time()
+    tokens_path = os.path.join(index_dir, "tokens")
     cols = ["doc_id", "doclen"] + (["url"] if url_col else [])
-    # small splits: the projection reads 3 thin columns of a fat
+    n_docs, _ = _parquet_footer_stats(tokens_path)
+
+    def driver_table():
+        import pyarrow.dataset as ds
+
+        return ds.dataset(tokens_path, format="parquet").to_table(columns=cols)
+
+    # small splits: the Spark path reads 3 thin columns of a fat
     # checkpoint — default 128MB splits leave most executor slots idle
     with _sql_conf(spark, {"spark.sql.files.maxPartitionBytes":
                            str(SEG_TASK_TOKEN_BYTES * 4)}):
-        dm = spark.read.parquet(os.path.join(index_dir, "tokens")).select(*cols)
-        dm.write.mode("overwrite").parquet(os.path.join(index_dir, "doc_map"))
+        _write_sorted(
+            os.path.join(index_dir, "doc_map"), "doc_id", n_docs,
+            max(1, -(-n_docs // DOC_MAP_FILE_ROWS)), driver_table,
+            lambda: spark.read.parquet(tokens_path).select(*cols))
     _append_lineage(
         spark, index_dir,
         [("doc_map", "-", "done", 0, 0, int((time.time() - t0) * 1000))],

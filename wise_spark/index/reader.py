@@ -18,15 +18,19 @@ corpus stats implicitly inside FTS5.
 from __future__ import annotations
 
 import os
+import threading
 from functools import reduce
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analyzer import tokenize_text
 from ..query.bm25 import SCORE_SCHEMA, idf_scalar
 from ..session import local_rows_df
-from .build import IndexMeta, _concat_batches, _parquet_footer_stats
+from .build import (
+    IndexMeta, _bound_driver_arrow_threads, _concat_batches, _parquet_footer_stats,
+)
 from .wand import score_shard_taat, score_shard_wand
 
 
@@ -136,6 +140,9 @@ class FtsIndex:
         self._terms = spark.read.parquet(os.path.join(index_dir, "terms"))
         self._df_cache: dict[str, int] | None = None
         self._cached_by_shard = False
+        # doc_map row-group directory for doc_rows, built on first use
+        self._doc_dir = None
+        self._doc_dir_lock = threading.Lock()
         # per-query scoring parallelism: enough tasks to spread shards, few
         # enough that task/python-worker overhead stays off the latency
         # path; computed ONCE — the serving cache repartition below must
@@ -191,6 +198,58 @@ class FtsIndex:
 
     def doc_map(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.index_dir, "doc_map"))
+
+    def _doc_map_directory(self):
+        """(schema, fragments, lo, hi): one pyarrow fragment per non-empty
+        doc_map row group with its doc_id [lo, hi] from the footer
+        statistics (a row group without them gets the whole int64 range, so
+        it is always read). Built once per index, under a lock: request
+        threads of a server call doc_rows concurrently."""
+        with self._doc_dir_lock:
+            if self._doc_dir is None:
+                import pyarrow.dataset as ds
+
+                _bound_driver_arrow_threads()
+                dataset = ds.dataset(os.path.join(self.index_dir, "doc_map"),
+                                     format="parquet")
+                frags, lo, hi = [], [], []
+                i64 = np.iinfo(np.int64)
+                for frag in dataset.get_fragments():
+                    frag.ensure_complete_metadata()
+                    for rg in frag.row_groups:
+                        if not rg.num_rows:
+                            continue
+                        st = (rg.statistics or {}).get("doc_id") or {}
+                        frags.append(frag.subset(row_group_ids=[rg.id]))
+                        lo.append(st.get("min", i64.min))
+                        hi.append(st.get("max", i64.max))
+                self._doc_dir = (dataset.schema, frags,
+                                 np.array(lo, np.int64), np.array(hi, np.int64))
+            return self._doc_dir
+
+    def doc_rows(self, ids) -> dict[int, dict]:
+        """{doc_id: doc_map row as a dict} for the given doc_ids, read on the
+        driver with pyarrow — no Spark job. Only the row groups whose
+        [min, max] doc_id range holds some id are read: Stage B writes
+        doc_map sorted by doc_id, so a page of hits touches at most one row
+        group per hit. The interval test is exact on any doc_map (an
+        unsorted one from an older build just prunes nothing). Absent ids
+        are missing from the result; duplicates collapse."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        want = np.unique(np.asarray(list(ids), dtype=np.int64))
+        if not want.size:
+            return {}
+        schema, frags, lo, hi = self._doc_map_directory()
+        # row group g holds a wanted id iff some id lies in [lo[g], hi[g]]
+        hit = np.searchsorted(want, lo, "left") < np.searchsorted(want, hi, "right")
+        pred = ds.field("doc_id").isin(pa.array(want, pa.int64()))
+        out: dict[int, dict] = {}
+        for g in np.flatnonzero(hit):
+            for row in frags[g].to_table(schema=schema, filter=pred).to_pylist():
+                out[row["doc_id"]] = row
+        return out
 
     def lineage(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.index_dir, "lineage"))
@@ -699,15 +758,18 @@ class FtsIndex:
         rowid join (/root/reference/src/index/sqlite_search_index.py:110-113).
 
         Hits are <= page-cap (1000) driver-sized rows, so collect them ONCE
-        and push `doc_id IN (...)` into the doc_map parquet scan: row-group
-        min/max pruning on a doc_id-sorted doc_map skips everything else —
-        without the pushed predicate every hydrate is a full doc_map pass,
-        a 10^12-row scan per query at target scale. The collected rows are
-        re-created as a local relation and broadcast, which also avoids
-        recomputing the scoring plan a second time inside the join. Results
-        larger than HYDRATE_ISIN_MAX rows (not a search-path shape, e.g. a
-        raw score_all relation) fall back to a plain shuffle join — NOT a
-        broadcast: an unbounded hit relation can be corpus-sized, and
+        and push `doc_id IN (...)` into the doc_map parquet scan. Stage B
+        writes doc_map sorted by doc_id into range files, so every row
+        group holds a disjoint doc_id range and the pushed predicate's
+        row-group min/max pruning skips every row group that holds no hit —
+        without it every hydrate is a full doc_map pass, a 10^12-row scan
+        per query at target scale. (`doc_rows` is the same lookup on the
+        driver with no Spark job; /search serving uses it.) The collected
+        rows are re-created as a local relation and broadcast, which also
+        avoids recomputing the scoring plan a second time inside the join.
+        Results larger than HYDRATE_ISIN_MAX rows (not a search-path shape,
+        e.g. a raw score_all relation) fall back to a plain shuffle join —
+        NOT a broadcast: an unbounded hit relation can be corpus-sized, and
         forcing it through a broadcast would collect it to the driver."""
         rows = results.limit(self.HYDRATE_ISIN_MAX + 1).collect()
         if len(rows) > self.HYDRATE_ISIN_MAX:

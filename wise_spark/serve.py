@@ -18,11 +18,13 @@ that arrive while a scoring job runs queue up, and the next free request
 thread scores all of them with ONE `FtsIndex.topk_many` job (group commit:
 no batching window, no extra thread; a lone request runs at once). Each
 request then ranks and slices its own <= 1000-hit list on the driver and
-hydrates it with one pruned `doc_id IN (...)` doc_map collect. A media
-request is a single point lookup + file stream, so one driver process
-serves while executors keep the index hot. The Spark wiring lives in
-`spark_search_fn` / `parquet_media_resolver`; the HTTP mechanics take plain
-callables so they are testable without a SparkSession.
+hydrates it with `FtsIndex.doc_rows`: a driver-side pyarrow read of only
+the doc_id-sorted doc_map row groups that hold its hits, no Spark job. So a
+batch of requests costs exactly one Spark job. A media request is a single
+point lookup + file stream, so one driver process serves while executors
+keep the index hot. The Spark wiring lives in `spark_search_fn` /
+`parquet_media_resolver`; the HTTP mechanics take plain callables so they
+are testable without a SparkSession.
 """
 
 from __future__ import annotations
@@ -177,21 +179,18 @@ def spark_search_fn(index, hydrate: bool = True) -> SearchFn:
     """Serving adapter over FtsIndex: WAND top-`end` by group commit (see
     _GroupCommit), then, per request and outside the shared slot, rank =
     position in the ordered list, the [start, end) slice (the contract of
-    `ranked()`/`page()`), and optional doc_map hydration merged on the
-    driver. Every relation here is <= `end` (<= 1000) rows."""
-    from pyspark.sql import functions as F
-
+    `ranked()`/`page()`), and optional doc_map hydration by
+    `index.doc_rows` — a pruned pyarrow read on the driver, so the batch's
+    scoring job is the request's only Spark job. Rows equal
+    `hydrate(page(...))`'s. Every list here is <= `end` (<= 1000) hits."""
     top = _GroupCommit(index)
-    doc_map = index.doc_map() if hydrate else None
 
     def run(query: str, start: int, end: int) -> list[dict]:
         hits = [{"doc_id": d, "score": s, "rank": start + i}
                 for i, (d, s) in enumerate(top(query, end)[start:end])]
-        if doc_map is None or not hits:
+        if not hydrate or not hits:
             return hits
-        meta = {r["doc_id"]: r.asDict(recursive=True) for r in
-                doc_map.filter(F.col("doc_id").isin([h["doc_id"] for h in hits]))
-                .collect()}
+        meta = index.doc_rows([h["doc_id"] for h in hits])
         # inner-join semantics, as hydrate(): a hit without metadata drops
         return [{**meta[h["doc_id"]], "score": h["score"], "rank": h["rank"]}
                 for h in hits if h["doc_id"] in meta]
