@@ -100,6 +100,7 @@ def run_once(mode: str, budget_s: float) -> dict | None:
     else:
         env["SPARK_GRAFT_SKIP_SCALE"] = "1"
         env.setdefault("SPARK_GRAFT_WAIT_QUIET_S", "60")
+    started = time.time()
     try:
         p = subprocess.run(
             [sys.executable, os.path.join(REPO, "bench.py")],
@@ -119,11 +120,14 @@ def run_once(mode: str, budget_s: float) -> dict | None:
     # the stdout line is the COMPACT record (driver tail cap) and strips
     # headline_probe_s — without it headline_clean() can never pass. The
     # full record lands in BENCH_partial.json; merge the gate telemetry
-    # fields back in from there.
+    # fields back in from there — only if this run wrote it: a record an
+    # older run left behind can carry the same headline value.
+    partial = os.path.join(REPO, "BENCH_partial.json")
     try:
-        with open(os.path.join(REPO, "BENCH_partial.json")) as f:
+        with open(partial) as f:
             full = json.load(f)
-        if full.get("value") == res.get("value"):
+        if (os.path.getmtime(partial) > started
+                and full.get("value") == res.get("value")):
             for k in ("headline_probe_s", "headline_wait"):
                 if k in full and k not in res:
                     res[k] = full[k]

@@ -1,12 +1,15 @@
 """Unit tests for bench.py's sampling protocol (no Spark, no subprocesses):
 steal/probe discard gates, top-up from least-contaminated discarded pairs,
 and the wall-clock deadline — the round-3 failure mode (rc 124, no JSON)
-must be structurally impossible."""
+must be structurally impossible. Also scripts/hunt_quiet.py's merge of the
+full bench record into the compact one."""
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
+import subprocess
 import time
 
 import pytest
@@ -228,3 +231,48 @@ def test_multibuild_worker_pairs_positionally(bench, monkeypatch):
     clean = [p for p in pairs if not p.get("_topped_up")]
     assert len(clean) == 1 and clean[0][8]["docs_per_sec"] == 26000
     assert clean[0][2]["docs_per_sec"] == 8000  # positional: build 0 with build 0
+
+
+@pytest.fixture()
+def hunt(monkeypatch, tmp_path):
+    """scripts/hunt_quiet.py with its REPO pointed at an empty directory."""
+    spec = importlib.util.spec_from_file_location(
+        "hunt_under_test", os.path.join(REPO, "scripts", "hunt_quiet.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    monkeypatch.setattr(mod, "REPO", str(tmp_path))
+    monkeypatch.setattr(mod, "log", lambda msg: None)
+    return mod
+
+
+def test_hunt_merges_telemetry_only_from_this_runs_record(hunt, monkeypatch, tmp_path):
+    """run_once adds headline_probe_s / headline_wait from BENCH_partial.json
+    to the compact stdout record only when the bench run it launched wrote
+    that file: an older run's record with the same headline value is
+    ignored."""
+    partial = tmp_path / "BENCH_partial.json"
+    full = {"value": 27.5, "headline_probe_s": [[1.0, 1.1]], "headline_wait": 3.0}
+    compact = {"value": 27.5}
+
+    def bench_run(write):
+        def run(cmd, **kw):
+            if write:
+                partial.write_text(json.dumps(full))
+                # the record lands as the run ends, seconds after its start
+                t = time.time() + 5
+                os.utime(partial, (t, t))
+            return subprocess.CompletedProcess(cmd, 0, json.dumps(compact) + "\n", "")
+        return run
+
+    partial.write_text(json.dumps(full))
+    old = time.time() - 3600
+    os.utime(partial, (old, old))
+    monkeypatch.setattr(hunt.subprocess, "run", bench_run(write=False))
+    assert hunt.run_once("headline", 60) == compact
+
+    monkeypatch.setattr(hunt.subprocess, "run", bench_run(write=True))
+    assert hunt.run_once("headline", 60) == full
+
+    # this run's record, but for another headline value: not merged
+    full["value"] = 30.0
+    assert hunt.run_once("headline", 60) == compact

@@ -1,4 +1,4 @@
-"""local_rows_df: pure-JVM local relations (LocalTableScan / empty range).
+"""local_rows_df: pure-JVM local relations (LocalTableScan).
 
 Pins the optimization contract of wise_spark.session.local_rows_df, which
 replaced every query-path `spark.createDataFrame(<python list>, schema)`:
@@ -15,11 +15,22 @@ import sys
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from wise_spark.session import local_rows_df
 
 QT_SCHEMA = "query_id long, term string, n_q int, w double"
 QT_ROWS = [(0, "spark", 3, 1.5), (1, "table", 2, 2.0), (2, "merge", 3, 0.25)]
+# hydrate's shape: a ranked() result, whose row_number rank is NOT NULL
+RANKED = StructType([StructField("doc_id", LongType()),
+                     StructField("rank", IntegerType(), nullable=False)])
+# a None in a long column is a SQL NULL and leaves its neighbours exact
+# (through a pandas float NaN column, 2**62 + 1 would round)
+CASES = [
+    (QT_ROWS, QT_SCHEMA),
+    ([(2**62 + 1, None, None, 1.5), (None, "x", 2, None)], QT_SCHEMA),
+    ([(7, 1), (None, 2)], RANKED),
+]
 
 
 def _plan(df) -> str:
@@ -27,12 +38,14 @@ def _plan(df) -> str:
 
 
 def test_matches_plain_createdataframe(spark):
-    a = local_rows_df(spark, QT_ROWS, QT_SCHEMA)
-    b = spark.createDataFrame(QT_ROWS, QT_SCHEMA)
-    assert a.schema == b.schema
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    # the driver hashes Arrow output — dtypes must match the replaced path
-    assert a.toArrow().schema == b.toArrow().schema
+    for rows, schema in CASES:
+        a = local_rows_df(spark, rows, schema)
+        b = spark.createDataFrame(rows, schema)
+        assert a.schema == b.schema, rows
+        assert a.collect() == b.collect(), rows
+        # the driver hashes Arrow output — dtypes must match the replaced path
+        assert a.toArrow().schema == b.toArrow().schema, rows
+        assert "LocalTableScan" in _plan(a), rows
 
 
 def test_is_jvm_local_plan_not_python_rdd(spark):
@@ -46,16 +59,18 @@ def test_is_jvm_local_plan_not_python_rdd(spark):
 
 
 def test_empty_relation_matches_and_is_python_free(spark):
-    schema = "doc_id long, score double"
-    a = local_rows_df(spark, [], schema)
-    b = spark.createDataFrame([], schema)
-    assert a.schema == b.schema
-    assert a.count() == 0
-    assert a.toArrow().schema == b.toArrow().schema
-    assert "ExistingRDD" not in _plan(a)
-    # still unions/joins like the relation it stands in for
-    real = local_rows_df(spark, [(7, 0.5)], schema)
-    assert real.unionByName(a).count() == 1
+    for schema, row in [("doc_id long, score double", (7, 0.5)),
+                        (RANKED, (7, 1))]:
+        a = local_rows_df(spark, [], schema)
+        b = spark.createDataFrame([], schema)
+        # nullability included: an empty ranked() page keeps rank NOT NULL
+        assert a.schema == b.schema, schema
+        assert a.count() == 0
+        assert a.toArrow().schema == b.toArrow().schema, schema
+        assert "ExistingRDD" not in _plan(a)
+        # still unions/joins like the relation it stands in for
+        real = local_rows_df(spark, [row], schema)
+        assert real.unionByName(a).count() == 1
 
 
 def test_accepts_structtype_and_row_objects(spark):

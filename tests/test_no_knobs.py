@@ -1,12 +1,15 @@
 """Spark-free guard: the library reads no tuning or profiling switches from
 the environment, the index build does no I/O outside the index dir, and
-the serving path has no timer to tune.
+the serving path has no timer to tune, and every index query runs one
+per-shard scan.
 
 The only environment setting the package may read is the deployment choice
 of Arrow memory pool in `cluster.py` (WISE_ARROW_POOL). Any other
 `WISE_*` / `SPARK_GRAFT_*` read is a hidden build knob; any "/proc/" or
 "/tmp/" literal under `wise_spark/index/` is a side channel out of the
-build; a sleep or timed wait in `serve.py` is a batching window."""
+build; a sleep or timed wait in `serve.py` is a batching window; a second
+`mapInPandas` in `index/reader.py` is a second copy of its per-shard
+scan."""
 
 from __future__ import annotations
 
@@ -129,3 +132,15 @@ def test_no_batching_window_in_serve():
 ])
 def test_timed_wait_scanner_sees_each_form(src, expect):
     assert [n for _, n in _timed_waits(ast.parse(src))] == expect
+
+
+def test_reader_has_one_per_shard_scan():
+    """Every FtsIndex query (terms, phrase, prefix, '^', NEAR) goes through
+    `_per_shard`, the reader's only mapInPandas call: a new query kind adds
+    a kernel, not another copy of the scan."""
+    calls = [f"index/reader.py:{node.lineno}"
+             for rel, tree in _sources() if rel == os.path.join("index", "reader.py")
+             for node in ast.walk(tree)
+             if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+             and node.func.attr == "mapInPandas"]
+    assert len(calls) == 1, "mapInPandas calls:\n" + "\n".join(calls)

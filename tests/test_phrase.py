@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from wise_spark.analyzer import tokenize_text
 from wise_spark.data import corpus_df
 from wise_spark.index import FtsIndex, build_index
+from wise_spark.index.reader import MATCH_SCHEMA
 from wise_spark.oracle.fts5 import Fts5Oracle, fts5_available
 
 
@@ -262,3 +263,41 @@ def test_initial_topk_rank_identical_to_fts5(pos_index):
         assert np.allclose(
             [r["score"] for r in ours], ref["score"].to_numpy(), atol=1e-9
         ), q
+
+
+def test_positional_kernels_on_shard_partitioned_cache(spark, pos_index):
+    """cache=True pins the segments already partitioned by shard and
+    sorted by term, so queries skip the per-query exchange: every
+    positional kernel and score_all over that cache returns exactly the
+    uncached index's rows, and a phrase with an absent term returns the
+    typed empty frame on both."""
+    idx, pdf = pos_index
+    cached = FtsIndex.load(spark, idx.index_dir, cache=True)
+    assert cached._cached_by_shard
+    from collections import Counter
+
+    common = [t for t, _ in Counter(
+        t for text in pdf["text"] for t in tokenize_text(text)).most_common(2)]
+    first = tokenize_text(pdf["text"].iloc[0])
+    ph = _pick_phrase(pdf, 2)
+    queries = {
+        "phrase": lambda i: i.phrase_matches(ph),
+        "phrase_full_decode": lambda i: i.phrase_matches(ph, prune=False),
+        "prefix": lambda i: i.prefix_matches(first[0][:2]),
+        "initial": lambda i: i.initial_matches(" ".join(first[:2])),
+        "near": lambda i: i.near_relation(ph, common[0], 3),
+        "score_all_any": lambda i: i.score_all(" ".join(common), "any"),
+        "score_all_all": lambda i: i.score_all(" ".join(common), "all"),
+    }
+    for name, q in queries.items():
+        plain, pinned = q(idx), q(cached)
+        assert pinned.schema == plain.schema, name
+        want = sorted(map(tuple, plain.collect()))
+        assert want, name
+        assert sorted(map(tuple, pinned.collect())) == want, name
+    typed = spark.createDataFrame([], MATCH_SCHEMA)
+    for i in (idx, cached):
+        empty = i.phrase_matches(f"{ph} zzznope")
+        assert empty.schema == typed.schema
+        assert empty.toArrow().schema == typed.toArrow().schema
+        assert empty.count() == 0

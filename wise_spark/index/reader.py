@@ -4,9 +4,12 @@ Query lifecycle (SURVEY.md section 3.4): driver tokenizes the query with the
 SAME analyzer as the build side, looks up exact df for the query terms from
 the range-partitioned terms table (parquet min/max pruning on `term`), then
 reads only the query terms' segment rows (predicate pushdown into the scan)
-and runs the per-shard scoring kernel via mapInPandas; the global result is
-a tiny TakeOrderedAndProject over per-shard top-k heaps. `topk_many` scores
-a batch of queries in one such job and merges the heaps on the driver.
+and runs the per-shard scoring kernel; the global result is a tiny
+TakeOrderedAndProject over per-shard top-k heaps. `topk_many` scores a
+batch of queries in one such job and merges the heaps on the driver.
+Every index query (terms, phrase, prefix, '^', NEAR) runs this one scan,
+`FtsIndex._per_shard`: one mapInPandas applying a query-specific kernel to
+each shard's segment rows.
 
 Scale notes: the segments scan touches only the query terms' posting rows —
 for a 3-term query over 10^12 docs that is 3 * n_shards rows regardless of
@@ -19,19 +22,24 @@ from __future__ import annotations
 
 import os
 import threading
-from functools import reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..analyzer import tokenize_text
-from ..query.bm25 import SCORE_SCHEMA, idf_scalar
+from ..query.bm25 import SCORE_SCHEMA, idf_scalar, tf_component_col
 from ..session import local_rows_df
 from .build import (
     IndexMeta, _bound_driver_arrow_threads, _concat_batches, _parquet_footer_stats,
 )
+from .codec import decode_positions_subset, decode_postings
 from .wand import score_shard_taat, score_shard_wand
+
+
+def _term_rows(g: pd.DataFrame) -> dict:
+    """{term: segment row} over ONE shard's rows."""
+    return {r["term"]: r for _, r in g.iterrows()}
 
 
 def _shard_phrase_occurrences(rows: dict, seq: list[str], prune: bool = True,
@@ -45,10 +53,6 @@ def _shard_phrase_occurrences(rows: dict, seq: list[str], prune: bool = True,
     ONLY for intersection docs (codec.decode_positions_subset) — the
     phrase analog of WAND's rarest-term bounding. prune=False keeps the
     single-stage full-decode path for A/B identity tests."""
-    import numpy as np
-
-    from .codec import decode_positions_subset, decode_postings
-
     if any(t not in rows for t in seq):
         return None
     uniq = sorted(set(seq))
@@ -298,20 +302,31 @@ class FtsIndex:
         "blk_last", "blk_max", "max_tfc",
     ]
 
-    def _matched_segments(self, terms: list[str], with_positions: bool = False) -> DataFrame:
+    def _per_shard(self, pred, kernel, schema: str,
+                   with_positions: bool = False) -> DataFrame:
+        """The one per-shard scan every index query runs: the segment rows
+        matching the Column `pred`, hash-distributed by shard over a small
+        explicit partition count (a whole shard never splits, so each
+        shard's result is complete and local), then `kernel(shard rows) ->
+        frame | None` per shard; a partition's frames leave as one batch.
+        In serving mode the cache is already shard-partitioned: one
+        single-stage job, no per-query exchange. `kernel` runs on the
+        executors and must not close over `self`."""
         cols = self._SCORE_COLS + (["positions"] if with_positions else [])
-        return self._segments.filter(F.col("term").isin(terms)).select(*cols)
+        seg = self._segments.filter(pred).select(*cols)
+        if not self._cached_by_shard:
+            seg = seg.repartition(self._query_partitions, "shard")
 
-    def _shard_partitioned(self, terms: list[str], with_positions: bool = False) -> DataFrame:
-        """Matched posting rows, hash-distributed by shard over a small
-        explicit partition count (a whole shard never splits — each shard's
-        scores are computed completely and locally). In serving mode the
-        cache is already shard-partitioned, so the filter is narrow and the
-        query runs as one single-stage job — no per-query exchange."""
-        matched = self._matched_segments(terms, with_positions)
-        if self._cached_by_shard:
-            return matched
-        return matched.repartition(self._query_partitions, "shard")
+        def run(batches):
+            pdf = _concat_batches(batches)
+            if pdf is None:
+                return
+            out = [kernel(g) for _, g in pdf.groupby("shard", sort=False)]
+            out = [f for f in out if f is not None]
+            if out:
+                yield pd.concat(out, ignore_index=True)
+
+        return seg.mapInPandas(run, schema=schema)
 
     def score_all(self, query: str, mode: str = "all") -> DataFrame:
         """Exhaustive index-accelerated scoring: all matching (doc_id, score).
@@ -325,16 +340,10 @@ class FtsIndex:
             return self._empty(SCORE_SCHEMA)
         idfs, n_terms = plan
         avgdl = self.meta.avgdl
-
-        def run(batches):
-            pdf = _concat_batches(batches)
-            if pdf is None:
-                return
-            for _, g in pdf.groupby("shard", sort=False):
-                yield score_shard_taat(g, idfs, avgdl, n_terms, mode)
-
-        return self._shard_partitioned(list(idfs)).mapInPandas(
-            run, schema=SCORE_SCHEMA
+        return self._per_shard(
+            F.col("term").isin(list(idfs)),
+            lambda g: score_shard_taat(g, idfs, avgdl, n_terms, mode),
+            SCORE_SCHEMA,
         )
 
     def _local_topk(self, plans: list[tuple[dict[str, float], int]], k: int,
@@ -361,23 +370,17 @@ class FtsIndex:
             )
             return out.head(k)
 
-        def run(batches):
-            pdf = _concat_batches(batches)
-            if pdf is None:
-                return
-            heaps = []
-            for _, g in pdf.groupby("shard", sort=False):
-                for qid, (idfs, n_terms) in enumerate(plans):
-                    own = g[g["term"].isin(idfs)]
-                    if len(own):
-                        heaps.append(kern(own, idfs, n_terms).assign(qid=qid))
-            if heaps:
-                yield pd.concat(heaps, ignore_index=True)[["qid", "doc_id", "score"]]
+        def heaps(g: pd.DataFrame) -> pd.DataFrame | None:
+            out = []
+            for qid, (idfs, n_terms) in enumerate(plans):
+                own = g[g["term"].isin(idfs)]
+                if len(own):
+                    out.append(kern(own, idfs, n_terms).assign(qid=qid))
+            return pd.concat(out, ignore_index=True) if out else None
 
         terms = sorted(set().union(*(idfs for idfs, _ in plans)))
-        return self._shard_partitioned(terms).mapInPandas(
-            run, schema="qid int, " + SCORE_SCHEMA
-        )
+        return self._per_shard(F.col("term").isin(terms), heaps,
+                               "qid int, " + SCORE_SCHEMA)
 
     def topk(
         self, query: str, k: int = 10, mode: str = "all", method: str = "wand"
@@ -445,57 +448,59 @@ class FtsIndex:
         positions; a selective phrase intersects to a handful). prune=False
         keeps the single-stage full-decode path for A/B identity tests.
         """
+        seq = self._phrase_terms(phrase)
+        if seq is None:
+            return self._empty(MATCH_SCHEMA)
+
+        def kernel(g: pd.DataFrame) -> pd.DataFrame | None:
+            res = _shard_phrase_occurrences(_term_rows(g), seq, prune)
+            if res is None:
+                return None
+            _, _, d_ids, d_tf, d_dl = res
+            return pd.DataFrame({"doc_id": d_ids, "tf": d_tf, "doclen": d_dl})
+
+        return self._per_shard(F.col("term").isin(sorted(set(seq))), kernel,
+                               MATCH_SCHEMA, with_positions=True)
+
+    def _phrase_terms(self, text: str) -> list[str] | None:
+        """The phrase's token sequence, or None when it can match nothing
+        (no tokens, or some token absent from the index). Raises on an
+        index built without positions."""
         if not self.meta.extras.get("with_positions"):
             raise ValueError("index was built without positions (with_positions=True)")
-        seq = self.query_terms_ordered(phrase)
-        empty = self._empty(MATCH_SCHEMA)
-        if not seq:
-            return empty
+        seq = self.query_terms_ordered(text)
         uniq = sorted(set(seq))
-        dfs = self.term_stats(uniq)
-        if any(t not in dfs for t in uniq):
-            return empty
+        if not seq or len(self.term_stats(uniq)) < len(uniq):
+            return None
+        return seq
 
-        def run(batches):
-            pdf = _concat_batches(batches)
-            if pdf is None:
-                return
-            for _, g in pdf.groupby("shard", sort=False):
-                rows = {r["term"]: r for _, r in g.iterrows()}
-                res = _shard_phrase_occurrences(rows, seq, prune)
-                if res is None:
-                    continue
-                _, _, d_ids, d_tf, d_dl = res
-                yield pd.DataFrame(
-                    {"doc_id": d_ids, "tf": d_tf, "doclen": d_dl})
+    def _virtual_term_topk(self, rel: DataFrame, k: int,
+                           units=(("tf", "tf"),), where=None) -> DataFrame:
+        """Score a virtual-term relation (doc_id, doclen, ...): FTS5's
+        bm25() treats a quoted phrase, a prefix token or a '^' phrase as
+        one scoring unit whose df is the number of matching docs. Each unit
+        is a (df column, tf column) pair: its df counts the rows with df
+        column > 0, and a doc scores sum(idf * tf component of the tf
+        column) over the units, over the rows satisfying `where`. NEAR is
+        two units — each phrase's standalone df, its near-pair tf. Two
+        jobs: a global df aggregate (tiny relation), then score +
+        TakeOrderedAndProject; no match of some unit scores nothing.
 
-        return self._shard_partitioned(uniq, with_positions=True).mapInPandas(
-            run, schema=MATCH_SCHEMA
-        )
-
-    def _virtual_term_topk(self, matches: DataFrame, k: int) -> DataFrame:
-        """Score a (doc_id, tf, doclen) virtual-term relation: FTS5's bm25()
-        treats a quoted phrase OR a prefix token as one scoring unit whose
-        df is the number of matching docs. Two jobs: a global df count
-        (tiny relation), then score + TakeOrderedAndProject.
-
-        localCheckpoint (not persist): the matches relation is needed by
-        two actions (df count + scoring) but must not pin executor storage
+        localCheckpoint (not persist): the relation is needed by two
+        actions (df aggregate + scoring) but must not pin executor storage
         for the life of the session — checkpoint blocks are freed by the
         ContextCleaner as soon as the result DataFrame is dropped, whereas
         a persist() with no unpersist() accumulates across queries."""
-        from ..query.bm25 import idf_scalar, tf_component_col
-
-        matches = matches.localCheckpoint(eager=True)
-        df_v = matches.count()
-        if df_v == 0:
+        rel = rel.localCheckpoint(eager=True)
+        dfs = rel.agg(*[F.count(F.when(F.col(d) > 0, 1)) for d, _ in units]).first()
+        if not all(dfs):
             return self._empty(SCORE_SCHEMA)
-        idf = idf_scalar(df_v, self.meta.n_docs)
-        scored = matches.select(
-            "doc_id",
-            (F.lit(idf) * tf_component_col(F.col("tf"), F.col("doclen"),
-                                           self.meta.avgdl)).alias("score"),
-        )
+        terms = [F.lit(idf_scalar(df, self.meta.n_docs))
+                 * tf_component_col(F.col(tf), F.col("doclen"), self.meta.avgdl)
+                 for df, (_, tf) in zip(dfs, units)]
+        if where is not None:
+            rel = rel.filter(where)
+        scored = rel.select("doc_id", sum(terms[1:], terms[0]).alias("score"))
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def phrase_topk(self, phrase: str, k: int = 10) -> DataFrame:
@@ -524,39 +529,21 @@ class FtsIndex:
             raise ValueError(
                 f"prefix query must normalize to exactly one token, got "
                 f"{norm!r} from {prefix!r}")
-        seg = self._segments.filter(
-            F.col("term").startswith(norm[0])).select(*self._SCORE_COLS)
-        if not self._cached_by_shard:
-            seg = seg.repartition(self._query_partitions, "shard")
 
-        def run(batches):
-            import numpy as np
+        def kernel(g: pd.DataFrame) -> pd.DataFrame:
+            ids, tfs, dls = (np.concatenate(a) for a in zip(
+                *(decode_postings(r) for _, r in g.iterrows())))
+            order = np.argsort(ids, kind="stable")
+            ids, tfs, dls = ids[order], tfs[order], dls[order]
+            uniq, starts = np.unique(ids, return_index=True)
+            return pd.DataFrame({
+                "doc_id": uniq,
+                "tf": np.add.reduceat(tfs, starts).astype(np.int64),
+                "doclen": dls[starts],
+            })
 
-            from .codec import decode_postings
-
-            pdf = _concat_batches(batches)
-            if pdf is None:
-                return
-            for _, g in pdf.groupby("shard", sort=False):
-                ids_l, tfs_l, dls_l = [], [], []
-                for _, r in g.iterrows():
-                    ids, tfs, dls = decode_postings(r)
-                    ids_l.append(ids)
-                    tfs_l.append(tfs)
-                    dls_l.append(dls)
-                ids = np.concatenate(ids_l)
-                tfs = np.concatenate(tfs_l)
-                dls = np.concatenate(dls_l)
-                order = np.argsort(ids, kind="stable")
-                ids, tfs, dls = ids[order], tfs[order], dls[order]
-                uniq, starts = np.unique(ids, return_index=True)
-                yield pd.DataFrame({
-                    "doc_id": uniq,
-                    "tf": np.add.reduceat(tfs, starts).astype(np.int64),
-                    "doclen": dls[starts],
-                })
-
-        return seg.mapInPandas(run, schema=MATCH_SCHEMA)
+        return self._per_shard(F.col("term").startswith(norm[0]), kernel,
+                               MATCH_SCHEMA)
 
     def prefix_topk(self, prefix: str, k: int = 10) -> DataFrame:
         """FTS5 prefix-query ('tok*') top-k BM25 — the prefix is ONE
@@ -572,42 +559,26 @@ class FtsIndex:
         instance, pinned empirically). Same candidate-bounded positional
         kernel as phrase_matches, with the occurrence set filtered to
         start == 0."""
-        if not self.meta.extras.get("with_positions"):
-            raise ValueError("index was built without positions (with_positions=True)")
-        seq = self.query_terms_ordered(phrase.lstrip("^"))
-        empty = self._empty(MATCH_SCHEMA)
-        if not seq:
-            return empty
-        uniq = sorted(set(seq))
-        dfs = self.term_stats(uniq)
-        if any(t not in dfs for t in uniq):
-            return empty
+        seq = self._phrase_terms(phrase.lstrip("^"))
+        if seq is None:
+            return self._empty(MATCH_SCHEMA)
 
-        def run(batches):
-            import numpy as np
+        def kernel(g: pd.DataFrame) -> pd.DataFrame | None:
+            res = _shard_phrase_occurrences(_term_rows(g), seq)
+            if res is None:
+                return None
+            occ_doc, occ_start, d_ids, _, d_dl = res
+            hit = occ_doc[occ_start == 0]
+            if not hit.size:
+                return None
+            return pd.DataFrame({
+                "doc_id": hit,
+                "tf": np.ones(hit.size, dtype=np.int64),
+                "doclen": d_dl[np.searchsorted(d_ids, hit)],
+            })
 
-            pdf = _concat_batches(batches)
-            if pdf is None:
-                return
-            for _, g in pdf.groupby("shard", sort=False):
-                rows = {r["term"]: r for _, r in g.iterrows()}
-                res = _shard_phrase_occurrences(rows, seq)
-                if res is None:
-                    continue
-                occ_doc, occ_start, d_ids, _, d_dl = res
-                hit = occ_doc[occ_start == 0]
-                if not hit.size:
-                    continue
-                dl = d_dl[np.searchsorted(d_ids, hit)]
-                yield pd.DataFrame({
-                    "doc_id": hit,
-                    "tf": np.ones(hit.size, dtype=np.int64),
-                    "doclen": dl,
-                })
-
-        return self._shard_partitioned(uniq, with_positions=True).mapInPandas(
-            run, schema=MATCH_SCHEMA
-        )
+        return self._per_shard(F.col("term").isin(sorted(set(seq))), kernel,
+                               MATCH_SCHEMA, with_positions=True)
 
     def initial_topk(self, phrase: str, k: int = 10) -> DataFrame:
         """FTS5 '^phrase' top-k BM25 — one virtual term anchored at the
@@ -643,71 +614,60 @@ class FtsIndex:
         schema = ("doc_id long, tf_a long, tf_b long, near_tf_a long, "
                   "near_tf_b long, doclen long, near boolean")
 
-        def run(batches):
-            import numpy as np
+        def participants(k_self, st_self, c_self, L_self, k_other, L_other):
+            """Mask of self-occurrences having some other-phrase occurrence
+            in the same doc within gap <= n (checking the nearest other
+            occurrence on each side is sufficient for the minimum gap)."""
+            j = np.searchsorted(k_other, k_self)
+            jp = np.maximum(j - 1, 0)
+            pred_ok = (j > 0) & ((k_other[jp] >> np.int64(32)) == c_self)
+            gap_pred = st_self - ((k_other[jp] & np.int64(0xFFFFFFFF))
+                                  + L_other - 1) - 1
+            js = np.minimum(j, k_other.size - 1)
+            succ_ok = (j < k_other.size) & (
+                (k_other[js] >> np.int64(32)) == c_self)
+            gap_succ = (k_other[js] & np.int64(0xFFFFFFFF)) - (
+                st_self + L_self - 1) - 1
+            return (pred_ok & (gap_pred <= n)) | (succ_ok & (gap_succ <= n))
 
-            def participants(k_self, st_self, c_self, L_self,
-                             k_other, L_other):
-                """Mask of self-occurrences having some other-phrase
-                occurrence in the same doc within gap <= n (checking the
-                nearest other occurrence on each side is sufficient for
-                the minimum gap)."""
-                j = np.searchsorted(k_other, k_self)
-                jp = np.maximum(j - 1, 0)
-                pred_ok = (j > 0) & ((k_other[jp] >> np.int64(32)) == c_self)
-                gap_pred = st_self - ((k_other[jp] & np.int64(0xFFFFFFFF))
-                                      + L_other - 1) - 1
-                js = np.minimum(j, k_other.size - 1)
-                succ_ok = (j < k_other.size) & (
-                    (k_other[js] >> np.int64(32)) == c_self)
-                gap_succ = (k_other[js] & np.int64(0xFFFFFFFF)) - (
-                    st_self + L_self - 1) - 1
-                return (pred_ok & (gap_pred <= n)) | (succ_ok & (gap_succ <= n))
+        def kernel(g: pd.DataFrame) -> pd.DataFrame | None:
+            rows, cache = _term_rows(g), {}
+            ra = _shard_phrase_occurrences(rows, seq_a, decoded_cache=cache)
+            rb = _shard_phrase_occurrences(rows, seq_b, decoded_cache=cache)
+            if ra is None and rb is None:
+                return None
+            empty = (np.empty(0, np.int64),) * 5
+            oa_doc, oa_st, da, ta, dla = ra if ra is not None else empty
+            ob_doc, ob_st, db, tb, dlb = rb if rb is not None else empty
+            ud = np.union1d(da, db)
+            # align per-doc tf/doclen onto the union doc list
+            tf_a = np.zeros(ud.size, np.int64)
+            tf_b = np.zeros(ud.size, np.int64)
+            ntf_a = np.zeros(ud.size, np.int64)
+            ntf_b = np.zeros(ud.size, np.int64)
+            dl = np.zeros(ud.size, np.int64)
+            ia = np.searchsorted(ud, da)
+            ib = np.searchsorted(ud, db)
+            tf_a[ia], tf_b[ib] = ta, tb
+            dl[ia], dl[ib] = dla, dlb
+            if oa_doc.size and ob_doc.size:
+                # local doc codes (int64 ids don't fit a composite key)
+                ca = np.searchsorted(ud, oa_doc)
+                cb = np.searchsorted(ud, ob_doc)
+                ka = (ca << np.int64(32)) + oa_st  # sorted by (doc, start)
+                kb = (cb << np.int64(32)) + ob_st
+                hit_a = participants(ka, oa_st, ca, len_a, kb, len_b)
+                hit_b = participants(kb, ob_st, cb, len_b, ka, len_a)
+                ntf_a += np.bincount(ca[hit_a], minlength=ud.size)
+                ntf_b += np.bincount(cb[hit_b], minlength=ud.size)
+            return pd.DataFrame({
+                "doc_id": ud, "tf_a": tf_a, "tf_b": tf_b,
+                "near_tf_a": ntf_a, "near_tf_b": ntf_b,
+                "doclen": dl, "near": ntf_a > 0,
+            })
 
-            pdf = _concat_batches(batches)
-            if pdf is None:
-                return
-            for _, g in pdf.groupby("shard", sort=False):
-                rows = {r["term"]: r for _, r in g.iterrows()}
-                cache = {}
-                ra = _shard_phrase_occurrences(rows, seq_a,
-                                               decoded_cache=cache)
-                rb = _shard_phrase_occurrences(rows, seq_b,
-                                               decoded_cache=cache)
-                if ra is None and rb is None:
-                    continue
-                empty = (np.empty(0, np.int64),) * 5
-                oa_doc, oa_st, da, ta, dla = ra if ra is not None else empty
-                ob_doc, ob_st, db, tb, dlb = rb if rb is not None else empty
-                ud = np.union1d(da, db)
-                # align per-doc tf/doclen onto the union doc list
-                tf_a = np.zeros(ud.size, np.int64)
-                tf_b = np.zeros(ud.size, np.int64)
-                ntf_a = np.zeros(ud.size, np.int64)
-                ntf_b = np.zeros(ud.size, np.int64)
-                dl = np.zeros(ud.size, np.int64)
-                ia = np.searchsorted(ud, da)
-                ib = np.searchsorted(ud, db)
-                tf_a[ia], tf_b[ib] = ta, tb
-                dl[ia], dl[ib] = dla, dlb
-                if oa_doc.size and ob_doc.size:
-                    # local doc codes (int64 ids don't fit a composite key)
-                    ca = np.searchsorted(ud, oa_doc)
-                    cb = np.searchsorted(ud, ob_doc)
-                    ka = (ca << np.int64(32)) + oa_st  # sorted by (doc, start)
-                    kb = (cb << np.int64(32)) + ob_st
-                    hit_a = participants(ka, oa_st, ca, len_a, kb, len_b)
-                    hit_b = participants(kb, ob_st, cb, len_b, ka, len_a)
-                    ntf_a += np.bincount(ca[hit_a], minlength=ud.size)
-                    ntf_b += np.bincount(cb[hit_b], minlength=ud.size)
-                yield pd.DataFrame({
-                    "doc_id": ud, "tf_a": tf_a, "tf_b": tf_b,
-                    "near_tf_a": ntf_a, "near_tf_b": ntf_b,
-                    "doclen": dl, "near": ntf_a > 0,
-                })
-
-        return self._shard_partitioned(terms, with_positions=True).mapInPandas(
-            run, schema=schema)
+        return self._per_shard(F.col("term").isin(terms), kernel, schema,
+                               with_positions=True)
 
     def near_topk(self, phrase_a: str, phrase_b: str, n: int = 10,
                   k: int = 10) -> DataFrame:
@@ -717,32 +677,11 @@ class FtsIndex:
         BM25 term with df = its STANDALONE matching-doc count but
         tf = only the occurrences PARTICIPATING in a near pair (an extra
         far-away instance does not raise the score)."""
-        from ..query.bm25 import idf_scalar, tf_component_col
-
-        rel = self.near_relation(phrase_a, phrase_b, n).localCheckpoint(
-            eager=True)
-        counts = rel.agg(
-            F.sum(F.when(F.col("tf_a") > 0, 1).otherwise(0)).alias("df_a"),
-            F.sum(F.when(F.col("tf_b") > 0, 1).otherwise(0)).alias("df_b"),
-        ).collect()[0]
-        df_a, df_b = int(counts["df_a"] or 0), int(counts["df_b"] or 0)
-        if df_a == 0 or df_b == 0:
-            return self._empty(SCORE_SCHEMA)
-        idf_a = idf_scalar(df_a, self.meta.n_docs)
-        idf_b = idf_scalar(df_b, self.meta.n_docs)
-        scored = rel.filter("near").select(
-            "doc_id",
-            (F.lit(idf_a) * tf_component_col(F.col("near_tf_a"),
-                                             F.col("doclen"), self.meta.avgdl)
-             + F.lit(idf_b) * tf_component_col(F.col("near_tf_b"),
-                                               F.col("doclen"),
-                                               self.meta.avgdl)).alias("score"),
-        )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._virtual_term_topk(
+            self.near_relation(phrase_a, phrase_b, n), k,
+            units=(("tf_a", "near_tf_a"), ("tf_b", "near_tf_b")), where="near")
 
     def query_terms_ordered(self, query: str) -> list[str]:
-        from ..analyzer import tokenize_text
-
         return tokenize_text(query)
 
     def scorer(self):
