@@ -431,10 +431,10 @@ def q_emb_norms(spark, sf_dir):
 
 
 def q_ft_corpus_stats(spark, sf_dir):
-    from wise_spark.analyzer import tokenize_udf
+    from wise_spark.analyzer.tokenizer import term_counts_udf
 
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(F.size(tokenize_udf()(F.col("text"))).alias("dl"))
+    toks = docs.select(term_counts_udf()(F.col("text"))["doclen"].alias("dl"))
     return toks.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.round(F.avg("dl"), 6).alias("avgdl"),
@@ -443,11 +443,8 @@ def q_ft_corpus_stats(spark, sf_dir):
 
 
 def q_ft_term_df(spark, sf_dir):
-    from wise_spark.query.naive import tokens_with_tf
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return (
-        tokens_with_tf(docs)
+        _ft_corpus(spark, sf_dir).tf
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"))
         .orderBy(F.desc("df"), F.asc("term"))
@@ -456,11 +453,12 @@ def q_ft_term_df(spark, sf_dir):
 
 
 def q_ft_doc_lengths(spark, sf_dir):
-    from wise_spark.analyzer import tokenize_udf
+    from wise_spark.analyzer.tokenizer import term_counts_udf
 
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
-        "doc_id", F.size(tokenize_udf()(F.col("text"))).cast("long").alias("doclen")
+        "doc_id",
+        term_counts_udf()(F.col("text"))["doclen"].cast("long").alias("doclen"),
     ).orderBy("doc_id")
 
 

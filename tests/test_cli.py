@@ -147,3 +147,24 @@ def test_build_with_text_col_extracted_text(spark, tmp_path, capsys):
     assert rc == 0
     out = capsys.readouterr().out
     assert "built: N=6" in out
+
+
+def test_build_without_n_waves_keeps_library_auto_sizing(spark, tmp_path, capsys):
+    """`build` without --n-waves must leave the wave count to build_index's
+    auto-sizing (one wave below ~20M docs), not force a fixed count that
+    multiplies Stage C's per-wave fixed costs on a small corpus."""
+    import json
+    import os
+
+    src = str(tmp_path / "corpus_parquet")
+    spark.createDataFrame(
+        [(i, f"u{i}", f"alpha beta gamma doc {i}") for i in range(8)],
+        "doc_id long, url string, text string",
+    ).write.parquet(src)
+    idx = str(tmp_path / "idx")
+    rc = main(["build", "--input", src, "--index-dir", idx,
+               "--url-col", "url", "--n-shards", "4"])
+    assert rc == 0
+    assert "built: N=8" in capsys.readouterr().out
+    with open(os.path.join(idx, "layout.json")) as f:
+        assert json.load(f)["params"]["n_waves"] == 1

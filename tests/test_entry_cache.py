@@ -36,7 +36,7 @@ def test_ft_corpus_cache_evicts_stale_fingerprints(spark, tmp_path):
     assert len(same_path) == 1, "superseded cache entry not evicted"
     # NOTE: storageLevel can't distinguish the old from the new cache here —
     # Spark's CacheManager matches canonicalized plans and both corpora read
-    # the same parquet path — so the release is asserted structurally: the
-    # evicted corpus carried a cached handle and unpersist() ran on it
-    # (eviction above), and the new corpus is the only cached entry left.
-    assert c2.cached is not None and c2.cached is not c1.cached
+    # the same parquet path — so the release is asserted structurally:
+    # unpersist() ran on the evicted corpus (eviction above), and the new
+    # corpus holds its own cached tf relation, the only cached entry left.
+    assert c2.tf.is_cached and c2.tf is not c1.tf

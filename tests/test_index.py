@@ -253,9 +253,9 @@ def test_resume_rebuilds_on_param_change(spark, corpus_sdf, tmp_path):
     d = str(tmp_path / "idx_params")
     build_index(corpus_sdf, d, url_col="url", n_shards=4, n_buckets=4,
                 n_waves=1, with_positions=False)
-    # same dir, positions now requested, resume on (the default)
+    # same dir, positions now requested (a build always resumes)
     meta = build_index(corpus_sdf, d, url_col="url", n_shards=4, n_buckets=4,
-                       n_waves=1, with_positions=True, resume=True)
+                       n_waves=1, with_positions=True)
     idx = FtsIndex(spark, d, meta)
     # the rebuilt index actually carries positions: phrase search works and
     # agrees with a fresh positional build
@@ -298,7 +298,7 @@ def test_resume_rebuilds_on_column_binding_change(spark, corpus_sdf, tmp_path):
                      n_waves=1)
     docs2 = corpus_sdf.withColumn("brief", F.substring("text", 1, 30))
     m2 = build_index(docs2, d, url_col="url", text_col="brief", n_shards=4,
-                     n_buckets=4, n_waves=1, resume=True)
+                     n_buckets=4, n_waves=1)
     assert m2.total_tokens < m1.total_tokens, (
         "resume reused tokens baked from the OLD text column"
     )

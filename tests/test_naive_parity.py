@@ -41,6 +41,24 @@ def corpus(corpus_sdf):
     return TokenizedCorpus.build(corpus_sdf, cache=True)
 
 
+@pytest.fixture(scope="module")
+def edge(spark, corpus_pdf):
+    """The fixture corpus plus hostile documents: an empty text, a None
+    text, a punctuation-only text (all three doclen 0, still counted in N)
+    and a doc_id near 2^63 whose text ties doc 0's (tie-break by doc_id)."""
+    import pandas as pd
+
+    extra = pd.DataFrame({
+        "doc_id": [300, 301, 302, 2**63 - 2],
+        "text": ["", None, " ...,;!? -- ", corpus_pdf["text"].iloc[0]],
+    })
+    pdf = pd.concat([corpus_pdf[["doc_id", "text"]], extra], ignore_index=True)
+    c = TokenizedCorpus.build(
+        spark.createDataFrame(pdf, "doc_id long, text string"), cache=True)
+    yield c, PandasBM25Oracle(pdf)
+    c.unpersist()
+
+
 def test_fts5_is_available():
     # the whole rank-identity story leans on this; fail loudly if absent
     assert fts5_available()
@@ -64,13 +82,34 @@ def test_pandas_oracle_vs_fts5(oracles, corpus_pdf, mode):
 
 
 @pytest.mark.parametrize("mode", ["all", "any"])
-def test_naive_spark_vs_pandas_oracle(corpus, oracles, mode):
-    pd_oracle, _ = oracles
+def test_naive_spark_vs_pandas_oracle(corpus, oracles, edge, mode):
     k = 25
-    for q in QUERIES:
-        got = naive_topk(corpus, q, k=k, mode=mode).toPandas()
-        want = pd_oracle.score_all(q, mode)
-        assert_rank_identical(got, want, k, msg=f"{mode}:{q}")
+    for name, (c, pd_oracle) in {"fixture": (corpus, oracles[0]),
+                                 "edge": edge}.items():
+        assert c.n_docs == pd_oracle.n_docs, name
+        assert abs(c.avgdl - pd_oracle.avgdl) <= 1e-12, name
+        for q in QUERIES:
+            got = naive_topk(c, q, k=k, mode=mode).toPandas()
+            want = pd_oracle.score_all(q, mode)
+            assert_rank_identical(got, want, k, msg=f"{name}:{mode}:{q}")
+
+
+@pytest.mark.parametrize("cache", [True, False])
+def test_corpus_build_runs_one_spark_job(spark, corpus_sdf, cache):
+    """TokenizedCorpus.build tokenizes, fills the cache (cache=True) and
+    observes exact N/avgdl in ONE Spark job — no separate stats action."""
+    sc = spark.sparkContext
+    group = f"naive-corpus-build-{cache}"
+    sc.setJobGroup(group, "TokenizedCorpus.build")
+    try:
+        c = TokenizedCorpus.build(corpus_sdf, cache=cache)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()   # job events are async
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    c.unpersist()
+    assert len(jobs) == 1, sorted(jobs)
+    assert c.n_docs == 300
 
 
 def test_empty_and_absent_queries(corpus):

@@ -1,9 +1,8 @@
-from .tokenizer import tokenize_text, tokenize_udf, TOKEN_PATTERN
+from .tokenizer import tokenize_text, TOKEN_PATTERN
 from .html import extract_text, extract_text_udf
 
 __all__ = [
     "tokenize_text",
-    "tokenize_udf",
     "TOKEN_PATTERN",
     "extract_text",
     "extract_text_udf",

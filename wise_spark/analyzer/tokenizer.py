@@ -42,29 +42,6 @@ def tokenize_text(text: str) -> list[str]:
     return TOKEN_PATTERN.findall(unicodedata.normalize("NFKC", text).casefold())
 
 
-def _tokenize_series(s: pd.Series) -> pd.Series:
-    # Vectorized over the Arrow batch: normalize+casefold via str accessor
-    # would not apply NFKC, so map the (C-level) normalize; findall is the
-    # single regex pass.  This stays batch-oriented — one Python call per
-    # *value*, but inside one Arrow batch per task, no per-row UDF dispatch.
-    return s.map(tokenize_text, na_action=None)
-
-
-def tokenize_udf():
-    """Scalar pandas_udf: StringType -> ArrayType(StringType).
-
-    Built lazily so importing this module never requires an active JVM.
-    """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    @pandas_udf(ArrayType(StringType()))
-    def tokenize(s: pd.Series) -> pd.Series:
-        return _tokenize_series(s)
-
-    return tokenize
-
-
 def term_counts_udf():
     """Scalar pandas_udf: text -> struct(doclen, counts: array<(term, tf)>).
 

@@ -299,7 +299,7 @@ def main(argv: list[str] | None = None) -> int:
                    help="capture-timestamp column for url dedup (dedup is "
                         "skipped with a note when the column is absent)")
     b.add_argument("--n-shards", type=int, default=None)
-    b.add_argument("--n-waves", type=int, default=4)
+    b.add_argument("--n-waves", type=int, default=None)
     _add_common(b)
     b.set_defaults(fn=cmd_build)
 

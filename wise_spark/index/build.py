@@ -884,15 +884,15 @@ def _write_doc_map(spark: SparkSession, index_dir: str, url_col: str | None) -> 
 
 def _write_segments(
     spark: SparkSession, index_dir: str, params: dict, avgdl: float,
-    resume: bool, fail_after_waves: int | None,
+    fail_after_waves: int | None,
 ) -> None:
     """Stage C: two-phase posting build, one Spark job per wave, skipping
-    the waves lineage records as done when resuming."""
+    the waves lineage already records as done (a resumed build)."""
     tokens_path = os.path.join(index_dir, "tokens")
     segments_path = os.path.join(index_dir, "segments")
     n_buckets, with_positions = params["n_buckets"], params["with_positions"]
     par = spark.sparkContext.defaultParallelism
-    done_units = _completed_units(spark, index_dir, "segments") if resume else set()
+    done_units = _completed_units(spark, index_dir, "segments")
     tf_all = spark.read.parquet(tokens_path)
     os.makedirs(segments_path, exist_ok=True)
     for w in range(params["n_waves"]):
@@ -961,22 +961,22 @@ def _write_segments(
 
 
 def _index_from_tokens(
-    spark: SparkSession, index_dir: str, params: dict, resume: bool = True,
+    spark: SparkSession, index_dir: str, params: dict,
     fail_after_waves: int | None = None,
 ) -> IndexMeta:
     """Stages B-D and meta.json over index_dir's finished tokens checkpoint:
     a pure function of that checkpoint and `params`."""
     doc_map_path = os.path.join(index_dir, "doc_map")
     terms_path = os.path.join(index_dir, "terms")
-    if not (resume and _done(doc_map_path)):
+    if not _done(doc_map_path):
         _write_doc_map(spark, index_dir, params["url_col"])
     n_docs, total_tokens = _corpus_stats(spark, doc_map_path)
     avgdl = (total_tokens / n_docs) if n_docs else 0.0
 
-    _write_segments(spark, index_dir, params, avgdl, resume, fail_after_waves)
+    _write_segments(spark, index_dir, params, avgdl, fail_after_waves)
 
     # Stage D: exact term df table (range-partitioned, sorted)
-    if not (resume and _done(terms_path)):
+    if not _done(terms_path):
         t0 = time.time()
         _write_terms(spark, os.path.join(index_dir, "segments"), terms_path,
                      max(2, params["n_buckets"] // 4))
@@ -1008,7 +1008,6 @@ def build_index(
     n_shards: int | None = None,
     n_buckets: int = 32,
     n_waves: int | None = None,
-    resume: bool = True,
     with_positions: bool = False,
     fail_after_waves: int | None = None,  # test hook: simulate a mid-build kill
 ) -> IndexMeta:
@@ -1048,9 +1047,9 @@ def build_index(
     if _read_layout(index_dir) != (LAYOUT_VERSION, params):
         _reset_index_dir(index_dir, params)
 
-    if not (resume and _done(os.path.join(index_dir, "tokens"))):
+    if not _done(os.path.join(index_dir, "tokens")):
         _write_tokens(docs, index_dir, params, mode="overwrite")
-    return _index_from_tokens(spark, index_dir, params, resume, fail_after_waves)
+    return _index_from_tokens(spark, index_dir, params, fail_after_waves)
 
 
 def extend_index(

@@ -1,12 +1,10 @@
-from .bm25 import idf as bm25_idf, tf_component
-from .naive import naive_topk, tokens_with_tf
+from .bm25 import tf_component
+from .naive import naive_topk
 from .search import SearchResult, search, export_csv, page
 
 __all__ = [
-    "bm25_idf",
     "tf_component",
     "naive_topk",
-    "tokens_with_tf",
     "SearchResult",
     "search",
     "page",

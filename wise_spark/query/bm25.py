@@ -26,16 +26,8 @@ from .. import B, IDF_FLOOR, K1
 SCORE_SCHEMA = "doc_id long, score double"
 
 
-def idf(df: np.ndarray | float, n_docs: int) -> np.ndarray | float:
-    """FTS5 idf with the 1e-6 floor. Accepts scalars or numpy arrays."""
-    raw = np.log((n_docs - np.asarray(df, dtype=np.float64) + 0.5) / (np.asarray(df, dtype=np.float64) + 0.5))
-    out = np.where(raw <= 0.0, IDF_FLOOR, raw)
-    if np.isscalar(df) or getattr(df, "ndim", 0) == 0:
-        return float(out)
-    return out
-
-
 def idf_scalar(df: int, n_docs: int) -> float:
+    """FTS5 idf with the 1e-6 floor."""
     raw = math.log((n_docs - df + 0.5) / (df + 0.5))
     return raw if raw > 0.0 else IDF_FLOOR
 
