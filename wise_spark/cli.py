@@ -29,6 +29,14 @@ def _add_common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--shuffle-partitions", type=int, default=32)
 
 
+def _read_blocklist(path: str | None) -> set[str]:
+    """The blocked queries in `path`, one per line (empty set: no blocklist)."""
+    if not path:
+        return set()
+    with open(path) as f:
+        return {ln.strip() for ln in f if ln.strip()}
+
+
 def cmd_build(args) -> int:
     from .index import build_index
     from .session import get_spark
@@ -85,10 +93,7 @@ def cmd_search(args) -> int:
 
     spark = get_spark(args.master, "wise_search", args.shuffle_partitions)
     idx = FtsIndex.load(spark, args.index_dir, cache=not args.no_cache)
-    blocklist: set[str] | None = None
-    if args.blocklist:
-        with open(args.blocklist) as f:
-            blocklist = {ln.strip() for ln in f if ln.strip()}
+    blocklist = _read_blocklist(args.blocklist)
 
     queries: list[tuple[str, str]] = []
     if args.queries_from:
@@ -185,10 +190,7 @@ def cmd_console(args) -> int:
 
     spark = get_spark(args.master, "wise_console", args.shuffle_partitions)
     idx = FtsIndex.load(spark, args.index_dir, cache=not args.no_cache)
-    blocklist: set[str] | None = None
-    if args.blocklist:
-        with open(args.blocklist) as f:
-            blocklist = {ln.strip() for ln in f if ln.strip()}
+    blocklist = _read_blocklist(args.blocklist)
     print("Starting wise_spark search console ... (press Ctrl + D to exit)")
     print('example: --query "spark merge" --mode any --topk 5')
     cmd_id = 0
@@ -255,10 +257,7 @@ def cmd_serve(args) -> int:
 
     spark = get_spark(args.master, "wise_serve", args.shuffle_partitions)
     idx = FtsIndex.load(spark, args.index_dir, cache=not args.no_cache)
-    blocklist: set[str] = set()
-    if args.blocklist:
-        with open(args.blocklist) as f:
-            blocklist = {ln.strip() for ln in f if ln.strip()}
+    blocklist = _read_blocklist(args.blocklist)
     resolver = None
     if args.media_table:
         resolver = parquet_media_resolver(

@@ -198,6 +198,11 @@ class FtsIndex:
     def load(cls, spark: SparkSession, index_dir: str, cache: bool = False) -> "FtsIndex":
         return cls(spark, index_dir, IndexMeta.load(index_dir), cache=cache)
 
+    def unpersist(self) -> None:
+        """Release the pinned segments (no-op unless loaded with cache=True)."""
+        if self._cached_by_shard:
+            self._segments.unpersist()
+
     # -- plumbing ------------------------------------------------------------
 
     def doc_map(self) -> DataFrame:

@@ -57,24 +57,20 @@ def or_merge(a: SearchResult, b: SearchResult) -> SearchResult:
     )
 
 
-def ranked(result: SearchResult, k: int | None = None) -> DataFrame:
-    """Attach rank = position under (score desc, doc_id asc); optional top-k.
+def ranked(result: SearchResult, k: int) -> DataFrame:
+    """Top-k of result with rank = position under (score desc, doc_id asc).
 
     Rank is carried as an explicit column so joins can't destroy order
     (reference keeps order with `ORDER BY CASE id ...`,
     /root/reference/src/repository/__init__.py:65-74).
 
-    Scale shape: with k, top-k FIRST via orderBy().limit(k) — Catalyst plans
+    Scale shape: top-k FIRST via orderBy().limit(k) — Catalyst plans
     TakeOrderedAndProject (per-partition heaps + tiny driver merge) — and the
-    rank window runs over <= k surviving rows. Without k, rank is computed by
-    range-repartition + per-partition offsets (see global_ranked) — there is
-    NO unbounded single-partition Window anywhere in the search path.
+    rank window runs over <= k surviving rows.
     """
-    if k is not None:
-        topk = result.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        w = Window.orderBy(F.desc("score"), F.asc("doc_id"))  # <= k rows
-        return topk.withColumn("rank", F.row_number().over(w) - 1).orderBy("rank")
-    return global_ranked(result)
+    topk = result.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    w = Window.orderBy(F.desc("score"), F.asc("doc_id"))  # <= k rows
+    return topk.withColumn("rank", F.row_number().over(w) - 1).orderBy("rank")
 
 
 def ranked_per(result: DataFrame, k: int, per: str = "query_id") -> DataFrame:
@@ -118,51 +114,6 @@ def page(result: SearchResult, start: int = 0, end: int = 20) -> DataFrame:
     if start > end:
         raise ValueError("'start' cannot be greater than 'end'")
     return ranked(result, k=end).filter(F.col("rank") >= start)
-
-
-def global_ranked(result: SearchResult, num_partitions: int | None = None) -> DataFrame:
-    """Global rank over an UNBOUNDED result without a single-partition window.
-
-    Two scalable jobs: (1) range-repartition by (score desc, doc_id asc) and
-    count rows per partition (a handful of longs to the driver); (2) emit
-    rank = partition_offset + local position via mapInPandas. Every partition
-    holds a contiguous rank range, so ordering across partitions is free.
-
-    Requires a deterministic input plan (both jobs recompute the range
-    partitioning; Spark's range sampler is seeded per-partition, so identical
-    input -> identical bounds). All wise_spark scorers are deterministic.
-    """
-    import pandas as pd
-
-    spark = result.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    parts = result.repartitionByRange(
-        n, F.desc("score"), F.asc("doc_id")
-    ).sortWithinPartitions(F.desc("score"), F.asc("doc_id"))
-    parts = parts.withColumn("_pid", F.spark_partition_id())
-    counts = dict(
-        (r["_pid"], r["c"])
-        for r in parts.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect()
-    )
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    def attach(batches):
-        pos = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if pos is None:
-                pos = offsets[int(pdf["_pid"].iloc[0])]
-            pdf = pdf.drop(columns=["_pid"])
-            pdf["rank"] = pd.RangeIndex(pos, pos + len(pdf))
-            pos += len(pdf)
-            yield pdf
-
-    schema = parts.drop("_pid").schema.add("rank", "long")
-    return parts.mapInPandas(attach, schema=schema).orderBy("rank")
 
 
 def search(
