@@ -492,11 +492,24 @@ def test_quality_and_langid(small_docs):
     assert lg.loc[0, "lang_guess"] == "en"
 
 
-def test_ngram_jaccard_hot_shingle_cap(spark):
+def _cap_drops(caplog, what, cap):
+    """Dropped counts of the posting-cap log records for `what` at `cap`."""
+    import re
+
+    pat = re.compile(rf"dropped (\d+) {what} with df > {cap}")
+    return [int(m.group(1)) for m in
+            (pat.search(r.getMessage()) for r in caplog.records) if m]
+
+
+def test_ngram_jaccard_hot_shingle_cap(spark, caplog):
     """The pipeline-default hot-shingle cap prunes shingles above the df cap
     from the self-join: docs that only share BOILERPLATE stay unpaired,
     docs sharing rare shingles still pair."""
+    import logging
+
     from wise_spark.pipeline import ngram_jaccard_pairs
+
+    caplog.set_level(logging.WARNING)
 
     boiler = "all rights reserved contact us for terms"
     rows = [(i, f"{boiler} page {i} unique") for i in range(6)]
@@ -508,10 +521,14 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
                                   max_shingle_df=3).collect()}
     assert (10, 11) in capped
     assert not any(a < 6 and b < 6 for a, b in capped)
+    drops = _cap_drops(caplog, "shingles", 3)
+    assert len(drops) == 1 and drops[0] > 0, caplog.text
+    caplog.clear()
     exact = {(r["doc_a"], r["doc_b"]) for r in
              ngram_jaccard_pairs(docs, n=3, threshold=0.3,
                                  max_shingle_df=None).collect()}
     assert (10, 11) in exact and any(a < 6 and b < 6 for a, b in exact)
+    assert "dropped" not in caplog.text
 
 
 def test_dedup_plans_materialize_base_relation_once(spark, small_docs):
@@ -872,12 +889,16 @@ def test_rebalance_guard_is_row_group_aware(spark, tmp_path):
         assert rebalance_narrow_scan(healthy_df) is healthy_df
 
 
-def test_simhash_winnow_hot_bucket_caps(spark):
+def test_simhash_winnow_hot_bucket_caps(spark, caplog):
     """Degenerate corpus (hundreds of identical boilerplate docs sharing
     every simhash chunk / winnow fingerprint) must not go quadratic: the
     df caps drop the hot buckets — and with them every boilerplate-only
     pair — while a planted pair with its own cold buckets survives."""
+    import logging
+
     from wise_spark.pipeline import simhash_pairs, winnow_pairs
+
+    caplog.set_level(logging.WARNING)
 
     boiler = ("click here to accept all cookies and subscribe to our "
               "newsletter for daily updates delivered to your inbox")
@@ -890,11 +911,16 @@ def test_simhash_winnow_hot_bucket_caps(spark):
     sh_pairs = {(r["doc_a"], r["doc_b"]) for r in sh}
     assert (1000, 1001) in sh_pairs
     assert not any(a < 300 for a, _ in sh_pairs), "hot buckets not dropped"
+    drops = _cap_drops(caplog, "chunk buckets", 50)
+    assert len(drops) == 1 and drops[0] > 0, caplog.text
 
     wn = winnow_pairs(docs, k=4, w=4, min_shared=2, max_fp_df=50).collect()
     wn_pairs = {(r["doc_a"], r["doc_b"]) for r in wn}
     assert (1000, 1001) in wn_pairs
     assert not any(a < 300 for a, _ in wn_pairs), "hot fps not dropped"
+    drops = _cap_drops(caplog, "fingerprints", 50)
+    assert len(drops) == 1 and drops[0] > 0, caplog.text
+    caplog.clear()
 
     # cap=None keeps the exact quadratic semantics (the oracle-check mode):
     # boilerplate pairs reappear
@@ -902,6 +928,7 @@ def test_simhash_winnow_hot_bucket_caps(spark):
                           max_hamming=3).collect()
     assert any(a < 10 and b < 10
                for a, b in ((r["doc_a"], r["doc_b"]) for r in exact))
+    assert "dropped" not in caplog.text
 
 
 def test_exact_neardup_duplicate_ids_and_empty_blocks(spark):
@@ -1102,6 +1129,13 @@ def test_doc_local_kernels_match_jvm_expression_formulations(spark):
         (5, None),
         (6, "one two three one two three one two three"),
         (7, "Spark SQL joins MERGE and WINDOW functions 42 times"),
+        # non-ASCII: only the ASCII runs are tokens, identically in Python's
+        # lower() + re and the JVM's lower() + regexp_extract_all (the
+        # U+212A KELVIN SIGN lowers to ASCII 'k' in both)
+        (8, "Café naïve ÉCOLE 42"),
+        (9, "İstanbul KELVIN \u212a straße"),
+        (10, "ＡＢＣ full-width ２０"),
+        (11, "Ωmega σς ﬁle"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     toks = _toks("text")

@@ -111,7 +111,7 @@ def cmd_search(args) -> int:
         t0 = time.time()
         try:
             res = search(
-                idx.scorer(), qtext, k=args.topk, mode=args.mode,
+                idx.score_all, qtext, k=args.topk, mode=args.mode,
                 not_query=args.not_query, blocklist=blocklist,
             )
             if args.hydrate:

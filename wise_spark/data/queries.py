@@ -57,12 +57,3 @@ def reference_queries(vocab_size: int = DEFAULT_VOCAB, n: int = 60) -> list[tupl
         add(f"{wi(r)} {wi((r * 7) % max(1, V - 20) + 10)}")
         r += 13
     return qs[:n]
-
-
-def queries_csv(path: str, vocab_size: int = DEFAULT_VOCAB, n: int = 60) -> None:
-    import csv
-
-    with open(path, "w", newline="") as f:
-        wtr = csv.writer(f)
-        wtr.writerow(["query_id", "query_text"])
-        wtr.writerows(reference_queries(vocab_size, n))

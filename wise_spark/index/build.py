@@ -60,6 +60,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import B, K1
 from .codec import encode_postings_many
 
 # ONE packed row per document (shard = doc_id % n_shards, so every term of a
@@ -99,9 +100,6 @@ SEGMENT_SCHEMA = (
     "term string, shard int, n long, docids binary, tfs binary, doclens binary, "
     "positions binary, blk_last array<long>, blk_max array<double>, "
     "max_tfc double, sum_tf long"
-)
-LINEAGE_SCHEMA = (
-    "stage string, unit string, status string, rows long, bytes long, wall_ms long"
 )
 
 # above this many rows, corpus stats and the sorted doc_map/terms tables
@@ -161,8 +159,8 @@ class IndexMeta:
     n_terms: int
     n_shards: int
     n_buckets: int
-    k1: float = 1.2
-    b: float = 0.75
+    k1: float = K1
+    b: float = B
     version: int = 1
     extras: dict = field(default_factory=dict)
 
@@ -206,9 +204,6 @@ def _parquet_footer_stats(path: str) -> tuple[int, int]:
                 for ci in range(g.num_columns):
                     nbytes += g.column(ci).total_compressed_size
     return rows, nbytes
-
-
-_LINEAGE_COLS = ["stage", "unit", "status", "rows", "bytes", "wall_ms"]
 
 
 def _append_lineage(spark: SparkSession, index_dir: str, rows: list[tuple]) -> None:

@@ -689,10 +689,6 @@ class FtsIndex:
     def query_terms_ordered(self, query: str) -> list[str]:
         return tokenize_text(query)
 
-    def scorer(self):
-        """(query, mode) -> score_all DataFrame, for wise_spark.query.search."""
-        return lambda q, m="all": self.score_all(q, m)
-
     # hydrate collects hits driver-side up to this cap; the reference's page
     # cap is 1000, so any search-path result fits with a wide margin
     HYDRATE_ISIN_MAX = 10_000

@@ -9,8 +9,8 @@ operator (scale first, oracle-parity second):
                    Jaccard from |A∩B| and set sizes. At 100 TB the hot
                    shingles dominate: `max_shingle_df` drops shingles shared
                    by more than a cap of documents (standard posting-cap
-                   trick); with the cap at default None the result is exact
-                   and matches the DuckDB oracle.
+                   trick); with the cap at None the result is exact and
+                   matches the DuckDB oracle.
   * MinHash+LSH  — portable signatures: minhash_i = min over shingles of
                    md5(shingle || ':' || i) (lexicographic min of hex —
                    identical in Spark and DuckDB, no engine-specific hash);
@@ -23,7 +23,10 @@ operator (scale first, oracle-parity second):
 Per-document computations (shingle sets, signatures, fingerprints) run as
 Arrow-vectorized mapInPandas kernels (guide §4.2 — batch-oriented, never
 per-row UDF dispatch); everything that joins or aggregates across documents
-stays pure DataFrame ops.
+stays pure DataFrame ops. The kernels tokenize with `text._ascii_tokens`
+and `text._ngrams`, the Python twins of the oracles' tokenizer, and every
+bucket self-join's posting cap (`max_shingle_df`, `max_chunk_df`, and
+winnow_pairs' `max_fp_df`) is `text._drop_hot`.
 """
 
 from __future__ import annotations
@@ -35,9 +38,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .text import (
-    ASCII_TOKEN_RE,
     REBALANCE_CHUNK_BYTES_HASHING,
+    _ascii_tokens,
     _doc_local_kernel,
+    _drop_hot,
+    _ngrams,
+    _shared_key_pairs,
 )
 
 
@@ -57,14 +63,10 @@ def _shingle_set_py(text: str, n: int) -> list | None:
     JVM formulation (dict.fromkeys preserves first occurrence exactly like
     array_distinct; every consumer is order-free anyway). None for docs
     with < n tokens (those emitted no row)."""
-    import re as _re
-
-    toks = _re.findall(ASCII_TOKEN_RE, text.lower()) if text is not None else []
+    toks = _ascii_tokens(text)
     if len(toks) < n:
         return None
-    return list(dict.fromkeys(
-        " ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)
-    ))
+    return list(dict.fromkeys(_ngrams(toks, n)))
 
 
 def shingle_arrays(docs: DataFrame, n: int = 3, id_col: str = "doc_id",
@@ -87,6 +89,8 @@ def shingles(docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str 
     )
 
 
+# the pipeline-default posting cap of ngram_jaccard_pairs, applied by
+# text._drop_hot like the opt-in caps of simhash_pairs and winnow_pairs
 DEFAULT_MAX_SHINGLE_DF = 10_000
 
 
@@ -102,37 +106,16 @@ def ngram_jaccard_pairs(
     threshold.
 
     The shingle self-join fans out quadratically in a shingle's document
-    frequency, so the DEFAULT caps it: shingles appearing in more than
-    `max_shingle_df` docs are dropped from both the join and the set sizes
-    (a boilerplate shingle shared by 1% of a 10^12-doc corpus would
-    otherwise emit 10^19 candidate pairs). The number of dropped shingles
-    is logged. Pass max_shingle_df=None for the exact quadratic semantics
-    (small corpora / oracle checks only)."""
-    sh = shingles(docs, n, id_col, text_col)
+    frequency, so the DEFAULT caps it: `_drop_hot` drops shingles appearing
+    in more than `max_shingle_df` docs from both the join and the set sizes
+    and logs how many it dropped. Pass max_shingle_df=None for the exact
+    quadratic semantics (small corpora / oracle checks only)."""
     if max_shingle_df is not None:
-        # localCheckpoint, not cache(): the hot relation feeds two consumers
-        # (the count below and the left_anti join inside the returned lazy
-        # plan), and a persist() with no unpersist() would pin executor
-        # storage for the life of the session across repeated calls —
-        # checkpoint blocks are freed by the ContextCleaner once the result
-        # DataFrame is dropped.
-        hot = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("sdf")).filter(
-            F.col("sdf") > max_shingle_df
-        ).localCheckpoint(eager=True)
-        n_hot = hot.count()
-        if n_hot:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "ngram_jaccard_pairs: dropped %d shingles with df > %d "
-                "(pairs among ONLY-hot-shingle docs are not reported)",
-                n_hot, max_shingle_df,
-            )
-        sh = sh.join(hot, "shingle", "left_anti")
         # materialize the capped relation ONCE: it feeds three consumers
         # (sizes, both sides of the self-join); checkpoint blocks are freed
         # by the ContextCleaner with the result.
-        sh = sh.localCheckpoint(eager=True)
+        sh = _drop_hot(shingles(docs, n, id_col, text_col), ["shingle"],
+                       max_shingle_df, "shingles").localCheckpoint(eager=True)
         sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
     else:
         # exact mode: materialize ONE row per doc carrying its distinct
@@ -147,16 +130,9 @@ def ngram_jaccard_pairs(
         )
         sizes = doc_sh.select("doc_id", F.size("shs").alias("set_size"))
         sh = doc_sh.select("doc_id", F.explode("shs").alias("shingle"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, "shingle")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
     out = (
-        common.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("set_size", "size_a"), "doc_a")
+        _shared_key_pairs(sh, "shingle", "common")
+        .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("set_size", "size_a"), "doc_a")
         .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("set_size", "size_b"), "doc_b")
         .withColumn(
             "jaccard",
@@ -179,12 +155,10 @@ def _minhash_sig_py(text: str, n: int) -> list | None:
     min over lowercase hex == Spark's UTF8 binary min. Returns None for
     docs with < n tokens (the explode-based version emitted no row)."""
     import hashlib
-    import re as _re
 
-    toks = _re.findall(ASCII_TOKEN_RE, text.lower()) if text is not None else []
-    if len(toks) < n:
+    grams = _shingle_set_py(text, n)
+    if grams is None:
         return None
-    grams = {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
     mins = [None] * N_HASHES
     for g in grams:
         for i in range(N_HASHES):
@@ -263,10 +237,9 @@ def _simhash64_py(text: str) -> str | None:
     the value is identical to the previous 64-column JVM-expression
     formulation and to the DuckDB oracle. Returns None for docs with no
     tokens (the explode-based formulation emitted no row for them)."""
-    import re as _re
     from collections import Counter
 
-    toks = _re.findall(ASCII_TOKEN_RE, text.lower()) if text is not None else []
+    toks = _ascii_tokens(text)
     if not toks:
         return None
     votes = _np.zeros(64, dtype=_np.int64)
@@ -339,12 +312,13 @@ def simhash_pairs(
     shuffle is uniform (chunk values are hash-like). This is the standard
     Manku/Jain/Sarma web-dedup layout re-expressed as a DataFrame equi-join.
 
-    `max_chunk_df` caps bucket size exactly like ngram_jaccard_pairs'
-    max_shingle_df: a degenerate corpus (thousands of near-empty docs
-    sharing a chunk value — template boilerplate at crawl scale) makes one
-    bucket quadratic; chunks with df above the cap are dropped from the
-    candidate join with a logged count (pairs agreeing ONLY on dropped
-    chunks are not reported). None = exact semantics (oracle checks).
+    `max_chunk_df` caps bucket size with `_drop_hot`, like
+    ngram_jaccard_pairs' max_shingle_df: a degenerate corpus (thousands of
+    near-empty docs sharing a chunk value — template boilerplate at crawl
+    scale) makes one bucket quadratic; chunks with df above the cap are
+    dropped from the candidate join with a logged count (pairs agreeing
+    ONLY on dropped chunks are not reported). None = exact semantics
+    (oracle checks).
     """
     n_chunks = max_hamming + 1
     width = 64 // n_chunks
@@ -367,26 +341,8 @@ def simhash_pairs(
     allc = sig.select("doc_id", "simhash", F.explode(chunk_structs).alias("ck")).select(
         "doc_id", "simhash", "ck.chunk_id", "ck.chunk_val"
     )
-    if max_chunk_df is not None:
-        hot = (
-            allc.groupBy("chunk_id", "chunk_val")
-            .agg(F.count(F.lit(1)).alias("cdf"))
-            .filter(F.col("cdf") > max_chunk_df)
-            .localCheckpoint(eager=True)
-        )
-        n_hot = hot.count()
-        if n_hot:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "simhash_pairs: dropped %d chunk buckets with df > %d "
-                "(pairs agreeing only on dropped chunks are not reported)",
-                n_hot, max_chunk_df,
-            )
-        allc = allc.join(
-            hot.select("chunk_id", "chunk_val"),
-            ["chunk_id", "chunk_val"], "left_anti",
-        )
+    allc = _drop_hot(allc, ["chunk_id", "chunk_val"], max_chunk_df,
+                     "chunk buckets")
     a, b = allc.alias("a"), allc.alias("b")
     return (
         a.join(b, ["chunk_id", "chunk_val"])

@@ -10,6 +10,9 @@ text) — equal to the engine analyzer on ASCII corpora and expressible as
 
 from __future__ import annotations
 
+import logging
+import re
+
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
@@ -20,6 +23,59 @@ STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it", "that", "for"]
 def _toks(text_col: str):
     # regexp_extract_all is JVM-side (whole-stage codegen) — no Python UDF
     return F.expr(f"regexp_extract_all(lower({text_col}), '{ASCII_TOKEN_RE}', 0)")
+
+
+def _ascii_tokens(text: str | None) -> list[str]:
+    """Python twin of `_toks` for the doc-local kernels: the same token list
+    as the JVM expression and the DuckDB oracle, [] for None."""
+    return re.findall(ASCII_TOKEN_RE, text.lower()) if text is not None else []
+
+
+def _ngrams(toks: list[str], n: int):
+    """Space-joined token n-grams of `toks`, in occurrence order."""
+    return (" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1))
+
+
+def _drop_hot(rel: DataFrame, keys: list[str], cap: int | None,
+              what: str) -> DataFrame:
+    """The posting cap of every bucket self-join: drop the `keys` buckets
+    holding more than `cap` rows, logging how many were dropped. A hot
+    bucket's self-join fans out quadratically in its size (a boilerplate
+    shingle shared by 1% of a 10^12-doc corpus would emit 10^19 candidate
+    pairs); pairs held together only by dropped buckets are not reported.
+    cap=None is the exact semantics (oracle checks): `rel` is returned
+    unchanged, with no job and no plan change.
+
+    localCheckpoint, not cache(): the hot relation feeds two consumers (the
+    count and the left_anti join inside the returned lazy plan), and a
+    persist() with no unpersist() would pin executor storage for the life
+    of the session; checkpoint blocks are freed by the ContextCleaner once
+    the result is dropped."""
+    if cap is None:
+        return rel
+    hot = (
+        rel.groupBy(*keys).agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > cap)
+        .select(*keys)
+        .localCheckpoint(eager=True)
+    )
+    n_hot = hot.count()
+    if n_hot:
+        logging.getLogger(__name__).warning(
+            "dropped %d %s with df > %d", n_hot, what, cap)
+    return rel.join(hot, keys, "left_anti")
+
+
+def _shared_key_pairs(rel: DataFrame, key: str, count_col: str) -> DataFrame:
+    """(doc_a < doc_b, count_col): the number of `key` values each pair of
+    documents shares, as one equi-join of (doc_id, key) rows with itself."""
+    a, b = rel.alias("a"), rel.alias("b")
+    return (
+        a.join(b, key)
+        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias(count_col))
+    )
 
 
 def _effective_scan_parallelism(df: DataFrame, planned: int) -> int:
@@ -252,10 +308,7 @@ def repetition_features(
     from collections import Counter
 
     def rep_one(text: str) -> dict:
-        import re as _re
-
-        toks = (_re.findall(ASCII_TOKEN_RE, text.lower())
-                if text is not None else [])
+        toks = _ascii_tokens(text)
         n_chars = len(text) if text is not None else 0
         out: dict = {}
         for n in ns:
@@ -263,9 +316,7 @@ def repetition_features(
                 out[f"d{n}"] = None
                 out[f"t{n}"] = None
                 continue
-            cnt = Counter(
-                " ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)
-            )
+            cnt = Counter(_ngrams(toks, n))
             occ = sum(cnt.values())
             dis = len(cnt)
             out[f"d{n}"] = (occ - dis) / occ
@@ -322,15 +373,12 @@ def winnow_fingerprints(
         # fixed-length lowercase hex strings is the same lexicographic min;
         # sorted(set(...)) == array_sort(array_distinct(...))
         import hashlib
-        import re as _re
 
-        toks = _re.findall(ASCII_TOKEN_RE, text.lower()) if text is not None else []
+        toks = _ascii_tokens(text)
         if len(toks) < k + w - 1:
             return None
-        hs = [
-            hashlib.md5(" ".join(toks[i:i + k]).encode("utf-8")).hexdigest()[:8]
-            for i in range(len(toks) - k + 1)
-        ]
+        hs = [hashlib.md5(g.encode("utf-8")).hexdigest()[:8]
+              for g in _ngrams(toks, k)]
         wins = {min(hs[i:i + w]) for i in range(len(hs) - w + 1)}
         return sorted(wins)
 
@@ -362,44 +410,19 @@ def winnow_pairs(
     the winnowed ~2/(w+1) subset, so the self-join fan-out shrinks
     quadratically in the selection rate).
 
-    `max_fp_df` caps bucket size like ngram_jaccard_pairs' max_shingle_df:
-    a template fingerprint shared by a whole crawl shard would make one fp
-    bucket quadratic; fps with df above the cap are dropped with a logged
-    count (shared_fps undercounts by the dropped fps, so pairs held
-    together ONLY by template boilerplate disappear — usually the desired
-    behavior). None = exact semantics (oracle checks)."""
-    fp = winnow_fingerprints(docs, k, w, id_col, text_col)
+    `max_fp_df` caps bucket size with `_drop_hot`, like ngram_jaccard_pairs'
+    max_shingle_df: a template fingerprint shared by a whole crawl shard
+    would make one fp bucket quadratic; fps with df above the cap are
+    dropped with a logged count (shared_fps undercounts by the dropped fps,
+    so pairs held together ONLY by template boilerplate disappear — usually
+    the desired behavior). None = exact semantics (oracle checks)."""
     # the fp relation always feeds at least two consumers (both self-join
     # sides; with the cap also the hot count and anti-join probe) —
-    # materialize the fingerprint pipeline once, mirroring
-    # simhash_pairs/ngram_jaccard_pairs (previously only the capped path
-    # checkpointed, so the default path ran the whole rolling-md5 kernel
-    # and its plan compilation twice)
-    fp = fp.localCheckpoint(eager=True)
-    if max_fp_df is not None:
-        hot = (
-            fp.groupBy("fp").agg(F.count(F.lit(1)).alias("fdf"))
-            .filter(F.col("fdf") > max_fp_df)
-            .localCheckpoint(eager=True)
-        )
-        n_hot = hot.count()
-        if n_hot:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "winnow_pairs: dropped %d fingerprints with df > %d "
-                "(pairs sharing only dropped fps are not reported)",
-                n_hot, max_fp_df,
-            )
-        fp = fp.join(hot.select("fp"), "fp", "left_anti")
-    a, b = fp.alias("a"), fp.alias("b")
-    return (
-        a.join(b, "fp")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("shared_fps"))
-        .filter(F.col("shared_fps") >= min_shared)
-    )
+    # materialize the rolling-md5 kernel once
+    fp = winnow_fingerprints(docs, k, w, id_col, text_col).localCheckpoint(eager=True)
+    fp = _drop_hot(fp, ["fp"], max_fp_df, "fingerprints")
+    return _shared_key_pairs(fp, "fp", "shared_fps").filter(
+        F.col("shared_fps") >= min_shared)
 
 
 # PII-ish surface patterns — deliberately simple, ASCII, and Java/RE2-dual

@@ -9,13 +9,14 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from .deploy import ship_package
+
 
 def get_spark(
     master: str | None = None,
     app_name: str = "wise_spark",
     shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
-    ship: bool = True,
 ) -> SparkSession:
     b = SparkSession.builder.appName(app_name)
     if master:
@@ -35,10 +36,7 @@ def get_spark(
     for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
-    if ship:
-        from .deploy import ship_package
-
-        ship_package(spark)  # wise_spark importable on executors (--py-files analog)
+    ship_package(spark)  # wise_spark importable on executors (--py-files analog)
     return spark
 
 
