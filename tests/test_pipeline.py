@@ -69,6 +69,15 @@ def test_bag_fingerprint_reorder_invariant(small_docs):
     assert fp[0]["exact_fingerprint"] == fp[1]["exact_fingerprint"]
 
 
+def _topk_plan(df) -> str:
+    """Executed plan of a collected top-k: Catalyst's WindowGroupLimit does
+    the per-query top-k, with no Python (grouped-map) top-k stage."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "WindowGroupLimit" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    return plan
+
+
 def test_cosine_topk_exact(spark):
     from wise_spark.pipeline import cosine_topk
 
@@ -76,7 +85,9 @@ def test_cosine_topk_exact(spark):
     vecs = rng.standard_normal((30, 8)).astype(np.float32)
     rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = cosine_topk(df, df.filter(F.col("vec_id") < 3), k=5).toPandas()
+    res = cosine_topk(df, df.filter(F.col("vec_id") < 3), k=5)
+    out = res.toPandas()
+    assert "MapInPandas" not in _topk_plan(res)
     # numpy oracle
     v = vecs.astype(np.float64)
     norms = np.linalg.norm(v, axis=1)
@@ -96,8 +107,11 @@ def test_lsh_cosine_subset_of_exact_recall(spark):
     rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = df.filter(F.col("vec_id") < 2)
-    exact = cosine_topk(df, q, k=3).toPandas()
-    approx = lsh_cosine_topk(df, q, k=3, n_planes=4, n_tables=6).toPandas()
+    exact_df = cosine_topk(df, q, k=3)
+    approx_df = lsh_cosine_topk(df, q, k=3, n_planes=4, n_tables=6)
+    exact, approx = exact_df.toPandas(), approx_df.toPandas()
+    assert "MapInPandas" not in _topk_plan(exact_df)
+    _topk_plan(approx_df)
     # recall of approx vs exact should be decent with 6 tables on 8-dim data
     e = {(r.query_id, r.vec_id) for r in exact.itertuples()}
     a = {(r.query_id, r.vec_id) for r in approx.itertuples()}
@@ -172,6 +186,30 @@ def test_cosine_neardup_lsh_precision_and_recall(spark):
     assert planted <= set(a)                      # ~0.999-cosine dups: all found
 
 
+def test_nan_embedding_ranks_last_and_never_pairs(spark):
+    """A NaN component makes the cosine NULL: it ranks after every number
+    (Spark orders NaN above them) and never passes a near-dup threshold.
+    Row 0's table-0 projections (defaults n_planes=8, n_tables=12, seed=7)
+    are all negative, so it shares the all-0 bucket with the NaN vector and
+    LSH mode sees the pair as a candidate; exact mode's numpy compare drops
+    it, and both modes must agree."""
+    from wise_spark.pipeline import cosine_neardup_pairs, cosine_topk
+
+    rows = [(0, [1.119507008022189, 0.21873262987857625, 1.3702561728264784]),
+            (1, [float("nan"), 0.0, 0.0]),
+            (2, [0.0, 1.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    lsh = cosine_neardup_pairs(df, 0.9, mode="lsh").collect()
+    exact = cosine_neardup_pairs(df, 0.9, mode="exact").collect()
+    assert lsh == exact == []
+
+    with_null = spark.createDataFrame(rows + [(3, None)],
+                                      "vec_id long, embedding array<float>")
+    out = cosine_topk(with_null, with_null.filter("vec_id = 0"), k=3).collect()
+    got = sorted((r["vec_id"], r["cosine"], r["rank"]) for r in out)
+    assert got == [(1, None, 2), (2, 0.122683, 1), (3, None, 3)]
+
+
 def test_ivf_subset_of_exact_and_recall(spark):
     """IVF candidates are exact-reranked, so every emitted neighbor is a
     true neighbor within the probed lists; with n_probe=half the lists on
@@ -183,11 +221,14 @@ def test_ivf_subset_of_exact_and_recall(spark):
     rows = [(i, v.tolist()) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     q = df.filter(F.col("vec_id") < 3)
-    exact = cosine_topk(df, q, k=5).toPandas()
-    ivf = ivf_cosine_topk(
+    exact_df = cosine_topk(df, q, k=5)
+    ivf_df = ivf_cosine_topk(
         df, q, k=5, n_lists=8, n_probe=4,
         centroids=ivf_centroids_random(16, 8, seed=7),
-    ).toPandas()
+    )
+    exact, ivf = exact_df.toPandas(), ivf_df.toPandas()
+    assert "MapInPandas" not in _topk_plan(exact_df)
+    _topk_plan(ivf_df)
     e = {(r.query_id, r.vec_id): r.cosine for r in exact.itertuples()}
     a = {(r.query_id, r.vec_id): r.cosine for r in ivf.itertuples()}
     hits = set(a) & set(e)
@@ -462,9 +503,15 @@ def test_multimodal_decode_dataframes(spark):
     want = img0[(np.arange(2) * 4) // 2][:, (np.arange(3) * 6) // 3]
     assert bytes(r["pixels"]) == want.tobytes()
 
-    stats = image_stats(decode_image(blobs)).toPandas().set_index("doc_id")
+    empty_img = spark.createDataFrame([(9, 0, 0, 3, b"")],
+                                      "doc_id long, width int, height int, "
+                                      "channels int, pixels binary")
+    # one partition: the zero-length image shares an Arrow batch with the rest
+    decoded = decode_image(blobs).unionByName(empty_img).coalesce(1)
+    stats = image_stats(decoded).toPandas().set_index("doc_id")
     assert stats.loc[0, "sum_px"] == int(img0.sum())
     assert abs(stats.loc[1, "mean_px"] - img1.mean()) < 1e-9
+    assert stats.loc[9, "sum_px"] == 0 and stats.loc[9, "mean_px"] == 0.0
 
     pcm = np.arange(-50, 50, dtype=np.int16)
     wavs = spark.createDataFrame(
@@ -583,7 +630,13 @@ def test_similarity_string_ids_and_empty_ivf(spark):
 
 
 def test_multimodal_null_payloads(spark):
-    from wise_spark.pipeline.multimodal import binary_metadata, fake_feature_extract
+    from wise_spark.pipeline.multimodal import (
+        binary_metadata,
+        decode_audio,
+        decode_image,
+        fake_feature_extract,
+        frame_sample,
+    )
 
     blobs = spark.createDataFrame(
         [(0, b"data"), (1, None)], "doc_id long, payload binary"
@@ -593,6 +646,12 @@ def test_multimodal_null_payloads(spark):
     assert meta.loc[0, "byte_size"] == 4
     feats = fake_feature_extract(blobs).toPandas().set_index("doc_id")
     assert feats.loc[1, "feature"] is None and feats.loc[0, "feature"] is not None
+
+    null_only = blobs.filter("doc_id = 1")
+    for decoded in (decode_image(null_only), decode_audio(null_only),
+                    frame_sample(null_only, frame_bytes=4, every_k=1)):
+        with pytest.raises(Exception, match="NULL payload for doc_id 1"):
+            decoded.collect()
 
 
 def test_execute_rejects_file_queries(spark):

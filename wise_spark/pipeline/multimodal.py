@@ -245,6 +245,15 @@ def _decode_image_bytes(b: bytes) -> np.ndarray:
     raise NotImplementedError("unsupported image format (unknown magic)")
 
 
+def _payload(op: str, doc_id, b) -> bytes:
+    """The blob of one (doc_id, payload) row; a NULL payload is an error
+    the caller must handle upstream, never a silent empty blob."""
+    if b is None:
+        raise ValueError(f"{op}: NULL payload for doc_id {doc_id} — "
+                         "filter or quarantine NULL blobs upstream")
+    return bytes(b)
+
+
 def decode_image(blobs: DataFrame) -> DataFrame:
     """Decode (doc_id, payload) image blobs to IMG_SCHEMA rows: typed dims +
     raw interleaved RGB/gray bytes. Real decode for BMP and binary PPM/PGM
@@ -259,11 +268,7 @@ def decode_image(blobs: DataFrame) -> DataFrame:
             out = {"doc_id": pdf["doc_id"], "width": [], "height": [],
                    "channels": [], "pixels": []}
             for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                if b is None:
-                    raise ValueError(
-                        f"decode_image: NULL payload for doc_id {doc_id} — "
-                        "filter or quarantine NULL blobs upstream")
-                a = _decode_image_bytes(b)
+                a = _decode_image_bytes(_payload("decode_image", doc_id, b))
                 out["height"].append(a.shape[0])
                 out["width"].append(a.shape[1])
                 out["channels"].append(a.shape[2])
@@ -282,11 +287,7 @@ def decode_audio(blobs: DataFrame) -> DataFrame:
             out = {"doc_id": pdf["doc_id"], "sample_rate": [],
                    "n_channels": [], "n_samples": [], "pcm": []}
             for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                if b is None:
-                    raise ValueError(
-                        f"decode_audio: NULL payload for doc_id {doc_id} — "
-                        "filter or quarantine NULL blobs upstream")
-                rate, a = decode_wav_bytes(bytes(b))
+                rate, a = decode_wav_bytes(_payload("decode_audio", doc_id, b))
                 out["sample_rate"].append(rate)
                 out["n_channels"].append(a.shape[1])
                 out["n_samples"].append(a.shape[0])
@@ -324,25 +325,17 @@ def resize_image(decoded: DataFrame, out_w: int, out_h: int) -> DataFrame:
 def image_stats(decoded: DataFrame) -> DataFrame:
     """Per-image pixel aggregates over IMG_SCHEMA rows: (doc_id, width,
     height, channels, sum_px bigint, mean_px double). One vectorized
-    np.add.reduceat pass per Arrow batch — no per-pixel Python."""
+    running-sum pass per Arrow batch — no per-pixel Python."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             lens = pdf["pixels"].map(len).to_numpy(dtype=np.int64)
-            flat = np.frombuffer(b"".join(bytes(p) for p in pdf["pixels"]),
-                                 dtype=np.uint8)
-            if len(flat) and (lens > 0).all():
-                starts = np.zeros(len(lens), dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                sums = np.add.reduceat(flat.astype(np.int64), starts)
-            else:
-                # zero-length segments break reduceat's index contract;
-                # degenerate (empty-image) batches take the plain loop
-                sums = np.array([int(s.sum()) for s in
-                                 np.split(flat.astype(np.int64),
-                                          np.cumsum(lens[:-1]))],
-                                dtype=np.int64) if len(lens) else \
-                    np.zeros(0, dtype=np.int64)
+            flat = np.frombuffer(b"".join(pdf["pixels"]), dtype=np.uint8)
+            # per-image sums as differences of one running sum: no Python
+            # loop, and zero-length images need no special case
+            csum = np.concatenate(([0], np.cumsum(flat, dtype=np.int64)))
+            ends = np.cumsum(lens)
+            sums = csum[ends] - csum[ends - lens]
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"], "width": pdf["width"],
                 "height": pdf["height"], "channels": pdf["channels"],
@@ -367,7 +360,7 @@ def frame_sample(videos: DataFrame, frame_bytes: int, every_k: int) -> DataFrame
         for pdf in batches:
             ids, idxs, frames = [], [], []
             for did, b in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(b)
+                b = _payload("frame_sample", did, b)
                 n = len(b) // frame_bytes
                 for i in range(0, n, every_k):
                     ids.append(did)

@@ -1,31 +1,36 @@
 """Similarity search over embedding columns (array<float>).
 
-  * cosine_topk     — exact brute force: broadcast the (small) query set,
-                      JVM-side zip_with/aggregate dot products, per-query
-                      top-k via window. The "IndexFlatIP" baseline.
-  * lsh_cosine_topk — random-hyperplane LSH bucketing as the scale path
-                      (the "IVF" analog): candidates share a sign-pattern
-                      bucket for at least one hash table, then exact rerank.
-                      Hyperplanes are deterministic (seeded) so results are
-                      reproducible; recall < 1 by design (documented), the
-                      same trade the reference makes with IVF nprobe
-                      (/root/reference/docs/Search-Index-Evaluation.md).
+Four operators, one shape — candidate pairs, then one exact JVM cosine
+rerank (`_rerank`), then (for the top-k operators) one per-query window:
 
-All dot products run as built-in higher-order functions (no Python UDF);
-float32 inputs are cast to double before accumulation.
+  * cosine_topk          — exact brute force: broadcast the (small) query
+                           set and cross join. The "IndexFlatIP" baseline.
+  * lsh_cosine_topk      — random-hyperplane sign buckets: candidates share
+                           a sign-pattern bucket in at least one hash table.
+                           Hyperplanes are seeded, so results reproduce;
+                           recall < 1 by design, the same trade the
+                           reference makes with IVF nprobe
+                           (/root/reference/docs/Search-Index-Evaluation.md).
+  * ivf_cosine_topk      — the coarse quantizer of faiss IndexIVFFlat:
+                           candidates share a centroid list.
+  * cosine_neardup_pairs — every pair with cosine >= threshold: LSH bucket
+                           self-join + rerank, or a blocked all-pairs GEMM.
+
+LSH and IVF bucket keys come from one Arrow-batched matmul kernel
+(`_keyed`); the candidate join is a broadcast equi-join on the key. The
+rerank is built-in higher-order functions (no Python UDF) over
+double-cast vectors, rounded to 6 dp, with a NaN cosine reported as NULL.
+Per-query top-k is `row_number() <= k`, which Catalyst plans as a partial
+WindowGroupLimit before the query_id exchange (see `_topk`).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..session import local_rows_df
-
-
-def _topk_schema(qid_type: str, id_type: str) -> str:
-    return f"query_id {qid_type}, vec_id {id_type}, cosine double, rank int"
 
 
 def _pairs_schema(id_type: str) -> str:
@@ -37,53 +42,36 @@ def _no_neighbors(items: DataFrame, queries: DataFrame, id_col: str) -> DataFram
     QUERIES schema — the two sides may use different id types, and the
     empty-edge schema must match the non-empty result or per-shard unions
     break only on empty shards."""
-    return local_rows_df(items.sparkSession, [], _topk_schema(
-        queries.schema[id_col].dataType.simpleString(),
-        items.schema[id_col].dataType.simpleString()))
+    qid_type = queries.schema[id_col].dataType.simpleString()
+    id_type = items.schema[id_col].dataType.simpleString()
+    return local_rows_df(items.sparkSession, [], f"query_id {qid_type}, "
+                         f"vec_id {id_type}, cosine double, rank int")
 
 
-def _two_phase_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Per-query exact top-k of (query_id, vec_id, cosine) WITHOUT funneling
-    the whole scored relation through one partition.
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query exact top-k of (query_id, vec_id, cosine): rank = 1-based
+    row_number by (cosine desc NULLS LAST, vec_id asc), kept while <= k.
 
-    Phase 1 (map-side, no shuffle): local top-k per query within each
-    partition — global top-k is a subset of the union of local top-ks, so
-    this is a lossless filter that caps the shuffle at n_partitions * k rows
-    per query. Phase 2: per-query final sort + rank over <= n_partitions * k
-    rows via applyInPandas. Same local-heaps -> tiny-global-merge shape as
-    the WAND shard path (wise_spark/index/reader.py topk).
+    For k <= spark.sql.optimizer.windowGroupLimitThreshold (1000 by
+    default) Catalyst inserts a partial WindowGroupLimit before the
+    query_id exchange — the lossless map-side local top-k — so at most
+    n_partitions * k rows per query cross the shuffle. Above the threshold
+    the result is still exact, but every scored pair is shuffled.
     """
-
-    def local_topk(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield (
-                    pdf.sort_values(["cosine", "vec_id"], ascending=[False, True])
-                    .groupby("query_id", sort=False)
-                    .head(k)
-                )
-
-    def final_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf.sort_values(["cosine", "vec_id"], ascending=[False, True]).head(k)
-        out = out.reset_index(drop=True)
-        out["rank"] = np.arange(1, len(out) + 1, dtype=np.int32)
-        return out
-
-    # id columns keep their incoming type (string ids are as legitimate as
-    # longs — hardcoding long crashed every topk entry point on string ids)
-    id_type = scored.schema["vec_id"].dataType.simpleString()
-    qid_type = scored.schema["query_id"].dataType.simpleString()
-    reduced = scored.mapInPandas(
-        local_topk,
-        schema=f"query_id {qid_type}, vec_id {id_type}, cosine double",
-    )
-    return reduced.groupBy("query_id").applyInPandas(
-        final_topk,
-        schema=_topk_schema(qid_type, id_type),
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "vec_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
     )
 
 
-def _cosine(a, b):
+def _dbl(vec) -> Column:
+    """array<float> -> array<double>, so every dot product accumulates in
+    float64."""
+    return F.transform(vec, lambda v: v.cast("double"))
+
+
+def _cosine(a: Column, b: Column) -> Column:
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
                       F.lit(0.0), lambda acc, v: acc + v)
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
@@ -92,6 +80,15 @@ def _cosine(a, b):
     # under Spark 4's default ANSI mode a bare divide would kill the JOB on
     # one all-zeros vector; same floor as the exact-GEMM path's np.maximum
     return dot / F.greatest(na * nb, F.lit(1e-300))
+
+
+def _rerank(a: Column, b: Column) -> Column:
+    """The one exact cosine of two array<double> columns, rounded to 6 dp.
+    A NaN component makes the cosine NULL: NULL ranks after every number
+    in `_topk` (Spark orders NaN above them) and fails every threshold
+    (`NaN >= t` is true in Spark, false in the exact GEMM's numpy)."""
+    return F.round(F.nanvl(_cosine(a, b), F.lit(None).cast("double")),
+                   6).alias("cosine")
 
 
 def cosine_topk(
@@ -105,24 +102,59 @@ def cosine_topk(
 
     Output: (query_id, vec_id, cosine, rank). Excludes self-matches.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("qvec"),
-    )
-    it = items.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("ivec"),
-    )
+    # cast once per row at the source, not once per (query, item) pair
+    q = queries.select(F.col(id_col).alias("query_id"),
+                       _dbl(F.col(vec_col)).alias("qvec"))
+    it = items.select(F.col(id_col).alias("vec_id"),
+                      _dbl(F.col(vec_col)).alias("ivec"))
     scored = (
         it.crossJoin(F.broadcast(q))
         .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(_cosine(F.col("qvec"), F.col("ivec")), 6).alias("cosine"),
-        )
+        .select("query_id", "vec_id", _rerank(F.col("qvec"), F.col("ivec")))
     )
-    return _two_phase_topk(scored, k)
+    return _topk(scored, k)
+
+
+def _keyed(df: DataFrame, id_col: str, vec_col: str, alias: str,
+           mat: np.ndarray, keys, key_type: str) -> DataFrame:
+    """(alias, alias_vec, bucket) rows: one per (row of df, key). ONE
+    Arrow-batched mapInPandas matmul `vecs @ mat` per batch; `mat` ships
+    once in the task closure (a few hundred KB even at 768-d) — NOT as
+    per-element column literals, which at real dimensions meant
+    ~n_keys*dim literal expressions in the plan (slow analysis/codegen,
+    driver-memory pressure). `keys(projection)` returns one key array per
+    fan-out, and each array yields one copy of the batch."""
+    id_type = df.schema[id_col].dataType.simpleString()
+    vec_type = df.schema[vec_col].dataType.simpleString()
+    vec_alias = f"{alias}_vec"
+    src = df.select(F.col(id_col).alias(alias), F.col(vec_col).alias(vec_alias))
+
+    def gen(batches):
+        for pdf in batches:
+            if len(pdf):
+                vecs = np.array([np.asarray(v, dtype=np.float64)
+                                 for v in pdf[vec_alias]])
+                for key in keys(vecs @ mat):
+                    yield pdf.assign(bucket=key)
+
+    return src.mapInPandas(
+        gen, schema=f"{alias} {id_type}, {vec_alias} {vec_type}, bucket {key_type}")
+
+
+def _bucket_pairs(items: DataFrame, queries: DataFrame, id_col: str,
+                  vec_col: str, mat: np.ndarray, item_keys, query_keys,
+                  key_type: str) -> DataFrame:
+    """Reranked (query_id, vec_id, cosine) candidates: items joined to the
+    broadcast (small) query side on a shared bucket key, self-matches
+    dropped. A pair sharing several buckets repeats."""
+    ib = _keyed(items, id_col, vec_col, "vec_id", mat, item_keys, key_type)
+    qb = _keyed(queries, id_col, vec_col, "query_id", mat, query_keys, key_type)
+    return (
+        ib.join(F.broadcast(qb), "bucket")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id",
+                _rerank(_dbl("query_id_vec"), _dbl("vec_id_vec")))
+    )
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -145,42 +177,15 @@ def _plane_matrix(items: DataFrame, vec_col: str, n_planes: int,
     ).T
 
 
-def _sign_buckets(df: DataFrame, id_col: str, vec_col: str, id_alias: str,
-                  mat: np.ndarray, n_planes: int, n_tables: int) -> DataFrame:
-    """Explode df to one row per (row, hash table) carrying the table's
-    sign-pattern bucket key. Signatures come from ONE Arrow-batched
-    mapInPandas matmul against the full plane matrix, which ships once in
-    the task closure (a few hundred KB even at 768-d) — NOT as per-element
-    column literals, which at real dimensions meant ~n_tables*n_planes*dim
-    literal expressions in the plan (slow analysis/codegen, driver-memory
-    pressure)."""
-    id_type = df.schema[id_col].dataType.simpleString()
-    vec_type = df.schema[vec_col].dataType.simpleString()
-    src = df.select(F.col(id_col).alias(id_alias),
-                    F.col(vec_col).alias(f"{id_alias}_vec"))
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[f"{id_alias}_vec"]]
-            )
-            bits = (vecs @ mat) >= 0          # (batch, n_tables*n_planes)
-            chars = np.where(bits, "1", "0")
-            for t in range(n_tables):
-                sig = [
-                    f"t{t}:" + "".join(row)
-                    for row in chars[:, t * n_planes:(t + 1) * n_planes]
-                ]
-                out = pdf.copy()
-                out["bucket"] = sig
-                yield out
-
-    return src.mapInPandas(
-        gen,
-        schema=f"{id_alias} {id_type}, {id_alias}_vec {vec_type}, bucket string",
-    )
+def _sign_keys(n_planes: int, n_tables: int):
+    """`_keyed` keys of the LSH tables: table t's sign pattern as the
+    string `t<t>:0101…` (bit = projection >= 0; a NaN projection is 0)."""
+    def keys(proj):
+        chars = np.where(proj >= 0, "1", "0")
+        for t in range(n_tables):
+            yield [f"t{t}:" + "".join(row)
+                   for row in chars[:, t * n_planes:(t + 1) * n_planes]]
+    return keys
 
 
 def lsh_cosine_topk(
@@ -193,34 +198,18 @@ def lsh_cosine_topk(
     n_tables: int = 4,
     seed: int = 7,
 ) -> DataFrame:
-    """Approximate top-k: random-hyperplane sign buckets, exact rerank within
-    candidates (see _sign_buckets for the signature plumbing). The candidate
-    join is a broadcast equi-join on the bucket key, then exact rerank."""
+    """Approximate top-k: random-hyperplane sign buckets (`_sign_keys`),
+    exact rerank within candidates. The candidate join is a broadcast
+    equi-join on the bucket key."""
     mat = _plane_matrix(items, vec_col, n_planes, n_tables, seed)
     if mat is None:   # empty corpus: no neighbors for any query
         return _no_neighbors(items, queries, id_col)
-    qb = _sign_buckets(queries, id_col, vec_col, "query_id", mat, n_planes, n_tables)
-    ib = _sign_buckets(items, id_col, vec_col, "vec_id", mat, n_planes, n_tables)
-    cand = (
-        ib.join(F.broadcast(qb), "bucket")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "query_id_vec", "vec_id_vec")
-        # ids alone determine the row (vectors are functions of the id) —
-        # dedup on them instead of hashing ~KBs of embedding per candidate
-        .dropDuplicates(["query_id", "vec_id"])
-    )
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(
-            _cosine(
-                F.transform("query_id_vec", lambda v: v.cast("double")),
-                F.transform("vec_id_vec", lambda v: v.cast("double")),
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    return _two_phase_topk(scored, k)
+    keys = _sign_keys(n_planes, n_tables)
+    scored = _bucket_pairs(items, queries, id_col, vec_col, mat, keys, keys,
+                           "string")
+    # a pair can collide in several tables: one row per pair. The dedup
+    # runs on reranked rows, so no embedding crosses its exchange.
+    return _topk(scored.dropDuplicates(["query_id", "vec_id"]), k)
 
 
 def _exact_neardup_blocked(
@@ -261,7 +250,7 @@ def _exact_neardup_blocked(
         # exactly once — no dedup (and no extra exchange) needed
     )
 
-    def pair_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pair_kernel(key, pdf):
         pi, pj = int(key[0]), int(key[1])
         empty = pd.DataFrame({"vec_id_a": pdf["vid"][:0],
                               "vec_id_b": pdf["vid"][:0],
@@ -339,7 +328,7 @@ def cosine_neardup_pairs(
     src/search_index.py builds the same embedding space; near-dup filtering
     over it is the training-data-pipeline use). Two modes sharing one output
     contract (cosine is exact in both — LSH only prunes CANDIDATES, so
-    precision is always 1.0):
+    precision is always 1.0; a pair with a NaN cosine is never emitted):
 
       mode="exact" — blocked all-pairs GEMM. Vectors hash into B blocks
         (~block_size rows each); each vector is exploded to its B
@@ -353,14 +342,14 @@ def cosine_neardup_pairs(
         vector copies — the inherent exact-all-pairs cost; LSH below is
         the scale path that avoids it.
       mode="lsh" — the scale path: random-hyperplane sign buckets
-        (n_tables tables of n_planes bits; see _sign_buckets), candidates
+        (n_tables tables of n_planes bits; see _sign_keys), candidates
         are pairs sharing ANY table's bucket — a bucketed equi-join, never
-        all-pairs — then exact cosine verify. Expected recall for a pair at
-        angle theta: 1 - (1 - p^n_planes)^n_tables with p = 1 - theta/pi;
-        the defaults give >0.98 at cosine >= 0.85 (true near-dup range).
-        At 100 TB the bucket join shuffles only (bucket, id, vec) rows —
-        skew is bounded because a bucket holds ~n/2^n_planes vectors per
-        table in the random-hyperplane model.
+        all-pairs — then exact cosine verify (`_rerank`). Expected recall
+        for a pair at angle theta: 1 - (1 - p^n_planes)^n_tables with
+        p = 1 - theta/pi; the defaults give >0.98 at cosine >= 0.85 (true
+        near-dup range). At 100 TB the bucket join shuffles only (bucket,
+        id, vec) rows — skew is bounded because a bucket holds
+        ~n/2^n_planes vectors per table in the random-hyperplane model.
 
     Output: (vec_id_a, vec_id_b, cosine) with cosine rounded to 6 dp;
     the threshold is applied to the ROUNDED value so the DuckDB oracle
@@ -370,38 +359,25 @@ def cosine_neardup_pairs(
         raise ValueError(f"mode must be 'exact' or 'lsh', got {mode!r}")
     if mode == "exact":
         return _exact_neardup_blocked(items, threshold, id_col, vec_col)
-    else:
-        mat = _plane_matrix(items, vec_col, n_planes, n_tables, seed)
+    mat = _plane_matrix(items, vec_col, n_planes, n_tables, seed)
+    if mat is None:   # empty corpus: no pairs
         id_type = items.schema[id_col].dataType.simpleString()
-        if mat is None:   # empty corpus: no pairs
-            return local_rows_df(items.sparkSession, [], _pairs_schema(id_type))
-        # materialize the signatures ONCE and alias for both join sides:
-        # two independent _sign_buckets calls re-ran the full upstream plan
-        # (embedding production + the matmul) per side — the same
-        # per-consumer recompute dedup.py's LSH paths checkpoint away
-        sa = _sign_buckets(items, id_col, vec_col, "vec_id_a", mat,
-                           n_planes, n_tables).localCheckpoint(eager=True)
-        sb = sa.select(F.col("vec_id_a").alias("vec_id_b"),
-                       F.col("vec_id_a_vec").alias("vec_id_b_vec"),
-                       "bucket")
-        cand = (
-            sa.join(sb, "bucket")
-            .where(F.col("vec_id_a") < F.col("vec_id_b"))
-            # a pair can collide in several tables: one verify per pair
-            .dropDuplicates(["vec_id_a", "vec_id_b"])
-            .select(
-                "vec_id_a",
-                "vec_id_b",
-                F.transform("vec_id_a_vec", lambda v: v.cast("double")).alias("va"),
-                F.transform("vec_id_b_vec", lambda v: v.cast("double")).alias("vb"),
-            )
-        )
+        return local_rows_df(items.sparkSession, [], _pairs_schema(id_type))
+    # materialize the signatures ONCE and alias for both join sides: two
+    # independent _keyed calls re-ran the full upstream plan (embedding
+    # production + the matmul) per side — the same per-consumer recompute
+    # dedup.py's LSH paths checkpoint away
+    sa = _keyed(items, id_col, vec_col, "vec_id_a", mat,
+                _sign_keys(n_planes, n_tables), "string").localCheckpoint(eager=True)
+    sb = sa.select(F.col("vec_id_a").alias("vec_id_b"),
+                   F.col("vec_id_a_vec").alias("vec_id_b_vec"), "bucket")
     return (
-        cand.select(
-            "vec_id_a",
-            "vec_id_b",
-            F.round(_cosine(F.col("va"), F.col("vb")), 6).alias("cosine"),
-        )
+        sa.join(sb, "bucket")
+        .where(F.col("vec_id_a") < F.col("vec_id_b"))
+        # a pair can collide in several tables: one verify per pair
+        .dropDuplicates(["vec_id_a", "vec_id_b"])
+        .select("vec_id_a", "vec_id_b",
+                _rerank(_dbl("vec_id_a_vec"), _dbl("vec_id_b_vec")))
         .where(F.col("cosine") >= threshold)
     )
 
@@ -480,12 +456,13 @@ def ivf_cosine_topk(
     list is the argmax of PLAIN dot products (no per-row norm) — ties break
     to the lowest list_id in both the numpy and SQL formulations.
 
-    Scale shape: assignment is one Arrow-batched matmul per batch (the
-    centroid matrix ships once in the closure); the candidate join is a
-    bucketed equi-join on list_id with the (tiny) exploded query-probe side
-    broadcast; rerank is exact JVM cosine + the shared two-phase top-k. At
-    10^12 vectors the list assignment is a natural partition/cluster key —
-    nothing ever materializes all-pairs.
+    Scale shape: list assignment and query probing are `_keyed` matmuls
+    (the centroid matrix ships once in the closure); the candidate join is
+    a bucketed equi-join on list_id with the (tiny) exploded query-probe
+    side broadcast; rerank is exact JVM cosine + the shared top-k window.
+    An item lives in one list and a query probes distinct lists, so no
+    pair repeats. At 10^12 vectors the list assignment is a natural
+    partition/cluster key — nothing ever materializes all-pairs.
     """
     if centroids is None:
         if items.select(vec_col).first() is None:   # empty corpus: no lists
@@ -494,54 +471,12 @@ def ivf_cosine_topk(
     C = np.asarray(centroids, dtype=np.float64)
     C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
 
-    def assign_items(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array([np.asarray(v, dtype=np.float64) for v in pdf["ivec"]])
-            out = pdf.copy()
-            out["list_id"] = np.argmax(vecs @ C.T, axis=1).astype(np.int32)
-            yield out
+    def nearest_list(sims):
+        return [np.argmax(sims, axis=1).astype(np.int32)]
 
-    def probe_queries(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array([np.asarray(v, dtype=np.float64) for v in pdf["qvec"]])
-            sims = vecs @ C.T
-            # stable sort on -sim keeps list_id ascending among exact ties
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
-            for p in range(order.shape[1]):
-                out = pdf.copy()
-                out["list_id"] = order[:, p].astype(np.int32)
-                yield out
+    def probed_lists(sims):
+        # stable sort on -sim keeps list_id ascending among exact ties
+        return np.argsort(-sims, axis=1, kind="stable")[:, :n_probe].T.astype(np.int32)
 
-    id_type = items.schema[id_col].dataType.simpleString()
-    vec_type = items.schema[vec_col].dataType.simpleString()
-    ia = items.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("ivec")
-    ).mapInPandas(
-        assign_items, schema=f"vec_id {id_type}, ivec {vec_type}, list_id int"
-    )
-    qp = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    ).mapInPandas(
-        probe_queries, schema=f"query_id {id_type}, qvec {vec_type}, list_id int"
-    )
-    cand = (
-        ia.join(F.broadcast(qp), "list_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "qvec", "ivec")
-    )
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.round(
-            _cosine(
-                F.transform("qvec", lambda v: v.cast("double")),
-                F.transform("ivec", lambda v: v.cast("double")),
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    return _two_phase_topk(scored, k)
+    return _topk(_bucket_pairs(items, queries, id_col, vec_col, C.T,
+                               nearest_list, probed_lists, "int"), k)
