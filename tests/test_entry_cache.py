@@ -55,14 +55,14 @@ def test_index_memo_releases_superseded_index(spark, tmp_path):
         i1 = entry._get_index(spark, sf)
         dirs.append(i1.index_dir)
         assert entry._get_index(spark, sf) is i1
-        assert i1.meta.n_docs == 2 and i1._segments.is_cached
+        assert i1.meta.n_docs == 2 and i1._pinned is not None
 
         _write_docs(spark, sf, [(0, "x y", "a"), (1, "z w", "b"),
                                 (2, "p q", "c")], schema)
         i2 = entry._get_index(spark, sf)
         dirs.append(i2.index_dir)
-        assert i2.meta.n_docs == 3 and i2._segments.is_cached
-        assert not i1._segments.is_cached, "superseded index still pinned"
+        assert i2.meta.n_docs == 3 and i2._pinned is not None
+        assert i1._pinned is None, "superseded index still pinned"
     finally:
         for d in dirs:
             shutil.rmtree(d, ignore_errors=True)

@@ -110,6 +110,60 @@ def test_topk_rank_identity(index, oracle, mode, method):
     assert many["zzzabsent qqqmissing"] == [] and many[""] == []
 
 
+def test_pinned_index_rank_identity_under_concurrent_batches(spark, index, oracle):
+    """A cache=True index scores its driver pin: for every mode and method
+    topk_many matches the pandas oracle and equals the uncached index's
+    lists exactly. Request threads of a server share one pin, so 8
+    threads (more than this box's cores) with a short switch interval run
+    batches against it at once and each gets the serial answer."""
+    import sys
+    import threading
+
+    pinned = FtsIndex.load(spark, index.index_dir, cache=True)
+    assert pinned._pinned is not None and index._pinned is None
+    k = 15
+    batch = QUERIES + ["zzzabsent qqqmissing", ""]
+    want = {}
+    for mode in ("all", "any"):
+        for method in ("wand", "taat"):
+            got = pinned.topk_many(batch, k, mode=mode, method=method)
+            assert got == index.topk_many(batch, k, mode=mode, method=method)
+            for q in batch:
+                _check(pd.DataFrame(got[q], columns=["doc_id", "score"],
+                                    dtype=float),
+                       oracle.score_all(q, mode), k, f"pinned {method}/{mode}: {q!r}")
+            want[mode, method] = got
+
+    errors, results = [], {}
+    small = batch[:3] + batch[-2:]
+
+    def worker(i):
+        try:
+            mode, method = list(want)[i % len(want)]
+            for _ in range(3):
+                results.setdefault(i, []).append(
+                    (mode, method, pinned.topk_many(small, k, mode=mode, method=method)))
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-4)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors and not any(t.is_alive() for t in threads)
+    assert sorted(results) == list(range(8))
+    for runs in results.values():
+        assert len(runs) == 3
+        assert all(got == {q: want[mode, method][q] for q in small}
+                   for mode, method, got in runs)
+
+
 @pytest.mark.parametrize("mode", ["all", "any"])
 def test_wand_random_sweep_rank_identity(index, oracle, mode):
     """30 seeded random queries (1-4 terms, some salted with an absent

@@ -265,15 +265,20 @@ def test_initial_topk_rank_identical_to_fts5(pos_index):
         ), q
 
 
-def test_positional_kernels_on_shard_partitioned_cache(spark, pos_index):
-    """cache=True pins the segments already partitioned by shard and
-    sorted by term, so queries skip the per-query exchange: every
-    positional kernel and score_all over that cache returns exactly the
-    uncached index's rows, and a phrase with an absent term returns the
-    typed empty frame on both."""
+def test_positional_kernels_on_driver_pin(spark, pos_index):
+    """cache=True pins the segments' scoring columns and positions as one
+    term-sorted Arrow table on the driver, so queries run their kernels
+    there with no segments scan: every positional kernel and score_all over
+    that pin returns exactly the uncached index's rows, and a phrase with
+    an absent term returns the typed empty frame on both."""
     idx, pdf = pos_index
     cached = FtsIndex.load(spark, idx.index_dir, cache=True)
-    assert cached._cached_by_shard
+    pin = cached._pinned
+    assert idx._pinned is None and pin is not None
+    assert "positions" in pin.column_names
+    assert pin.num_rows == idx._segments.count()
+    terms = pin.column("term").to_pylist()
+    assert terms == sorted(terms)
     from collections import Counter
 
     common = [t for t, _ in Counter(
@@ -301,3 +306,62 @@ def test_positional_kernels_on_shard_partitioned_cache(spark, pos_index):
         assert empty.schema == typed.schema
         assert empty.toArrow().schema == typed.toArrow().schema
         assert empty.count() == 0
+
+
+def test_pin_guard_fallback_matches_pinned_index(spark, pos_index, monkeypatch):
+    """cache=True pins the segments on the driver only under
+    SEGMENT_PIN_MAX_BYTES. With the guard at 0 the index keeps its df pin
+    but takes the segments scan for every query, as does a pinned index
+    after unpersist(); over any/all terms, phrase, prefix, '^' and NEAR
+    both return the pinned index's ranking: doc_ids exact, scores within
+    1e-9, the same schema."""
+    from collections import Counter
+
+    from wise_spark.index import reader
+
+    idx, pdf = pos_index
+    pinned = FtsIndex.load(spark, idx.index_dir, cache=True)
+    released = FtsIndex.load(spark, idx.index_dir, cache=True)
+    released.unpersist()
+    monkeypatch.setattr(reader, "SEGMENT_PIN_MAX_BYTES", 0)
+    guarded = FtsIndex.load(spark, idx.index_dir, cache=True)
+    assert pinned._pinned is not None
+    assert guarded._pinned is None and guarded._df_cache is not None
+    assert released._pinned is None
+
+    common = [t for t, _ in Counter(
+        t for text in pdf["text"] for t in tokenize_text(text)).most_common(3)]
+    first = tokenize_text(pdf["text"].iloc[0])
+    ph = _pick_phrase(pdf, 2)
+    terms = [" ".join(common), f"{common[2]} {first[-1]}", first[0],
+             f"{common[0]} zzznope"]
+    lazy = {
+        **{f"topk_{m}_{q}": (lambda i, q=q, m=m: i.topk(q, k=7, mode=m))
+           for m in ("any", "all") for q in terms},
+        "phrase": lambda i: i.phrase_topk(ph, k=7),
+        "prefix": lambda i: i.prefix_topk(first[0][:2] + "*", k=7),
+        "initial": lambda i: i.initial_topk(" ".join(first[:2]), k=7),
+        "near": lambda i: i.near_topk(ph, common[0], 3, k=7),
+    }
+
+    def same(got, want, name):
+        assert [d for d, _ in got] == [d for d, _ in want], name
+        assert np.abs(np.array([s for _, s in got], dtype=float)
+                      - np.array([s for _, s in want], dtype=float)
+                      ).max(initial=0.0) <= 1e-9, name
+
+    want = {name: q(pinned) for name, q in lazy.items()}
+    want_rows = {name: [tuple(r) for r in df.collect()] for name, df in want.items()}
+    assert all(want_rows[n] for n in ("phrase", "prefix", "initial", "near"))
+    for i in (guarded, released):
+        for mode in ("any", "all"):
+            many = i.topk_many(terms, 7, mode=mode)
+            assert set(many) == set(terms)
+            want_many = pinned.topk_many(terms, 7, mode=mode)
+            assert any(want_many.values()), mode
+            for q in terms:
+                same(many[q], want_many[q], (mode, q))
+        for name, q in lazy.items():
+            got = q(i)
+            assert got.schema == want[name].schema, name
+            same([tuple(r) for r in got.collect()], want_rows[name], name)

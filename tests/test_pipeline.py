@@ -210,6 +210,25 @@ def test_nan_embedding_ranks_last_and_never_pairs(spark):
     assert got == [(1, None, 2), (2, 0.122683, 1), (3, None, 3)]
 
 
+def test_null_embedding_is_dropped_by_the_kernel_paths(spark):
+    """A NULL embedding never reaches a Python kernel: near-dup LSH mode
+    returns exactly exact mode's pairs (an exact NULL cosine fails every
+    threshold), and the LSH and IVF top-k neither rank a NULL vector nor
+    answer a NULL query — all four used to die in numpy."""
+    from wise_spark.pipeline import (
+        cosine_neardup_pairs, ivf_cosine_topk, lsh_cosine_topk)
+
+    rows = [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    lsh = sorted(map(tuple, cosine_neardup_pairs(df, 0.9, mode="lsh").collect()))
+    exact = sorted(map(tuple, cosine_neardup_pairs(df, 0.9, mode="exact").collect()))
+    assert lsh == exact == [(0, 1, 0.993884)]
+    for topk in (lsh_cosine_topk(df, df, k=3, n_planes=1, n_tables=1),
+                 ivf_cosine_topk(df, df, k=3, n_lists=1, n_probe=1)):
+        got = sorted((r["query_id"], r["vec_id"]) for r in topk.collect())
+        assert got == [(0, 1), (1, 0)]
+
+
 def test_ivf_subset_of_exact_and_recall(spark):
     """IVF candidates are exact-reranked, so every emitted neighbor is a
     true neighbor within the probed lists; with n_probe=half the lists on

@@ -422,23 +422,31 @@ def test_spark_search_fn_end_to_end(spark, corpus_sdf, tmp_path_factory):
     assert both[qa] != both[qb]
 
 
-def test_warm_hydrated_search_request_runs_one_spark_job(
-    spark, corpus_sdf, tmp_path_factory
+@pytest.mark.parametrize("cache, n_jobs", [(True, 0), (False, 3)],
+                         ids=["pinned", "scan"])
+def test_warm_hydrated_search_request_spark_jobs(
+    spark, corpus_sdf, tmp_path_factory, cache, n_jobs
 ):
-    """Once the serving cache is warm, a hydrated /search request over a
-    cache=True index runs exactly one Spark job — its batch's topk_many
-    scan. Hydration reads doc_map on the driver (FtsIndex.doc_rows). The
-    request runs in this thread under its own job group, so the count is
-    exactly the request's jobs."""
+    """A warm hydrated /search request runs no Spark job on a cache=True
+    index: its batch's topk_many scores the driver pin, and hydration reads
+    doc_map on the driver (FtsIndex.doc_rows). On a cache=False index the
+    request runs three: the terms lookup of the query's df, and the
+    segments scan, whose shard exchange AQE runs as a job of its own before
+    the scoring job. The request runs
+    in this thread under its own job group, so the count is exactly the
+    request's jobs."""
     from wise_spark.index import FtsIndex, build_index
     from wise_spark.serve import spark_search_fn
 
     d = str(tmp_path_factory.mktemp("serve_jobs_idx"))
     meta = build_index(corpus_sdf, d, url_col="url", n_shards=4, n_buckets=4,
                        n_waves=1)
-    search = spark_search_fn(FtsIndex(spark, d, meta, cache=True))
+    idx = FtsIndex(spark, d, meta, cache=cache)
+    assert (idx._pinned is not None) == cache
+    search = spark_search_fn(idx)
     q = "nababa pebaba"
-    assert len(search(q, 0, 5)) == 5   # warm-up: materializes the cache
+    warm = search(q, 0, 5)
+    assert len(warm) == 5
     sc = spark.sparkContext
     sc.setJobGroup("one-search-request", "one hydrated /search request")
     try:
@@ -447,8 +455,8 @@ def test_warm_hydrated_search_request_runs_one_spark_job(
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()   # job events are async
     jobs = sc.statusTracker().getJobIdsForGroup("one-search-request")
-    assert len(hits) == 5 and all(h["url"] for h in hits)
-    assert len(jobs) == 1, sorted(jobs)
+    assert hits == warm and all(h["url"] for h in hits)
+    assert len(jobs) == n_jobs, sorted(jobs)
 
 
 def test_parquet_media_resolver_point_lookup(spark, tmp_path_factory):

@@ -3,13 +3,19 @@
 Query lifecycle (SURVEY.md section 3.4): driver tokenizes the query with the
 SAME analyzer as the build side, looks up exact df for the query terms from
 the range-partitioned terms table (parquet min/max pruning on `term`), then
-reads only the query terms' segment rows (predicate pushdown into the scan)
-and runs the per-shard scoring kernel; the global result is a tiny
-TakeOrderedAndProject over per-shard top-k heaps. `topk_many` scores a
-batch of queries in one such job and merges the heaps on the driver.
-Every index query (terms, phrase, prefix, '^', NEAR) runs this one scan,
-`FtsIndex._per_shard`: one mapInPandas applying a query-specific kernel to
-each shard's segment rows.
+reads only the query terms' segment rows and runs the per-shard scoring
+kernel; the global result is a tiny merge of per-shard top-k heaps.
+`topk_many` scores a batch of queries in one such pass and merges the heaps
+on the driver. Every index query (terms, phrase, prefix, '^', NEAR) runs
+this one per-shard pass, `FtsIndex._per_shard`, over one of two row sources:
+
+  * pinned (`cache=True`, segments under SEGMENT_PIN_MAX_BYTES): the
+    segments' scoring columns as one term-sorted Arrow table in DRIVER
+    memory, filtered with pyarrow and scored on the driver. `topk_many`
+    (so every /search batch) runs no Spark job; the lazy APIs return the
+    kernels' rows as a JVM-only LocalTableScan.
+  * not pinned: a parquet scan with the term filter pushed down,
+    hash-distributed by shard, and the file's one mapInPandas.
 
 Scale notes: the segments scan touches only the query terms' posting rows —
 for a 3-term query over 10^12 docs that is 3 * n_shards rows regardless of
@@ -117,16 +123,47 @@ def _shard_phrase_occurrences(rows: dict, seq: list[str], prune: bool = True,
     )
 
 
-# Serving-mode size guards: above these, cache=True silently degrades to the
-# pruned-scan path for that piece (a 10^9-term vocabulary dict or a
-# multi-TB segment set must never be pinned wholesale; queries stay exact
-# either way, the cache is purely a latency optimization).
+# Serving-mode size guards: above these, cache=True leaves that piece on
+# disk and queries take the pruned-scan path (a 10^9-term vocabulary dict or
+# a multi-TB segment set must never be pinned wholesale in the driver;
+# queries stay exact either way, the pins are purely a latency
+# optimization).
 DF_CACHE_MAX_TERMS = 5_000_000          # ~100s of MB of driver heap
-SEGMENT_CACHE_MAX_BYTES = 8 << 30       # executor storage-memory budget
+# segments' parquet footer bytes; the driver's Arrow pin is ~2.6x that
+# (3.51 MB of Arrow for 1.36 MB of parquet on a 3,000-doc index), so the
+# guard holds the pin under ~660 MB of driver memory
+SEGMENT_PIN_MAX_BYTES = 256 << 20
 
 # the (doc_id, tf, doclen) virtual-term matches the phrase/prefix/initial
 # scans emit
 MATCH_SCHEMA = "doc_id long, tf long, doclen long"
+# the per-shard heaps of topk/topk_many: qid = the query's plan position
+HEAP_SCHEMA = "qid int, " + SCORE_SCHEMA
+
+
+def _over_shards(rows: pd.DataFrame | None, kernel) -> pd.DataFrame | None:
+    """The one kernel loop of both row sources: `kernel(one shard's rows)
+    -> frame | None` per shard, the frames concatenated; None when no shard
+    emits."""
+    if rows is None:
+        return None
+    out = [kernel(g) for _, g in rows.groupby("shard", sort=False)]
+    out = [f for f in out if f is not None]
+    return pd.concat(out, ignore_index=True) if out else None
+
+
+def _pinned_rows(pin, match, cols: list[str]) -> pd.DataFrame:
+    """The pin's `cols` of the rows whose term is in `match` (a term list)
+    or starts with it (a prefix string), as pandas — the driver-side twin
+    of the segments scan's pushed-down filter in `FtsIndex._per_shard`."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    seg = pin.select(cols)
+    term = seg.column("term")
+    hit = (pc.starts_with(term, match) if isinstance(match, str)
+           else pc.is_in(term, value_set=pa.array(match, pa.string())))
+    return seg.filter(hit).to_pandas()
 
 
 class FtsIndex:
@@ -143,15 +180,14 @@ class FtsIndex:
         ).drop("wave")
         self._terms = spark.read.parquet(os.path.join(index_dir, "terms"))
         self._df_cache: dict[str, int] | None = None
-        self._cached_by_shard = False
+        # the driver pin of the segments (a pyarrow Table), or None
+        self._pinned = None
         # doc_map row-group directory for doc_rows, built on first use
         self._doc_dir = None
         self._doc_dir_lock = threading.Lock()
-        # per-query scoring parallelism: enough tasks to spread shards, few
-        # enough that task/python-worker overhead stays off the latency
-        # path; computed ONCE — the serving cache repartition below must
-        # use the same count or cached partitioning and query planning
-        # silently diverge
+        # per-query scoring parallelism of the segments scan: enough tasks
+        # to spread shards, few enough that task/python-worker overhead
+        # stays off the latency path
         self._query_partitions = max(
             2, min(meta.n_shards, spark.sparkContext.defaultParallelism)
         )
@@ -167,29 +203,18 @@ class FtsIndex:
                 "index metadata or change wise_spark.K1/B"
             )
         if cache:
-            # serving mode: pin segments in executor memory (the reference
-            # copies its hot index to :memory: the same way,
-            # /root/reference/src/index/sqlite_search_index.py:94-98) and the
-            # term->df stats in DRIVER memory (read via pyarrow, no Spark
-            # job) so each query costs exactly one Spark job. Both pins are
-            # SIZE-GUARDED from parquet footers (no data read): an index too
-            # big to pin falls back to the pruned-scan path, exact either way.
-            seg_rows, seg_bytes = _parquet_footer_stats(
-                os.path.join(index_dir, "segments")
-            )
-            if seg_bytes <= SEGMENT_CACHE_MAX_BYTES:
-                # cache ALREADY hash-partitioned by shard so every query is a
-                # single-stage job (no per-query exchange; scoring needs each
-                # shard whole in one partition), and sorted by term within
-                # partitions: the in-memory columnar batches keep min/max
-                # stats per batch, so the term filter prunes cached batches
-                # instead of scanning them all
-                self._segments = (
-                    self._segments.repartition(self._query_partitions, "shard")
-                    .sortWithinPartitions("term")
-                    .cache()
-                )
-                self._cached_by_shard = True
+            # serving mode: pin the segments' scoring columns (and
+            # positions) as one term-sorted Arrow table and the term->df
+            # stats as a dict, both in DRIVER memory and read with pyarrow
+            # (no Spark job) — the reference serves its hot FTS5 index from
+            # an in-process :memory: copy the same way
+            # (src/index/sqlite_search_index.py:94-98). A pinned topk_many
+            # then runs no Spark job. Both pins are SIZE-GUARDED from
+            # parquet footers (no data read): a piece too big to pin stays
+            # on disk and queries take the pruned scan, exact either way.
+            seg_dir = os.path.join(index_dir, "segments")
+            if _parquet_footer_stats(seg_dir)[1] <= SEGMENT_PIN_MAX_BYTES:
+                self._pinned = self._pin_segments(seg_dir)
             n_terms, _ = _parquet_footer_stats(os.path.join(index_dir, "terms"))
             if n_terms <= DF_CACHE_MAX_TERMS:
                 self._df_cache = self._load_df_stats(index_dir)
@@ -199,9 +224,20 @@ class FtsIndex:
         return cls(spark, index_dir, IndexMeta.load(index_dir), cache=cache)
 
     def unpersist(self) -> None:
-        """Release the pinned segments (no-op unless loaded with cache=True)."""
-        if self._cached_by_shard:
-            self._segments.unpersist()
+        """Drop the driver pin of the segments; later queries take the
+        segments scan. A no-op on an index that holds no pin."""
+        self._pinned = None
+
+    def _pin_segments(self, seg_dir: str):
+        """The serving pin: the scoring columns of every segment row, plus
+        positions on a with_positions index, sorted by (term, shard)."""
+        import pyarrow.dataset as ds
+
+        _bound_driver_arrow_threads()
+        cols = self._SCORE_COLS + (
+            ["positions"] if self.meta.extras.get("with_positions") else [])
+        seg = ds.dataset(seg_dir, format="parquet").to_table(columns=cols)
+        return seg.sort_by([("term", "ascending"), ("shard", "ascending")])
 
     # -- plumbing ------------------------------------------------------------
 
@@ -307,29 +343,33 @@ class FtsIndex:
         "blk_last", "blk_max", "max_tfc",
     ]
 
-    def _per_shard(self, pred, kernel, schema: str,
+    def _per_shard(self, match, kernel, schema: str,
                    with_positions: bool = False) -> DataFrame:
-        """The one per-shard scan every index query runs: the segment rows
-        matching the Column `pred`, hash-distributed by shard over a small
-        explicit partition count (a whole shard never splits, so each
-        shard's result is complete and local), then `kernel(shard rows) ->
-        frame | None` per shard; a partition's frames leave as one batch.
-        In serving mode the cache is already shard-partitioned: one
-        single-stage job, no per-query exchange. `kernel` runs on the
-        executors and must not close over `self`."""
+        """The one per-shard pass every index query runs: the segment rows
+        of `match` (a term list, or a prefix string), then `kernel(shard
+        rows) -> frame | None` per shard (`_over_shards`). A whole shard is
+        always scored in one place, so each shard's result is complete and
+        local. Pinned: the rows come from the driver pin, the kernels run
+        now on the driver, and the rows return as a JVM-only
+        LocalTableScan. Not pinned: a parquet scan with the filter pushed
+        down, hash-distributed by shard over a small explicit partition
+        count, and one mapInPandas; `kernel` then runs on the executors and
+        must not close over `self`."""
         cols = self._SCORE_COLS + (["positions"] if with_positions else [])
-        seg = self._segments.filter(pred).select(*cols)
-        if not self._cached_by_shard:
-            seg = seg.repartition(self._query_partitions, "shard")
+        pin = self._pinned
+        if pin is not None:
+            out = _over_shards(_pinned_rows(pin, match, cols), kernel)
+            return (self._empty(schema) if out is None
+                    else local_rows_df(self.spark, out, schema))
+        term = F.col("term")
+        hit = term.startswith(match) if isinstance(match, str) else term.isin(match)
+        seg = (self._segments.filter(hit).select(*cols)
+               .repartition(self._query_partitions, "shard"))
 
         def run(batches):
-            pdf = _concat_batches(batches)
-            if pdf is None:
-                return
-            out = [kernel(g) for _, g in pdf.groupby("shard", sort=False)]
-            out = [f for f in out if f is not None]
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            out = _over_shards(_concat_batches(batches), kernel)
+            if out is not None:
+                yield out
 
         return seg.mapInPandas(run, schema=schema)
 
@@ -337,7 +377,7 @@ class FtsIndex:
         """Exhaustive index-accelerated scoring: all matching (doc_id, score).
 
         Used by boolean composition (NOT-IN / AND / OR operate on full result
-        relations, reference /root/reference/search.py:67-119).
+        relations, reference search.py:67-119).
         """
         terms = self.query_terms(query)
         plan = self._query_plan(terms, self.term_stats(terms), mode)
@@ -346,19 +386,20 @@ class FtsIndex:
         idfs, n_terms = plan
         avgdl = self.meta.avgdl
         return self._per_shard(
-            F.col("term").isin(list(idfs)),
+            list(idfs),
             lambda g: score_shard_taat(g, idfs, avgdl, n_terms, mode),
             SCORE_SCHEMA,
         )
 
-    def _local_topk(self, plans: list[tuple[dict[str, float], int]], k: int,
-                    mode: str, method: str) -> DataFrame:
-        """Per-shard local top-k heaps of several queries from ONE scan:
-        (qid, doc_id, score), qid = position in `plans`.
+    def _heaps(self, plans: list[tuple[dict[str, float], int]], k: int,
+               mode: str, method: str):
+        """(terms, kernel): the per-shard local top-k heaps of several
+        queries from ONE pass over `terms`, as (qid, doc_id, score) rows
+        (HEAP_SCHEMA), qid = position in `plans`.
 
-        The scan reads the union of the queries' terms; per shard each query
+        The pass reads the union of the queries' terms; per shard each query
         scores only its own term rows, so its heap is exactly the one a
-        single-query scan would produce. Top-k of the union of the shard
+        single-query pass would produce. Top-k of the union of the shard
         heaps, under (score desc, doc_id asc), is the query's global top-k.
 
         method='wand'  per-shard block-max WAND heaps (rank-identical)
@@ -383,32 +424,32 @@ class FtsIndex:
                     out.append(kern(own, idfs, n_terms).assign(qid=qid))
             return pd.concat(out, ignore_index=True) if out else None
 
-        terms = sorted(set().union(*(idfs for idfs, _ in plans)))
-        return self._per_shard(F.col("term").isin(terms), heaps,
-                               "qid int, " + SCORE_SCHEMA)
+        return sorted(set().union(*(idfs for idfs, _ in plans))), heaps
 
     def topk(
         self, query: str, k: int = 10, mode: str = "all", method: str = "wand"
     ) -> DataFrame:
         """Top-k (doc_id, score) ordered (score desc, doc_id asc): the
         one-query case of `topk_many`, kept lazy — a TakeOrderedAndProject
-        over the per-shard heaps (method: see `_local_topk`)."""
+        over the per-shard heaps (method: see `_heaps`)."""
         terms = self.query_terms(query)
         plan = self._query_plan(terms, self.term_stats(terms), mode)
         if plan is None:
             return self._empty(SCORE_SCHEMA)
-        local = self._local_topk([plan], k, mode, method).select("doc_id", "score")
+        local = self._per_shard(*self._heaps([plan], k, mode, method),
+                                HEAP_SCHEMA).select("doc_id", "score")
         return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def topk_many(
         self, queries: list[str], k: int, mode: str = "any", method: str = "wand"
     ) -> dict[str, list[tuple[int, float]]]:
         """Top-k [(doc_id, score)] per query, ordered (score desc, doc_id
-        asc), every query scored by ONE Spark job: the per-shard heaps of
-        `_local_topk` are collected (at most queries x shards x k rows) and
-        merged per query on the driver. Each list equals
+        asc), every query scored by ONE per-shard pass: the heaps of
+        `_heaps` (at most queries x shards x k rows) are merged per query on
+        the driver. On a pinned index the pass reads the driver pin and
+        runs no Spark job; otherwise it is one segments scan. Each list equals
         `topk(q, k, mode, method).collect()`. Queries with the same term
-        set share one heap; a query that can match nothing costs no scan."""
+        set share one heap; a query that can match nothing costs no pass."""
         terms_of = {q: tuple(self.query_terms(q)) for q in queries}
         dfs = self.term_stats(sorted(set().union(*terms_of.values())))
         plans = {}
@@ -419,14 +460,19 @@ class FtsIndex:
         hits = {terms: [] for terms in plans}
         if plans:
             keys = list(plans)
-            local = self._local_topk(list(plans.values()), k, mode, method).toPandas()
-            local = local.sort_values(
-                ["qid", "score", "doc_id"], ascending=[True, False, True],
-                kind="mergesort",
-            ).groupby("qid", sort=False).head(k)
-            for qid, d, sc in zip(local["qid"].tolist(), local["doc_id"].tolist(),
-                                  local["score"].tolist()):
-                hits[keys[qid]].append((d, sc))
+            match, heaps = self._heaps(list(plans.values()), k, mode, method)
+            pin = self._pinned
+            local = (_over_shards(_pinned_rows(pin, match, self._SCORE_COLS), heaps)
+                     if pin is not None else
+                     self._per_shard(match, heaps, HEAP_SCHEMA).toPandas())
+            if local is not None:
+                local = local.sort_values(
+                    ["qid", "score", "doc_id"], ascending=[True, False, True],
+                    kind="mergesort",
+                ).groupby("qid", sort=False).head(k)
+                for qid, d, sc in zip(local["qid"].tolist(), local["doc_id"].tolist(),
+                                      local["score"].tolist()):
+                    hits[keys[qid]].append((d, sc))
         return {q: list(hits.get(terms, [])) for q, terms in terms_of.items()}
 
     # -- phrase queries --------------------------------------------------------
@@ -464,8 +510,8 @@ class FtsIndex:
             _, _, d_ids, d_tf, d_dl = res
             return pd.DataFrame({"doc_id": d_ids, "tf": d_tf, "doclen": d_dl})
 
-        return self._per_shard(F.col("term").isin(sorted(set(seq))), kernel,
-                               MATCH_SCHEMA, with_positions=True)
+        return self._per_shard(sorted(set(seq)), kernel, MATCH_SCHEMA,
+                               with_positions=True)
 
     def _phrase_terms(self, text: str) -> list[str] | None:
         """The phrase's token sequence, or None when it can match nothing
@@ -491,12 +537,14 @@ class FtsIndex:
         jobs: a global df aggregate (tiny relation), then score +
         TakeOrderedAndProject; no match of some unit scores nothing.
 
-        localCheckpoint (not persist): the relation is needed by two
-        actions (df aggregate + scoring) but must not pin executor storage
-        for the life of the session — checkpoint blocks are freed by the
-        ContextCleaner as soon as the result DataFrame is dropped, whereas
-        a persist() with no unpersist() accumulates across queries."""
-        rel = rel.localCheckpoint(eager=True)
+        A scanned relation is localCheckpointed (not persisted): it is
+        needed by two actions (df aggregate + scoring) but must not pin
+        executor storage for the life of the session — checkpoint blocks
+        are freed by the ContextCleaner as soon as the result DataFrame is
+        dropped, whereas a persist() with no unpersist() accumulates across
+        queries. A pinned index's relation is already a LocalTableScan."""
+        if self._pinned is None:
+            rel = rel.localCheckpoint(eager=True)
         dfs = rel.agg(*[F.count(F.when(F.col(d) > 0, 1)) for d, _ in units]).first()
         if not all(dfs):
             return self._empty(SCORE_SCHEMA)
@@ -523,10 +571,10 @@ class FtsIndex:
         syntax, /root/reference/src/index/sqlite_search_index.py:110-113,
         so 'tok*' is part of its user-facing query surface).
 
-        The segment scan filters term.startswith(prefix), which Spark
-        pushes into parquet as StringStartsWith — term-sorted segments
-        row-group-prune to the prefix's vocab slice, so the scan cost
-        scales with the matching vocabulary, not the index. Docs are
+        The segment rows are those whose term starts with the prefix; the
+        scan pushes that into parquet as StringStartsWith — term-sorted
+        segments row-group-prune to the prefix's vocab slice, so the scan
+        cost scales with the matching vocabulary, not the index. Docs are
         shard-partitioned, so the per-shard posting-list merge (one
         vectorized sort + reduceat) is globally complete per doc."""
         norm = self.query_terms_ordered(prefix.rstrip("*"))
@@ -547,8 +595,7 @@ class FtsIndex:
                 "doclen": dls[starts],
             })
 
-        return self._per_shard(F.col("term").startswith(norm[0]), kernel,
-                               MATCH_SCHEMA)
+        return self._per_shard(norm[0], kernel, MATCH_SCHEMA)
 
     def prefix_topk(self, prefix: str, k: int = 10) -> DataFrame:
         """FTS5 prefix-query ('tok*') top-k BM25 — the prefix is ONE
@@ -582,8 +629,8 @@ class FtsIndex:
                 "doclen": d_dl[np.searchsorted(d_ids, hit)],
             })
 
-        return self._per_shard(F.col("term").isin(sorted(set(seq))), kernel,
-                               MATCH_SCHEMA, with_positions=True)
+        return self._per_shard(sorted(set(seq)), kernel, MATCH_SCHEMA,
+                               with_positions=True)
 
     def initial_topk(self, phrase: str, k: int = 10) -> DataFrame:
         """FTS5 '^phrase' top-k BM25 — one virtual term anchored at the
@@ -671,8 +718,7 @@ class FtsIndex:
                 "doclen": dl, "near": ntf_a > 0,
             })
 
-        return self._per_shard(F.col("term").isin(terms), kernel, schema,
-                               with_positions=True)
+        return self._per_shard(terms, kernel, schema, with_positions=True)
 
     def near_topk(self, phrase_a: str, phrase_b: str, n: int = 10,
                   k: int = 10) -> DataFrame:

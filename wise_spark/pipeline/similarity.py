@@ -22,6 +22,12 @@ rerank is built-in higher-order functions (no Python UDF) over
 double-cast vectors, rounded to 6 dp, with a NaN cosine reported as NULL.
 Per-query top-k is `row_number() <= k`, which Catalyst plans as a partial
 WindowGroupLimit before the query_id exchange (see `_topk`).
+
+A NULL embedding has no direction: `cosine_topk` ranks it last with a NULL
+cosine, and the Python-kernel paths (LSH, IVF, the exact GEMM) drop it
+before their kernels (`_present`), so it is never a candidate, a probed
+query or a near-duplicate — its exact cosine is NULL and fails every
+threshold.
 """
 
 from __future__ import annotations
@@ -63,6 +69,11 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
+
+
+def _present(df: DataFrame, vec_col: str) -> DataFrame:
+    """The rows with a non-NULL embedding (see the module docstring)."""
+    return df.where(F.col(vec_col).isNotNull())
 
 
 def _dbl(vec) -> Column:
@@ -201,6 +212,7 @@ def lsh_cosine_topk(
     """Approximate top-k: random-hyperplane sign buckets (`_sign_keys`),
     exact rerank within candidates. The candidate join is a broadcast
     equi-join on the bucket key."""
+    items, queries = _present(items, vec_col), _present(queries, vec_col)
     mat = _plane_matrix(items, vec_col, n_planes, n_tables, seed)
     if mat is None:   # empty corpus: no neighbors for any query
         return _no_neighbors(items, queries, id_col)
@@ -357,6 +369,7 @@ def cosine_neardup_pairs(
     """
     if mode not in ("exact", "lsh"):
         raise ValueError(f"mode must be 'exact' or 'lsh', got {mode!r}")
+    items = _present(items, vec_col)
     if mode == "exact":
         return _exact_neardup_blocked(items, threshold, id_col, vec_col)
     mat = _plane_matrix(items, vec_col, n_planes, n_tables, seed)
@@ -412,7 +425,7 @@ def train_ivf_centroids(
     subset, not the full corpus). The sample is capped at sample_n rows, so
     driver memory is bounded no matter the corpus size; the full corpus is
     only ever touched by the distributed assignment matmul."""
-    rows = items.select(vec_col).limit(sample_n).collect()
+    rows = _present(items, vec_col).select(vec_col).limit(sample_n).collect()
     v = np.array([np.asarray(r[0], dtype=np.float64) for r in rows])
     v = v / np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
     rng = np.random.default_rng(seed)
@@ -464,6 +477,7 @@ def ivf_cosine_topk(
     pair repeats. At 10^12 vectors the list assignment is a natural
     partition/cluster key — nothing ever materializes all-pairs.
     """
+    items, queries = _present(items, vec_col), _present(queries, vec_col)
     if centroids is None:
         if items.select(vec_col).first() is None:   # empty corpus: no lists
             return _no_neighbors(items, queries, id_col)

@@ -14,15 +14,17 @@ Stdlib-only (http.server) wrapper mirroring the reference API's contracts:
     (routes.py:64-75); 404 text/plain when the id or file is missing.
 
 Scale shape: concurrent /search requests share their scoring. Requests
-that arrive while a scoring job runs queue up, and the next free request
-thread scores all of them with ONE `FtsIndex.topk_many` job (group commit:
-no batching window, no extra thread; a lone request runs at once). Each
-request then ranks and slices its own <= 1000-hit list on the driver and
-hydrates it with `FtsIndex.doc_rows`: a driver-side pyarrow read of only
-the doc_id-sorted doc_map row groups that hold its hits, no Spark job. So a
-batch of requests costs exactly one Spark job. A media request is a single
-point lookup + file stream, so one driver process serves while executors
-keep the index hot. The Spark wiring lives in `spark_search_fn` /
+that arrive while a batch is being scored queue up, and the next free
+request thread scores all of them with ONE `FtsIndex.topk_many` call
+(group commit: no batching window, no extra thread; a lone request runs at
+once). On an index loaded with cache=True (and under its pin guard) that
+call scores the segments pinned in driver memory and runs no Spark job;
+otherwise it is one segments scan. Each request then ranks and slices its
+own <= 1000-hit list on the driver and hydrates it with
+`FtsIndex.doc_rows`: a driver-side pyarrow read of only the doc_id-sorted
+doc_map row groups that hold its hits, no Spark job. So a warm request on
+a pinned index runs no Spark job at all. A media request is a single point
+lookup + file stream. The Spark wiring lives in `spark_search_fn` /
 `parquet_media_resolver`; the HTTP mechanics take plain callables so they
 are testable without a SparkSession.
 """
@@ -180,9 +182,11 @@ def spark_search_fn(index, hydrate: bool = True) -> SearchFn:
     _GroupCommit), then, per request and outside the shared slot, rank =
     position in the ordered list, the [start, end) slice (the contract of
     `ranked()`/`page()`), and optional doc_map hydration by
-    `index.doc_rows` — a pruned pyarrow read on the driver, so the batch's
-    scoring job is the request's only Spark job. Rows equal
-    `hydrate(page(...))`'s. Every list here is <= `end` (<= 1000) hits."""
+    `index.doc_rows` — a pruned pyarrow read on the driver. So a request's
+    only possible Spark job is its batch's segments scan, and an index
+    loaded with cache=True (segments pinned on the driver) runs none.
+    Rows equal `hydrate(page(...))`'s. Every list here is <= `end`
+    (<= 1000) hits."""
     top = _GroupCommit(index)
 
     def run(query: str, start: int, end: int) -> list[dict]:

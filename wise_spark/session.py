@@ -57,14 +57,20 @@ def local_rows_df(spark: SparkSession, rows, schema) -> "DataFrame":  # noqa: F8
     `schema` is a DDL string or StructType and is honored exactly: result
     schema, Arrow output dtypes and nullability are identical to the plain
     `createDataFrame(rows, schema)` they replace, and a None becomes a SQL
-    NULL in any nullable column (pinned by tests).
+    NULL in any nullable column (pinned by tests). `rows` is a sequence of
+    tuples, or a pandas frame holding (at least) the schema's columns,
+    taken by name.
     """
+    import pandas as pd
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     st = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
-    rows = list(rows)
-    cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in st.fields]
+    if isinstance(rows, pd.DataFrame):
+        cols = [rows[f.name].to_numpy() for f in st.fields]
+    else:
+        rows = list(rows)
+        cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in st.fields]
     return spark.createDataFrame(
         pa.Table.from_arrays(cols, schema=to_arrow_schema(st)), st)
