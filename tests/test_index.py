@@ -164,6 +164,55 @@ def test_pinned_index_rank_identity_under_concurrent_batches(spark, index, oracl
                    for mode, method, got in runs)
 
 
+def test_pinned_rows_binary_search_equals_full_filter():
+    """`_pinned_rows` cuts term / prefix slices out of the term-sorted pin
+    by binary search; on a multi-chunk pin with prefix neighbours
+    ("ab" < "ab\\x00z" < "abc" < "abé" < "ac") and non-ASCII terms it
+    returns exactly the rows a full is_in / starts_with filter keeps, in
+    the pin's order."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from wise_spark.index.reader import _pinned_rows
+
+    vocab = ["a", "ab", "ab\x00z", "abc", "abcd", "abé", "ac", "b", "é", "éa", "z"]
+    rows = pa.table({
+        "term": [t for t in vocab for _ in range(3)],
+        "shard": [s for _ in vocab for s in range(3)],
+        "n": list(range(3 * len(vocab))),
+    }).sort_by([("term", "ascending"), ("shard", "ascending")])
+    pin = pa.Table.from_batches(rows.to_batches(max_chunksize=4))
+    assert pin.column("term").num_chunks > 1
+    term = pin.column("term")
+    matches = [["ab"], ["abc", "a", "z"], ["é", "missing", "ab"], [], ["zz"],
+               "ab", "a", "é", "abc", "abz", "", "zz"]
+    for match in matches:
+        hit = (pc.starts_with(term, match) if isinstance(match, str)
+               else pc.is_in(term, value_set=pa.array(match, pa.string())))
+        want = pin.filter(hit).select(["term", "n"]).to_pandas()
+        got = _pinned_rows(pin, match, ["term", "n"])
+        pd.testing.assert_frame_equal(got, want, obj=repr(match))
+
+
+def test_local_topk_matches_full_sort():
+    """`wand.local_topk` (partition at the k-th score, then sort only the
+    rows at or above it) returns exactly the head of a full (score desc,
+    doc_id asc) sort, with ties straddling the k-th place and k = 0 or
+    beyond the row count."""
+    from wise_spark.index.wand import local_topk
+
+    rng = np.random.default_rng(7)
+    for n in (0, 1, 5, 50, 500):
+        out = pd.DataFrame({
+            "doc_id": rng.permutation(10 * n + 1)[:n].astype(np.int64),
+            "score": rng.integers(0, 4, n) / 3.0,
+        })
+        for k in (0, 1, 3, 10, n, n + 5):
+            want = out.sort_values(["score", "doc_id"], ascending=[False, True],
+                                   kind="mergesort").head(k).reset_index(drop=True)
+            pd.testing.assert_frame_equal(local_topk(out, k), want, obj=f"n={n} k={k}")
+
+
 @pytest.mark.parametrize("mode", ["all", "any"])
 def test_wand_random_sweep_rank_identity(index, oracle, mode):
     """30 seeded random queries (1-4 terms, some salted with an absent

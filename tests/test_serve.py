@@ -498,3 +498,35 @@ def test_failing_search_fn_returns_500_not_reset():
         srv.stop()
     finally:
         logging.disable(logging.NOTSET)
+
+
+def test_keep_alive_responses_are_sent_without_nagle_delay(monkeypatch):
+    """Every accepted connection has TCP_NODELAY set: a response is two
+    writes (headers, then body), and under Nagle's algorithm the body of
+    each keep-alive response waits for the client's delayed ACK."""
+    import http.client
+    import socket
+
+    from wise_spark import serve
+
+    nodelay = []
+    setup = serve._Handler.setup
+
+    def recording_setup(self):
+        setup(self)
+        nodelay.append(self.connection.getsockopt(
+            socket.IPPROTO_TCP, socket.TCP_NODELAY))
+
+    monkeypatch.setattr(serve._Handler, "setup", recording_setup)
+    srv = SearchServer(fake_search)
+    port = srv.start()
+    try:
+        conn = http.client.HTTPConnection("127.0.0.1", port, timeout=10)
+        for _ in range(3):
+            conn.request("GET", "/search?q=a+b&start=0&end=5")
+            r = conn.getresponse()
+            assert r.status == 200 and len(json.loads(r.read())["results"]["a b"]) == 5
+        conn.close()
+    finally:
+        srv.stop()
+    assert len(nodelay) == 1 and nodelay[0] != 0

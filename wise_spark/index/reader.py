@@ -11,9 +11,9 @@ this one per-shard pass, `FtsIndex._per_shard`, over one of two row sources:
 
   * pinned (`cache=True`, segments under SEGMENT_PIN_MAX_BYTES): the
     segments' scoring columns as one term-sorted Arrow table in DRIVER
-    memory, filtered with pyarrow and scored on the driver. `topk_many`
-    (so every /search batch) runs no Spark job; the lazy APIs return the
-    kernels' rows as a JVM-only LocalTableScan.
+    memory, sliced by binary search on its term order and scored on the
+    driver. `topk_many` (so every /search batch) runs no Spark job; the
+    lazy APIs return the kernels' rows as a JVM-only LocalTableScan.
   * not pinned: a parquet scan with the term filter pushed down,
     hash-distributed by shard, and the file's one mapInPandas.
 
@@ -26,6 +26,7 @@ corpus stats implicitly inside FTS5.
 
 from __future__ import annotations
 
+import bisect
 import os
 import threading
 
@@ -40,7 +41,7 @@ from .build import (
     IndexMeta, _bound_driver_arrow_threads, _concat_batches, _parquet_footer_stats,
 )
 from .codec import decode_positions_subset, decode_postings
-from .wand import score_shard_taat, score_shard_wand
+from .wand import local_topk, score_shard_taat, score_shard_wand
 
 
 def _term_rows(g: pd.DataFrame) -> dict:
@@ -129,10 +130,12 @@ def _shard_phrase_occurrences(rows: dict, seq: list[str], prune: bool = True,
 # queries stay exact either way, the pins are purely a latency
 # optimization).
 DF_CACHE_MAX_TERMS = 5_000_000          # ~100s of MB of driver heap
-# segments' parquet footer bytes; the driver's Arrow pin is ~2.6x that
-# (3.51 MB of Arrow for 1.36 MB of parquet on a 3,000-doc index), so the
-# guard holds the pin under ~660 MB of driver memory
-SEGMENT_PIN_MAX_BYTES = 256 << 20
+# segments' parquet footer bytes. The driver's Arrow pin measured 2.58x
+# that on a 3,000-doc index, 1.53x on a 1M-doc one (425 MiB for 278 MiB:
+# the largest index a cache=True caller serves, bench.py's) and 1.44x on
+# a 1.8M-doc one (683 MiB for 474 MiB), so the guard covers bench.py's
+# index with ~1.8x headroom and holds a pin to ~0.75 GiB of driver memory
+SEGMENT_PIN_MAX_BYTES = 512 << 20
 
 # the (doc_id, tf, doclen) virtual-term matches the phrase/prefix/initial
 # scans emit
@@ -155,15 +158,23 @@ def _over_shards(rows: pd.DataFrame | None, kernel) -> pd.DataFrame | None:
 def _pinned_rows(pin, match, cols: list[str]) -> pd.DataFrame:
     """The pin's `cols` of the rows whose term is in `match` (a term list)
     or starts with it (a prefix string), as pandas — the driver-side twin
-    of the segments scan's pushed-down filter in `FtsIndex._per_shard`."""
+    of the segments scan's pushed-down filter in `FtsIndex._per_shard`.
+    The pin is term-sorted, so each term (or the prefix) is one contiguous
+    slice found by binary search: a query costs O(log rows + matched rows),
+    not a pass over the whole pin."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
+    if isinstance(match, str):
+        wanted, key = [match], lambda s: s.as_py()[:len(match)]
+    else:
+        wanted, key = sorted(set(match)), lambda s: s.as_py()
+    terms = pin.column("term")
+    spans = [(bisect.bisect_left(terms, t, key=key),
+              bisect.bisect_right(terms, t, key=key)) for t in wanted]
     seg = pin.select(cols)
-    term = seg.column("term")
-    hit = (pc.starts_with(term, match) if isinstance(match, str)
-           else pc.is_in(term, value_set=pa.array(match, pa.string())))
-    return seg.filter(hit).to_pandas()
+    return pa.concat_tables(
+        [seg.slice(lo, hi - lo) for lo, hi in spans] or [seg.slice(0, 0)]
+    ).to_pandas()
 
 
 class FtsIndex:
@@ -344,7 +355,7 @@ class FtsIndex:
     ]
 
     def _per_shard(self, match, kernel, schema: str,
-                   with_positions: bool = False) -> DataFrame:
+                   with_positions: bool = False, collect: bool = False):
         """The one per-shard pass every index query runs: the segment rows
         of `match` (a term list, or a prefix string), then `kernel(shard
         rows) -> frame | None` per shard (`_over_shards`). A whole shard is
@@ -354,11 +365,15 @@ class FtsIndex:
         LocalTableScan. Not pinned: a parquet scan with the filter pushed
         down, hash-distributed by shard over a small explicit partition
         count, and one mapInPandas; `kernel` then runs on the executors and
-        must not close over `self`."""
+        must not close over `self`. collect=True returns the rows as a
+        pandas frame (None when no shard emits) instead: no Spark job on a
+        pinned index, one `toPandas` of the scan otherwise."""
         cols = self._SCORE_COLS + (["positions"] if with_positions else [])
         pin = self._pinned
         if pin is not None:
             out = _over_shards(_pinned_rows(pin, match, cols), kernel)
+            if collect:
+                return out
             return (self._empty(schema) if out is None
                     else local_rows_df(self.spark, out, schema))
         term = F.col("term")
@@ -371,7 +386,11 @@ class FtsIndex:
             if out is not None:
                 yield out
 
-        return seg.mapInPandas(run, schema=schema)
+        rel = seg.mapInPandas(run, schema=schema)
+        if not collect:
+            return rel
+        out = rel.toPandas()
+        return out if len(out) else None
 
     def score_all(self, query: str, mode: str = "all") -> DataFrame:
         """Exhaustive index-accelerated scoring: all matching (doc_id, score).
@@ -410,11 +429,7 @@ class FtsIndex:
         def kern(g: pd.DataFrame, idfs: dict[str, float], n_terms: int) -> pd.DataFrame:
             if method == "wand":
                 return score_shard_wand(g, idfs, avgdl, n_terms, mode, k)
-            out = score_shard_taat(g, idfs, avgdl, n_terms, mode)
-            out = out.sort_values(
-                ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-            )
-            return out.head(k)
+            return local_topk(score_shard_taat(g, idfs, avgdl, n_terms, mode), k)
 
         def heaps(g: pd.DataFrame) -> pd.DataFrame | None:
             out = []
@@ -430,8 +445,10 @@ class FtsIndex:
         self, query: str, k: int = 10, mode: str = "all", method: str = "wand"
     ) -> DataFrame:
         """Top-k (doc_id, score) ordered (score desc, doc_id asc): the
-        one-query case of `topk_many`, kept lazy — a TakeOrderedAndProject
-        over the per-shard heaps (method: see `_heaps`)."""
+        one-query case of `topk_many`, as a TakeOrderedAndProject over the
+        per-shard heaps (method: see `_heaps`). On an unpinned index the
+        whole plan stays lazy; a pinned index scores its heaps when topk()
+        is called and only the final ordering stays lazy."""
         terms = self.query_terms(query)
         plan = self._query_plan(terms, self.term_stats(terms), mode)
         if plan is None:
@@ -460,11 +477,8 @@ class FtsIndex:
         hits = {terms: [] for terms in plans}
         if plans:
             keys = list(plans)
-            match, heaps = self._heaps(list(plans.values()), k, mode, method)
-            pin = self._pinned
-            local = (_over_shards(_pinned_rows(pin, match, self._SCORE_COLS), heaps)
-                     if pin is not None else
-                     self._per_shard(match, heaps, HEAP_SCHEMA).toPandas())
+            local = self._per_shard(*self._heaps(list(plans.values()), k, mode, method),
+                                    HEAP_SCHEMA, collect=True)
             if local is not None:
                 local = local.sort_values(
                     ["qid", "score", "doc_id"], ascending=[True, False, True],

@@ -122,9 +122,20 @@ def score_shard_wand(
             out = _taat_over_lists(lists, n_terms, mode)
         else:
             out = _bmw_any(lists, k)
-    # local top-k with the global tie-break order
-    out = out.sort_values(["score", "doc_id"], ascending=[False, True], kind="mergesort")
-    return out.head(k).reset_index(drop=True)
+    return local_topk(out, k)
+
+
+def local_topk(out: pd.DataFrame, k: int) -> pd.DataFrame:
+    """The k best (doc_id, score) rows of a kernel result in the global
+    tie-break order (score desc, doc_id asc). A partition finds the k-th
+    best score and only the rows at or above it (its ties included) are
+    sorted: the rows of a full two-key sort, without sorting every match."""
+    ids, score = out["doc_id"].to_numpy(), out["score"].to_numpy()
+    if 0 < k < score.size:
+        keep = score >= np.partition(score, score.size - k)[score.size - k]
+        ids, score = ids[keep], score[keep]
+    order = np.lexsort((ids, -score))[:k]
+    return pd.DataFrame({"doc_id": ids[order], "score": score[order]})
 
 
 def _theta0(all_ids: np.ndarray, all_contrib: np.ndarray, k: int) -> float:
