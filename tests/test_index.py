@@ -164,12 +164,55 @@ def test_pinned_index_rank_identity_under_concurrent_batches(spark, index, oracl
                    for mode, method, got in runs)
 
 
+def test_batch_shared_decode_changes_no_answer(spark, index, oracle):
+    """A batch decodes each (term, shard) row once and hands the same
+    decoded lists to every query that has the term. Queries overlapping in
+    terms, a repeated query, an absent-term query and the empty query get,
+    in one pinned batch, exactly (scores bitwise) the lists each gets alone
+    and the lists of the uncached index's scan."""
+    pinned = FtsIndex.load(spark, index.index_dir, cache=True)
+    # the three most frequent terms with df < N/3 (idf floors at df > N/2),
+    # so they co-occur and their scores are not all ~1e-6
+    a, b, c = sorted((t for t in oracle.df if oracle.df[t] < oracle.n_docs / 3),
+                     key=lambda t: (-oracle.df[t], t))[:3]
+    batch = [f"{a} {b}", f"{b} {c}", f"{a} {b} {c}", f"{c} {a}", f"{a} {b}",
+             "zzzabsent", ""]
+    for mode in ("any", "all"):
+        for method in ("wand", "taat"):
+            for k in (1, 15, 1000):
+                got = pinned.topk_many(batch, k, mode=mode, method=method)
+                alone = {q: pinned.topk_many([q], k, mode=mode, method=method)[q]
+                         for q in batch}
+                assert got == alone, (mode, method, k)
+                assert got == index.topk_many(batch, k, mode=mode, method=method), \
+                    (mode, method, k)
+                assert got[f"{a} {b}"], (mode, method, k)
+
+
+def test_pinned_topk_many_builds_no_pandas_frame(spark, index, monkeypatch):
+    """A pinned topk_many goes from the pin's Arrow slices to the per-query
+    lists without pandas: with frame construction, sort_values, iterrows
+    and concat raising, it returns the same lists."""
+    pinned = FtsIndex.load(spark, index.index_dir, cache=True)
+    batch = QUERIES + ["zzzabsent qqqmissing", ""]
+    want = {mode: pinned.topk_many(batch, 15, mode=mode) for mode in ("any", "all")}
+
+    def boom(*_a, **_k):
+        raise AssertionError("pandas on the pinned topk_many path")
+
+    for name in ("__init__", "sort_values", "iterrows"):
+        monkeypatch.setattr(pd.DataFrame, name, boom)
+    monkeypatch.setattr(pd, "concat", boom)
+    for mode, lists in want.items():
+        assert pinned.topk_many(batch, 15, mode=mode) == lists, mode
+
+
 def test_pinned_rows_binary_search_equals_full_filter():
     """`_pinned_rows` cuts term / prefix slices out of the term-sorted pin
     by binary search; on a multi-chunk pin with prefix neighbours
     ("ab" < "ab\\x00z" < "abc" < "abé" < "ac") and non-ASCII terms it
-    returns exactly the rows a full is_in / starts_with filter keeps, in
-    the pin's order."""
+    returns exactly the rows a full is_in / starts_with filter keeps,
+    grouped by shard, each shard's records in the pin's (term) order."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -189,16 +232,17 @@ def test_pinned_rows_binary_search_equals_full_filter():
     for match in matches:
         hit = (pc.starts_with(term, match) if isinstance(match, str)
                else pc.is_in(term, value_set=pa.array(match, pa.string())))
-        want = pin.filter(hit).select(["term", "n"]).to_pandas()
-        got = _pinned_rows(pin, match, ["term", "n"])
-        pd.testing.assert_frame_equal(got, want, obj=repr(match))
+        want = {}
+        for r in pin.filter(hit).select(["term", "shard", "n"]).to_pylist():
+            want.setdefault(r["shard"], []).append(r)
+        assert _pinned_rows(pin, match, ["term", "shard", "n"]) == want, repr(match)
 
 
 def test_local_topk_matches_full_sort():
-    """`wand.local_topk` (partition at the k-th score, then sort only the
-    rows at or above it) returns exactly the head of a full (score desc,
-    doc_id asc) sort, with ties straddling the k-th place and k = 0 or
-    beyond the row count."""
+    """`wand.local_topk` (partition at the k-th score, then lexsort only
+    the pairs at or above it) returns exactly the head of a full (score
+    desc, doc_id asc) sort, with ties straddling the k-th place and k = 0
+    or beyond the row count."""
     from wise_spark.index.wand import local_topk
 
     rng = np.random.default_rng(7)
@@ -210,7 +254,9 @@ def test_local_topk_matches_full_sort():
         for k in (0, 1, 3, 10, n, n + 5):
             want = out.sort_values(["score", "doc_id"], ascending=[False, True],
                                    kind="mergesort").head(k).reset_index(drop=True)
-            pd.testing.assert_frame_equal(local_topk(out, k), want, obj=f"n={n} k={k}")
+            ids, score = local_topk(out["doc_id"].to_numpy(), out["score"].to_numpy(), k)
+            pd.testing.assert_frame_equal(pd.DataFrame({"doc_id": ids, "score": score}),
+                                          want, obj=f"n={n} k={k}")
 
 
 @pytest.mark.parametrize("mode", ["all", "any"])

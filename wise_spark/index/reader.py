@@ -12,10 +12,15 @@ this one per-shard pass, `FtsIndex._per_shard`, over one of two row sources:
   * pinned (`cache=True`, segments under SEGMENT_PIN_MAX_BYTES): the
     segments' scoring columns as one term-sorted Arrow table in DRIVER
     memory, sliced by binary search on its term order and scored on the
-    driver. `topk_many` (so every /search batch) runs no Spark job; the
-    lazy APIs return the kernels' rows as a JVM-only LocalTableScan.
+    driver. `topk_many` (so every /search batch) runs no Spark job and
+    builds no pandas frame; the lazy APIs return the kernels' rows as a
+    JVM-only LocalTableScan.
   * not pinned: a parquet scan with the term filter pushed down,
     hash-distributed by shard, and the file's one mapInPandas.
+
+Both sources hand the kernel loop (`_over_shards`) one shard's segment
+rows at a time as a term-sorted list of records (dicts); a kernel returns
+its rows as {column: numpy array}, or None.
 
 Scale notes: the segments scan touches only the query terms' posting rows —
 for a 3-term query over 10^12 docs that is 3 * n_shards rows regardless of
@@ -41,12 +46,12 @@ from .build import (
     IndexMeta, _bound_driver_arrow_threads, _concat_batches, _parquet_footer_stats,
 )
 from .codec import decode_positions_subset, decode_postings
-from .wand import local_topk, score_shard_taat, score_shard_wand
+from .wand import decode_terms, frame_records, local_topk, taat, wand_topk
 
 
-def _term_rows(g: pd.DataFrame) -> dict:
-    """{term: segment row} over ONE shard's rows."""
-    return {r["term"]: r for _, r in g.iterrows()}
+def _term_rows(records: list[dict]) -> dict:
+    """{term: segment record} over ONE shard's records."""
+    return {r["term"]: r for r in records}
 
 
 def _shard_phrase_occurrences(rows: dict, seq: list[str], prune: bool = True,
@@ -144,26 +149,33 @@ MATCH_SCHEMA = "doc_id long, tf long, doclen long"
 HEAP_SCHEMA = "qid int, " + SCORE_SCHEMA
 
 
-def _over_shards(rows: pd.DataFrame | None, kernel) -> pd.DataFrame | None:
-    """The one kernel loop of both row sources: `kernel(one shard's rows)
-    -> frame | None` per shard, the frames concatenated; None when no shard
-    emits."""
-    if rows is None:
+def _by_shard(records) -> dict[int, list[dict]]:
+    """{shard: its records}, each list in the order given."""
+    out: dict[int, list[dict]] = {}
+    for r in records:
+        out.setdefault(r["shard"], []).append(r)
+    return out
+
+
+def _over_shards(rows: dict[int, list[dict]], kernel) -> dict | None:
+    """The one kernel loop of both row sources: `kernel(one shard's
+    term-sorted records) -> {column: array} | None` per shard, the columns
+    concatenated; None when no shard emits."""
+    out = [c for c in map(kernel, rows.values()) if c is not None]
+    if not out:
         return None
-    out = [kernel(g) for _, g in rows.groupby("shard", sort=False)]
-    out = [f for f in out if f is not None]
-    return pd.concat(out, ignore_index=True) if out else None
+    return {name: np.concatenate([c[name] for c in out]) for name in out[0]}
 
 
-def _pinned_rows(pin, match, cols: list[str]) -> pd.DataFrame:
-    """The pin's `cols` of the rows whose term is in `match` (a term list)
-    or starts with it (a prefix string), as pandas — the driver-side twin
-    of the segments scan's pushed-down filter in `FtsIndex._per_shard`.
-    The pin is term-sorted, so each term (or the prefix) is one contiguous
-    slice found by binary search: a query costs O(log rows + matched rows),
-    not a pass over the whole pin."""
-    import pyarrow as pa
-
+def _pinned_rows(pin, match, cols: list[str]) -> dict[int, list[dict]]:
+    """The pin's `cols` (which hold "shard") of the rows whose term is in
+    `match` (a term list) or starts with it (a prefix string), as records
+    grouped by shard — the driver-side twin of the segments scan's
+    pushed-down filter in `FtsIndex._per_shard`. The pin is sorted by
+    (term, shard), so each term (or the prefix) is one contiguous slice
+    found by binary search, and visiting the slices in term order leaves
+    every shard's records term-sorted: a query costs O(log rows + matched
+    rows), not a pass over the whole pin."""
     if isinstance(match, str):
         wanted, key = [match], lambda s: s.as_py()[:len(match)]
     else:
@@ -171,10 +183,8 @@ def _pinned_rows(pin, match, cols: list[str]) -> pd.DataFrame:
     terms = pin.column("term")
     spans = [(bisect.bisect_left(terms, t, key=key),
               bisect.bisect_right(terms, t, key=key)) for t in wanted]
-    seg = pin.select(cols)
-    return pa.concat_tables(
-        [seg.slice(lo, hi - lo) for lo, hi in spans] or [seg.slice(0, 0)]
-    ).to_pandas()
+    return _by_shard(r for lo, hi in spans if hi > lo
+                     for r in pin.slice(lo, hi - lo).select(cols).to_pylist())
 
 
 class FtsIndex:
@@ -346,28 +356,30 @@ class FtsIndex:
 
     # -- scoring -------------------------------------------------------------
 
-    # scoring reads only these columns — positions (phrase-only) and sum_tf
-    # (collection-frequency metadata, consumed by merge/stats paths, never
-    # by a scoring kernel) are pruned from the per-query scan
+    # scoring reads only these columns — positions (phrase-only), sum_tf
+    # and max_tfc (collection-frequency and whole-list bound metadata,
+    # consumed by merge/stats paths, never by a scoring kernel: WAND bounds
+    # come from the block maxima) are pruned from the per-query scan
     _SCORE_COLS = [
-        "term", "shard", "n", "docids", "tfs", "doclens",
-        "blk_last", "blk_max", "max_tfc",
+        "term", "shard", "n", "docids", "tfs", "doclens", "blk_last", "blk_max",
     ]
 
     def _per_shard(self, match, kernel, schema: str,
                    with_positions: bool = False, collect: bool = False):
         """The one per-shard pass every index query runs: the segment rows
-        of `match` (a term list, or a prefix string), then `kernel(shard
-        rows) -> frame | None` per shard (`_over_shards`). A whole shard is
-        always scored in one place, so each shard's result is complete and
-        local. Pinned: the rows come from the driver pin, the kernels run
-        now on the driver, and the rows return as a JVM-only
-        LocalTableScan. Not pinned: a parquet scan with the filter pushed
-        down, hash-distributed by shard over a small explicit partition
-        count, and one mapInPandas; `kernel` then runs on the executors and
-        must not close over `self`. collect=True returns the rows as a
-        pandas frame (None when no shard emits) instead: no Spark job on a
-        pinned index, one `toPandas` of the scan otherwise."""
+        of `match` (a term list, or a prefix string), then `kernel(one
+        shard's term-sorted records) -> {column: array} | None` per shard
+        (`_over_shards`). A whole shard is always scored in one place, so
+        each shard's result is complete and local. Pinned: the records are
+        sliced out of the driver pin, the kernels run now on the driver,
+        and the rows return as a JVM-only LocalTableScan. Not pinned: a
+        parquet scan with the filter pushed down, hash-distributed by shard
+        over a small explicit partition count, and one mapInPandas, whose
+        frame becomes records once per partition; `kernel` then runs on the
+        executors and must not close over `self`. collect=True returns the
+        rows as {column: array} (None when no shard emits) instead: no
+        Spark job and no pandas on a pinned index, one `toPandas` of the
+        scan otherwise."""
         cols = self._SCORE_COLS + (["positions"] if with_positions else [])
         pin = self._pinned
         if pin is not None:
@@ -382,15 +394,18 @@ class FtsIndex:
                .repartition(self._query_partitions, "shard"))
 
         def run(batches):
-            out = _over_shards(_concat_batches(batches), kernel)
+            pdf = _concat_batches(batches)
+            if pdf is None:
+                return
+            out = _over_shards(_by_shard(frame_records(pdf)), kernel)
             if out is not None:
-                yield out
+                yield pd.DataFrame(out)
 
         rel = seg.mapInPandas(run, schema=schema)
         if not collect:
             return rel
         out = rel.toPandas()
-        return out if len(out) else None
+        return {c: out[c].to_numpy() for c in out} if len(out) else None
 
     def score_all(self, query: str, mode: str = "all") -> DataFrame:
         """Exhaustive index-accelerated scoring: all matching (doc_id, score).
@@ -404,11 +419,12 @@ class FtsIndex:
             return self._empty(SCORE_SCHEMA)
         idfs, n_terms = plan
         avgdl = self.meta.avgdl
-        return self._per_shard(
-            list(idfs),
-            lambda g: score_shard_taat(g, idfs, avgdl, n_terms, mode),
-            SCORE_SCHEMA,
-        )
+
+        def kernel(records: list[dict]) -> dict:
+            ids, score = taat(decode_terms(records, idfs, avgdl), n_terms, mode)
+            return {"doc_id": ids, "score": score}
+
+        return self._per_shard(list(idfs), kernel, SCORE_SCHEMA)
 
     def _heaps(self, plans: list[tuple[dict[str, float], int]], k: int,
                mode: str, method: str):
@@ -416,30 +432,37 @@ class FtsIndex:
         queries from ONE pass over `terms`, as (qid, doc_id, score) rows
         (HEAP_SCHEMA), qid = position in `plans`.
 
-        The pass reads the union of the queries' terms; per shard each query
-        scores only its own term rows, so its heap is exactly the one a
-        single-query pass would produce. Top-k of the union of the shard
-        heaps, under (score desc, doc_id asc), is the query's global top-k.
+        The pass reads the union of the queries' terms. Per shard each
+        (term, shard) row is decoded once for the whole batch — a term's
+        idf, so its decoded contributions, is the same for every query —
+        and each query scores only its own terms' lists, in sorted-term
+        order, so its heap is exactly the one a single-query pass would
+        produce. Top-k of the union of the shard heaps, under (score desc,
+        doc_id asc), is the query's global top-k.
 
         method='wand'  per-shard block-max WAND heaps (rank-identical)
         method='taat'  per-shard exhaustive, then local top-k
         """
         avgdl = self.meta.avgdl
+        idf = {t: v for idfs, _ in plans for t, v in idfs.items()}
+        wanted = [(sorted(idfs), n_terms) for idfs, n_terms in plans]
 
-        def kern(g: pd.DataFrame, idfs: dict[str, float], n_terms: int) -> pd.DataFrame:
-            if method == "wand":
-                return score_shard_wand(g, idfs, avgdl, n_terms, mode, k)
-            return local_topk(score_shard_taat(g, idfs, avgdl, n_terms, mode), k)
-
-        def heaps(g: pd.DataFrame) -> pd.DataFrame | None:
+        def heaps(records: list[dict]) -> dict | None:
+            decoded = {x["term"]: x for x in decode_terms(records, idf, avgdl)}
             out = []
-            for qid, (idfs, n_terms) in enumerate(plans):
-                own = g[g["term"].isin(idfs)]
-                if len(own):
-                    out.append(kern(own, idfs, n_terms).assign(qid=qid))
-            return pd.concat(out, ignore_index=True) if out else None
+            for qid, (terms, n_terms) in enumerate(wanted):
+                lists = [decoded[t] for t in terms if t in decoded]
+                if not lists:
+                    continue
+                ids, score = (wand_topk(lists, n_terms, mode, k) if method == "wand"
+                              else local_topk(*taat(lists, n_terms, mode), k))
+                out.append((np.full(ids.size, qid, np.int32), ids, score))
+            if not out:
+                return None
+            qid, ids, score = (np.concatenate(c) for c in zip(*out))
+            return {"qid": qid, "doc_id": ids, "score": score}
 
-        return sorted(set().union(*(idfs for idfs, _ in plans))), heaps
+        return sorted(idf), heaps
 
     def topk(
         self, query: str, k: int = 10, mode: str = "all", method: str = "wand"
@@ -480,13 +503,14 @@ class FtsIndex:
             local = self._per_shard(*self._heaps(list(plans.values()), k, mode, method),
                                     HEAP_SCHEMA, collect=True)
             if local is not None:
-                local = local.sort_values(
-                    ["qid", "score", "doc_id"], ascending=[True, False, True],
-                    kind="mergesort",
-                ).groupby("qid", sort=False).head(k)
-                for qid, d, sc in zip(local["qid"].tolist(), local["doc_id"].tolist(),
-                                      local["score"].tolist()):
-                    hits[keys[qid]].append((d, sc))
+                # order by (qid, score desc, doc_id asc), keep each qid's first k
+                qid, ids, score = local["qid"], local["doc_id"], local["score"]
+                order = np.lexsort((ids, -score, qid))
+                qid, ids, score = qid[order], ids[order], score[order]
+                head = np.arange(qid.size) - np.searchsorted(qid, qid) < k
+                for q, d, sc in zip(qid[head].tolist(), ids[head].tolist(),
+                                    score[head].tolist()):
+                    hits[keys[q]].append((d, sc))
         return {q: list(hits.get(terms, [])) for q, terms in terms_of.items()}
 
     # -- phrase queries --------------------------------------------------------
@@ -517,12 +541,12 @@ class FtsIndex:
         if seq is None:
             return self._empty(MATCH_SCHEMA)
 
-        def kernel(g: pd.DataFrame) -> pd.DataFrame | None:
-            res = _shard_phrase_occurrences(_term_rows(g), seq, prune)
+        def kernel(records: list[dict]) -> dict | None:
+            res = _shard_phrase_occurrences(_term_rows(records), seq, prune)
             if res is None:
                 return None
             _, _, d_ids, d_tf, d_dl = res
-            return pd.DataFrame({"doc_id": d_ids, "tf": d_tf, "doclen": d_dl})
+            return {"doc_id": d_ids, "tf": d_tf, "doclen": d_dl}
 
         return self._per_shard(sorted(set(seq)), kernel, MATCH_SCHEMA,
                                with_positions=True)
@@ -597,17 +621,17 @@ class FtsIndex:
                 f"prefix query must normalize to exactly one token, got "
                 f"{norm!r} from {prefix!r}")
 
-        def kernel(g: pd.DataFrame) -> pd.DataFrame:
+        def kernel(records: list[dict]) -> dict:
             ids, tfs, dls = (np.concatenate(a) for a in zip(
-                *(decode_postings(r) for _, r in g.iterrows())))
+                *map(decode_postings, records)))
             order = np.argsort(ids, kind="stable")
             ids, tfs, dls = ids[order], tfs[order], dls[order]
             uniq, starts = np.unique(ids, return_index=True)
-            return pd.DataFrame({
+            return {
                 "doc_id": uniq,
                 "tf": np.add.reduceat(tfs, starts).astype(np.int64),
                 "doclen": dls[starts],
-            })
+            }
 
         return self._per_shard(norm[0], kernel, MATCH_SCHEMA)
 
@@ -629,19 +653,19 @@ class FtsIndex:
         if seq is None:
             return self._empty(MATCH_SCHEMA)
 
-        def kernel(g: pd.DataFrame) -> pd.DataFrame | None:
-            res = _shard_phrase_occurrences(_term_rows(g), seq)
+        def kernel(records: list[dict]) -> dict | None:
+            res = _shard_phrase_occurrences(_term_rows(records), seq)
             if res is None:
                 return None
             occ_doc, occ_start, d_ids, _, d_dl = res
             hit = occ_doc[occ_start == 0]
             if not hit.size:
                 return None
-            return pd.DataFrame({
+            return {
                 "doc_id": hit,
                 "tf": np.ones(hit.size, dtype=np.int64),
                 "doclen": d_dl[np.searchsorted(d_ids, hit)],
-            })
+            }
 
         return self._per_shard(sorted(set(seq)), kernel, MATCH_SCHEMA,
                                with_positions=True)
@@ -696,8 +720,8 @@ class FtsIndex:
                 st_self + L_self - 1) - 1
             return (pred_ok & (gap_pred <= n)) | (succ_ok & (gap_succ <= n))
 
-        def kernel(g: pd.DataFrame) -> pd.DataFrame | None:
-            rows, cache = _term_rows(g), {}
+        def kernel(records: list[dict]) -> dict | None:
+            rows, cache = _term_rows(records), {}
             ra = _shard_phrase_occurrences(rows, seq_a, decoded_cache=cache)
             rb = _shard_phrase_occurrences(rows, seq_b, decoded_cache=cache)
             if ra is None and rb is None:
@@ -726,11 +750,11 @@ class FtsIndex:
                 hit_b = participants(kb, ob_st, cb, len_b, ka, len_a)
                 ntf_a += np.bincount(ca[hit_a], minlength=ud.size)
                 ntf_b += np.bincount(cb[hit_b], minlength=ud.size)
-            return pd.DataFrame({
+            return {
                 "doc_id": ud, "tf_a": tf_a, "tf_b": tf_b,
                 "near_tf_a": ntf_a, "near_tf_b": ntf_b,
                 "doclen": dl, "near": ntf_a > 0,
-            })
+            }
 
         return self._per_shard(terms, kernel, schema, with_positions=True)
 

@@ -6,6 +6,12 @@ and emits a local top-k; the global merge is a tiny TakeOrdered (the same
 local-heaps -> global-merge shape as the reference's per-index faiss top-k
 followed by result merging, /root/reference/search.py:121-159).
 
+One contract for every row source: a shard's segment rows arrive as
+term-sorted records (dicts), `decode_terms` turns them into decoded term
+lists, and the kernels (`taat`, `wand_topk`, `local_topk`) map lists to
+numpy (doc_id, score) arrays. `score_shard_taat` / `score_shard_wand` wrap
+them pandas frame in, frame out, for callers that hold a frame.
+
 Exactness contract (everything rank-identical to the naive scorer/oracles):
   * scores are float64; per-doc contributions are summed in sorted-term
     order (TAAT iterates terms sorted; WAND accumulates at the pivot doc in
@@ -27,7 +33,7 @@ import numpy as np
 import pandas as pd
 
 from ..query.bm25 import tf_component
-from .codec import BLOCK, decode_postings
+from .codec import decode_postings
 
 # when a query's total decoded postings in a shard are below this, vectorized
 # TAAT beats the Python WAND loop; both are exact so this is purely a
@@ -36,42 +42,67 @@ from .codec import BLOCK, decode_postings
 TAAT_CUTOFF = 50_000
 
 
-def _no_hits() -> pd.DataFrame:
+def _no_hits() -> tuple[np.ndarray, np.ndarray]:
     """The one empty result of every kernel: typed like a non-empty one."""
-    return pd.DataFrame({"doc_id": np.empty(0, np.int64),
-                         "score": np.empty(0, np.float64)})
+    return np.empty(0, np.int64), np.empty(0, np.float64)
 
 
-def _decode_terms(pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float):
-    """Decode one shard's rows for the query terms, sorted by term."""
+def decode_terms(records: list[dict], idfs: dict[str, float], avgdl: float) -> list[dict]:
+    """Decode the segment records of the terms in `idfs`, in record order
+    (one shard's records come term-sorted, so the lists do too). A list's
+    contributions and block maxima carry its term's idf, which is the same
+    for every query of a batch, so one decoded list serves them all:
+    kernels read the lists and never write to them."""
     lists = []
-    for _, row in pdf.sort_values("term").iterrows():
-        ids, tfs, dls = decode_postings(row)
-        contrib = idfs[row["term"]] * tf_component(tfs, dls, avgdl)
-        lists.append(
-            {
-                "term": row["term"],
-                "ids": ids,
-                "contrib": contrib,
-                "blk_last": np.asarray(row["blk_last"], dtype=np.int64),
-                "blk_max": np.asarray(row["blk_max"], dtype=np.float64) * idfs[row["term"]],
-                "ub": float(idfs[row["term"]] * row["max_tfc"]),
-            }
-        )
+    for rec in records:
+        idf = idfs.get(rec["term"])
+        if idf is None:
+            continue
+        ids, tfs, dls = decode_postings(rec)
+        lists.append({
+            "term": rec["term"],
+            "ids": ids,
+            "contrib": idf * tf_component(tfs, dls, avgdl),
+            "blk_last": np.asarray(rec["blk_last"], dtype=np.int64),
+            "blk_max": np.asarray(rec["blk_max"], dtype=np.float64) * idf,
+        })
     return lists
+
+
+def frame_records(pdf: pd.DataFrame) -> list[dict]:
+    """A frame of segment rows as records, sorted by term (stable). Built
+    column-wise: `DataFrame.to_dict("records")` costs ~20x more on these
+    small frames of bytes and array cells."""
+    names = list(pdf.columns)
+    rows = zip(*(pdf[c].tolist() for c in names))
+    return sorted((dict(zip(names, row)) for row in rows), key=lambda r: r["term"])
+
+
+def _frame(ids: np.ndarray, score: np.ndarray) -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": ids, "score": score})
 
 
 def score_shard_taat(
     pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, n_terms: int, mode: str
 ) -> pd.DataFrame:
-    """Exact exhaustive scoring of one shard (vectorized)."""
-    return _taat_over_lists(_decode_terms(pdf, idfs, avgdl), n_terms, mode)
+    """Exact exhaustive scoring of one shard's segment rows, as a frame."""
+    return _frame(*taat(decode_terms(frame_records(pdf), idfs, avgdl),
+                        n_terms, mode))
 
 
-def _taat_over_lists(lists: list[dict], n_terms: int, mode: str) -> pd.DataFrame:
-    """Exact TAAT over already-decoded term lists (shared by the exhaustive
-    path and the WAND small-shard cutoff, which would otherwise varbyte-
-    decode every posting list a second time)."""
+def score_shard_wand(
+    pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, n_terms: int,
+    mode: str, k: int,
+) -> pd.DataFrame:
+    """Block-max WAND local top-k of one shard's segment rows, as a frame."""
+    return _frame(*wand_topk(decode_terms(frame_records(pdf), idfs, avgdl),
+                             n_terms, mode, k))
+
+
+def taat(lists: list[dict], n_terms: int, mode: str) -> tuple[np.ndarray, np.ndarray]:
+    """Exact TAAT over term-sorted decoded lists: every matching (doc_id,
+    score), doc_id ascending (shared by the exhaustive path and the WAND
+    small-shard cutoff)."""
     if not lists:
         return _no_hits()
     all_ids = np.concatenate([x["ids"] for x in lists])
@@ -80,62 +111,50 @@ def _taat_over_lists(lists: list[dict], n_terms: int, mode: str) -> pd.DataFrame
     uniq, inv = np.unique(all_ids, return_inverse=True)
     scores = np.zeros(uniq.size, dtype=np.float64)
     np.add.at(scores, inv, all_contrib)
-    hits = np.bincount(inv, minlength=uniq.size)
     if mode == "all":
-        keep = hits == n_terms
+        keep = np.bincount(inv, minlength=uniq.size) == n_terms
         uniq, scores = uniq[keep], scores[keep]
-    return pd.DataFrame({"doc_id": uniq.astype(np.int64), "score": scores})
+    return uniq, scores
 
 
-def score_shard_wand(
-    pdf: pd.DataFrame, idfs: dict[str, float], avgdl: float, n_terms: int,
-    mode: str, k: int,
-) -> pd.DataFrame:
-    """Block-max WAND local top-k for one shard ('any' semantics).
-
-    For 'all' (conjunctive, FTS5 MATCH default) the driver loop intersects
-    from the rarest list using galloping searchsorted — exact and faster
-    than WAND for conjunctions.
-    """
-    lists = _decode_terms(pdf, idfs, avgdl)
+def wand_topk(lists: list[dict], n_terms: int, mode: str,
+              k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Local top-k over term-sorted decoded lists, in (score desc, doc_id
+    asc) order: block-max WAND for 'any'. For 'all' (conjunctive, FTS5
+    MATCH default) the lists intersect from the rarest one using galloping
+    searchsorted — exact and faster than WAND for conjunctions."""
     if not lists:
         return _no_hits()
     if mode == "all":
         if len(lists) < n_terms:
             return _no_hits()
-        lists.sort(key=lambda x: x["ids"].size)
-        ids = lists[0]["ids"]
-        for x in lists[1:]:
-            pos = np.searchsorted(x["ids"], ids)
-            pos = np.minimum(pos, x["ids"].size - 1)
+        by_size = sorted(lists, key=lambda x: x["ids"].size)
+        ids = by_size[0]["ids"]
+        for x in by_size[1:]:
+            pos = np.minimum(np.searchsorted(x["ids"], ids), x["ids"].size - 1)
             ids = ids[x["ids"][pos] == ids]
             if ids.size == 0:
                 return _no_hits()
         score = np.zeros(ids.size, dtype=np.float64)
-        for x in sorted(lists, key=lambda x: x["term"]):  # sorted-term fold
-            pos = np.searchsorted(x["ids"], ids)
-            score += x["contrib"][pos]
-        out = pd.DataFrame({"doc_id": ids.astype(np.int64), "score": score})
-    else:
-        total = sum(x["ids"].size for x in lists)
-        if total <= TAAT_CUTOFF or len(lists) == 1:
-            out = _taat_over_lists(lists, n_terms, mode)
-        else:
-            out = _bmw_any(lists, k)
-    return local_topk(out, k)
+        for x in lists:  # sorted-term fold
+            score += x["contrib"][np.searchsorted(x["ids"], ids)]
+        return local_topk(ids, score, k)
+    if len(lists) == 1 or sum(x["ids"].size for x in lists) <= TAAT_CUTOFF:
+        return local_topk(*taat(lists, n_terms, mode), k)
+    return _bmw_any(lists, k)
 
 
-def local_topk(out: pd.DataFrame, k: int) -> pd.DataFrame:
-    """The k best (doc_id, score) rows of a kernel result in the global
-    tie-break order (score desc, doc_id asc). A partition finds the k-th
-    best score and only the rows at or above it (its ties included) are
-    sorted: the rows of a full two-key sort, without sorting every match."""
-    ids, score = out["doc_id"].to_numpy(), out["score"].to_numpy()
+def local_topk(ids: np.ndarray, score: np.ndarray,
+               k: int) -> tuple[np.ndarray, np.ndarray]:
+    """The k best (doc_id, score) pairs in the global tie-break order
+    (score desc, doc_id asc). A partition finds the k-th best score and
+    only the pairs at or above it (its ties included) are sorted: the rows
+    of a full two-key sort, without sorting every match."""
     if 0 < k < score.size:
         keep = score >= np.partition(score, score.size - k)[score.size - k]
         ids, score = ids[keep], score[keep]
     order = np.lexsort((ids, -score))[:k]
-    return pd.DataFrame({"doc_id": ids[order], "score": score[order]})
+    return ids[order], score[order]
 
 
 def _theta0(all_ids: np.ndarray, all_contrib: np.ndarray, k: int) -> float:
@@ -157,7 +176,7 @@ def _theta0(all_ids: np.ndarray, all_contrib: np.ndarray, k: int) -> float:
         t = min(n, t * 4)
 
 
-def _bmw_any(lists: list[dict], k: int) -> pd.DataFrame:
+def _bmw_any(lists: list[dict], k: int) -> tuple[np.ndarray, np.ndarray]:
     """Block-max pruned TAAT, exact top-k, fully vectorized (no per-posting
     Python loop — the classic WAND pointer walk is O(postings) interpreted
     Python on head terms, the very anti-pattern the hot path bans).
@@ -191,13 +210,4 @@ def _bmw_any(lists: list[dict], k: int) -> pd.DataFrame:
     uniq, inv = np.unique(ids, return_inverse=True)
     scores = np.zeros(uniq.size, dtype=np.float64)
     np.add.at(scores, inv, all_contrib[keep])
-    # local top-k among survivors: threshold at the k-th largest score, keep
-    # ALL ties at the boundary, then resolve (score desc, doc_id asc)
-    if uniq.size > k:
-        kth = np.partition(scores, uniq.size - k)[uniq.size - k]
-        cand = scores >= kth
-        uniq, scores = uniq[cand], scores[cand]
-    order = np.lexsort((uniq, -scores))[:k]
-    return pd.DataFrame(
-        {"doc_id": uniq[order].astype(np.int64), "score": scores[order]}
-    )
+    return local_topk(uniq, scores, k)

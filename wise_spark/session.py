@@ -58,17 +58,18 @@ def local_rows_df(spark: SparkSession, rows, schema) -> "DataFrame":  # noqa: F8
     schema, Arrow output dtypes and nullability are identical to the plain
     `createDataFrame(rows, schema)` they replace, and a None becomes a SQL
     NULL in any nullable column (pinned by tests). `rows` is a sequence of
-    tuples, or a pandas frame holding (at least) the schema's columns,
-    taken by name.
+    tuples, or a pandas frame or {column: array} dict holding (at least)
+    the schema's columns, taken by name.
     """
+    import numpy as np
     import pandas as pd
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     st = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
-    if isinstance(rows, pd.DataFrame):
-        cols = [rows[f.name].to_numpy() for f in st.fields]
+    if isinstance(rows, (pd.DataFrame, dict)):
+        cols = [np.asarray(rows[f.name]) for f in st.fields]
     else:
         rows = list(rows)
         cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in st.fields]
